@@ -642,74 +642,6 @@ object Curation {
       .select(col("source"), col("n_events"), col("alloc"))
   }
 
-  /** Lineage truncation for iterative loops: executor-local blocks by
-    * default (fast, but lost with the executor), reliable files under
-    * `checkpointDir` when the caller needs the resolution to survive
-    * executor loss on a real cluster.
-    *
-    * The requested dir is installed once per (SparkContext, dir) —
-    * Spark resolves it to a per-install UUID subdir, so re-installing
-    * every round would scatter one resolution across directories. But
-    * "already has SOME checkpoint dir" must not silently win over the
-    * caller's request (an app-level `/tmp` dir would void the
-    * durability this parameter exists to provide), so a different
-    * requested dir IS re-installed. Old rounds' checkpoint files are
-    * released by the ContextCleaner as their RDDs drop out of scope
-    * (GraftSession sets `spark.cleaner.referenceTracking
-    * .cleanCheckpoints=true`); without that, a 25-round resolution
-    * retains 25 corpus-scale copies. */
-  private[operators] val installedCkptDirs =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.SparkContext, String]())
-
-  /** `keepPartitioning` additionally claims the executed plan's
-    * physical layout on the re-wrapped frame (see
-    * [[org.apache.spark.sql.graft.PlanBridge.freshStatsKeepPartitioning]]).
-    * OPT-IN, because it is only a win for loops whose round plan
-    * consumes the checkpoint under the SAME key it was produced on
-    * (min-label CC: −1 exchange per round, A/B'd). Loops that
-    * reference the checkpoint under several keys (star contraction,
-    * the k-core peel) got SLOWER with it: their per-round exchange
-    * doubled as the reuse point for the repeated subtree, and
-    * removing one reference's exchange un-deduplicates the rest
-    * (measured +22 jobs/+73 tasks on qdedup_clusters_star,
-    * +15 jobs on qgraph_coreness). */
-  private[graft] def truncateLineage(df: DataFrame, checkpointDir: Option[String],
-                                     keepPartitioning: Boolean = false): DataFrame = {
-    val ck = checkpointDir match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        if (installedCkptDirs.get(sc) != dir) {
-          sc.setCheckpointDir(dir)
-          installedCkptDirs.put(sc, dir)
-        }
-        df.checkpoint() // eager + durable: replayable after executor loss
-      case None => df.localCheckpoint()
-    }
-    // Reset the size estimate, not just the lineage. `Dataset.checkpoint`
-    // copies the SOURCE plan's `sizeInBytes` onto the checkpointed
-    // LogicalRDD (rewriteStatsAndConstraints), and Catalyst's
-    // size-only visitor estimates a join as the PRODUCT of its
-    // children's sizes — so a loop that joins the checkpointed frame
-    // twice per round (CC, k-core, PageRank, …) SQUARES the carried
-    // estimate every round. The bit length doubles per round: by
-    // round ~30 the estimate is a multi-hundred-megabit BigInteger
-    // and the next checkpoint's stats rewrite spends minutes inside
-    // BigInteger.multiply — observed as a driver-side hang of
-    // qgraph_coreness (4 phases × 8 rounds). The re-wrap drops the
-    // inherited estimate (fresh LogicalRDD, default size), which is
-    // also the honest value: post-filter loop frames shrink in ways
-    // the carried product never tracked. Costs one InternalRow↔Row
-    // pass per downstream read of skinny (id, …) rows; plans keep
-    // their shuffle-join shape (the carried estimates were far above
-    // the broadcast threshold anyway). Values are unchanged — same
-    // RDD, same rows — in both re-wrap forms.
-    if (keepPartitioning)
-      org.apache.spark.sql.graft.PlanBridge.freshStatsKeepPartitioning(df, ck)
-    else
-      ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
   /** Connected components over an undirected pair list by iterative
     * min-label propagation: every node repeatedly takes the minimum
     * label among itself and its neighbors until a fixpoint. Returns
@@ -736,23 +668,24 @@ object Curation {
     * SparkContext; labels are bit-identical either way — spec-proven.)
     *
     * Convergence is detected by the label SUM (labels only ever
-    * decrease, so an unchanged sum ⇔ an unchanged labeling) — a scalar
-    * driver action per round, no extra join. Failing to converge
-    * within maxIter THROWS (partial labels would silently corrupt a
-    * downstream keep/drop decision). The persisted edge list is
+    * decrease, so an unchanged sum ⇔ an unchanged labeling), observed
+    * on each round's own checkpoint job — no extra action, no extra
+    * join. Failing to converge within maxIter rounds plus one
+    * verification round THROWS (partial labels would silently corrupt
+    * a downstream keep/drop decision). The persisted edge list is
     * released by `clearCache()`; the per-round localCheckpoint blocks
     * are RDD storage, freed by the ContextCleaner once unreferenced.
     */
   def connectedComponents(pairs: DataFrame, a: Column, b: Column,
                           maxIter: Int = 25,
                           checkpointDir: Option[String] = None): DataFrame = {
+    val loop = Iterate("connectedComponents", checkpointDir, keepPartitioning = true)
     // checkpoint BEFORE the symmetrizing union: `half` is referenced
     // twice (forward + swapped), so without the boundary the upstream
     // pair generator (e.g. the whole simhash pipeline) executes twice
     // on first materialization
-    val half = truncateLineage(
-      pairs.select(a.cast("long").as("src"), b.cast("long").as("dst")), checkpointDir,
-      keepPartitioning = true)
+    val half = loop.checkpoint(
+      pairs.select(a.cast("long").as("src"), b.cast("long").as("dst")))
     // NOTE (A/B'd at sf0.1): pre-hashing this cache on `src` (the
     // pageRank layout trick) did NOT drop the per-round exchange here
     // — profile showed +7 stages/+160 tasks and flat wall, so the
@@ -768,63 +701,27 @@ object Curation {
     // (A/B at sf0.1: qdedup_clusters 63 → 56 jobs / 107 → 93 stages,
     // qcuration_softdedup 68 → 61 / 112 → 98, qdedup_report
     // 68 → 61 / 120 → 106)
-    var labels = truncateLineage(
-      edges.select(col("src").as("id")).distinct().withColumn("lbl", col("id")),
-      checkpointDir, keepPartitioning = true)
-
     // coalesce: sum over an EMPTY label frame (no pairs at all) is
-    // null — without it the empty corpus would NPE instead of
-    // converging immediately
-    def labelSum(l: DataFrame): java.math.BigDecimal =
-      l.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")))
-        .collect()(0).getDecimal(0)
-
-    def step(l: DataFrame): DataFrame = {
-      val nbrMin = edges.join(l, col("src") === col("id"))
-        .groupBy(col("dst")).agg(min(col("lbl")).as("nbr"))
-        .withColumnRenamed("dst", "nid")
-      truncateLineage( // eager: materializes AND truncates lineage
-        l.join(nbrMin, col("id") === col("nid"), "left")
-          .select(col("id"), least(col("lbl"), coalesce(col("nbr"), col("lbl"))).as("lbl")),
-        checkpointDir, keepPartitioning = true)
-    }
-
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val next = step(labels)
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-      iter += 1
-    }
-    // a labeling whose LAST change landed exactly in round maxIter is
-    // complete but not yet verified change-free — re-verify with one
-    // extra propagation before declaring failure, so the effective
-    // budget is maxIter propagation rounds, not maxIter-1
-    var verifyRounds = 0
-    if (!converged) {
-      converged = labelSum(step(labels)).compareTo(prevSum) == 0
-      verifyRounds = 1
-    }
-    // one line per resolution (not per row): round count is the health
-    // signal for this algorithm; the re-verify propagation is a real
-    // round and must be counted
-    System.err.println(s"[curation] connectedComponents: ${iter + verifyRounds} propagation rounds" +
-      (if (verifyRounds > 0) s" (incl. $verifyRounds re-verify)" else "") +
-      s", converged=$converged")
+    // null; the record reports it as 0
+    val labelSum = coalesce(sum(col("lbl").cast("decimal(38,0)")),
+      lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)"))
+    val init = loop.observe(
+      edges.select(col("src").as("id")).distinct().withColumn("lbl", col("id")), labelSum)
     // unconverged labels are WRONG labels (partially propagated) and a
     // downstream keep/drop decision would silently corrupt the corpus —
     // fail loudly instead; callers with deep graphs raise maxIter or
     // switch to star contraction
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge within $maxIter rounds " +
-        "(component diameter exceeds maxIter); raise maxIter or use " +
-        "alternating star contraction for chain-shaped graphs")
-    labels
+    loop.fixpoint(init, maxIter, Iterate.Throw("component diameter exceeds maxIter; " +
+        "raise maxIter or use alternating star contraction for chain-shaped graphs"))(
+        _.signal) { (l, _) =>
+      val nbrMin = edges.join(l.df, col("src") === col("id"))
+        .groupBy(col("dst")).agg(min(col("lbl")).as("nbr"))
+        .withColumnRenamed("dst", "nid")
+      loop.observe(
+        l.df.join(nbrMin, col("id") === col("nid"), "left")
+          .select(col("id"), least(col("lbl"), coalesce(col("nbr"), col("lbl"))).as("lbl")),
+        labelSum)
+    }.df
   }
 
   /** Connected components by alternating large-star/small-star
@@ -879,28 +776,16 @@ object Curation {
       canon(self.union(nbrs))
     }
 
-    var edges = truncateLineage(
-      canon(pairs.select(a.cast("long").as("u"), b.cast("long").as("v"))), checkpointDir)
-    // carry the cardinality forward: each round's `next.count()` IS the
-    // following round's `edges.count()`, so recounting would pay one
-    // extra full pass over the edge frame per alternation
-    var edgeCount = edges.count()
-    var iter = 0
-    var converged = edgeCount == 0 // no edges ⇒ nothing to contract
-    while (!converged && iter < maxIter) {
-      val next = truncateLineage(smallStar(largeStar(edges)), checkpointDir)
-      val nextCount = next.count()
-      // exact set equality: same cardinality + empty one-way difference
-      converged = nextCount == edgeCount &&
-        next.join(edges, Seq("u", "v"), "left_anti").isEmpty
-      edges = next
-      edgeCount = nextCount
-      iter += 1
-    }
-    System.err.println(s"[curation] connectedComponentsStar: $iter alternations, converged=$converged")
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge within $maxIter alternations; " +
-        "raise maxIter (rounds grow with log² of component size)")
+    val loop = Iterate("connectedComponentsStar", checkpointDir)
+    val n = count(lit(1))
+    // exact set equality: same cardinality (the observed signal) + empty
+    // one-way difference
+    val edges = loop.fixpoint(
+        loop.observe(canon(pairs.select(a.cast("long").as("u"), b.cast("long").as("v"))), n),
+        maxIter, Iterate.Throw("raise maxIter (rounds grow with log² of component size)"))(
+        _.signal, (prev, next) => next.df.join(prev.df, Seq("u", "v"), "left_anti").isEmpty) {
+      (e, _) => loop.observe(smallStar(largeStar(e.df)), n)
+    }.df
     // fixpoint invariant: the edge set is a star forest — every node
     // has exactly one parent. A violated invariant means wrong labels,
     // so fail loudly rather than emit them.

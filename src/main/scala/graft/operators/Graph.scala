@@ -70,9 +70,10 @@ object Graph {
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val base = 1000000L - dampingMicro
-    var ranks = nodes.select(col("id"), lit(1000000L).as("rm"))
+    val loop = Iterate("pageRank")
     try {
-      for (_ <- 1 to iters) {
+      val ranks = loop.fixed(nodes.select(col("id"), lit(1000000L).as("rm")), iters) {
+          (ranks, _) =>
         val contribs = withDeg
           .join(ranks.withColumnRenamed("id", "src"), "src")
           .select(col("dst").as("id"), expr("rm div deg").as("c"))
@@ -92,7 +93,7 @@ object Graph {
         // constant-size plans instead of an iteration-nested tree, and
         // it doubles as the materialization barrier the old
         // persist+count+unpersist dance bought
-        ranks = graft.operators.Curation.truncateLineage(next, None)
+        loop.checkpoint(next)
       }
       ranks.select(col("id").as("node_id"), col("rm").as("rank_micro"),
         (col("rm").cast("double") / lit(1e6)).as("rank"))
@@ -203,15 +204,15 @@ object Graph {
     // constant-size per half-step (the truncation point merely moved
     // one operator up — same CC / kCore discipline, same
     // `checkpointDir` durability knob).
+    val loop = Iterate("hits", checkpointDir)
     def halfStep(score: DataFrame, scoreCol: String,
                  joinSide: String, aggSide: String): DataFrame = {
-      val raw = Curation.truncateLineage(
+      val raw = loop.checkpoint(
         nodes.join(
             e.join(score.withColumnRenamed("id", joinSide), joinSide)
               .groupBy(col(aggSide).as("id")).agg(sum(col(scoreCol)).as("v")),
             Seq("id"), "left")
-          .select(col("id"), coalesce(col("v"), lit(0L)).as("v")),
-        checkpointDir)
+          .select(col("id"), coalesce(col("v"), lit(0L)).as("v")))
       val mx = raw.agg(max(col("v")).as("mx"))
       raw.crossJoin(broadcast(mx))
         .select(col("id"),
@@ -219,15 +220,13 @@ object Graph {
             expr("CAST((CAST(v AS DECIMAL(38,0)) * 1000000) div mx AS BIGINT)"))
             .otherwise(lit(0L)).as(scoreCol))
     }
-    var hub: DataFrame = Curation.truncateLineage(
-      nodes.select(col("id"), lit(1000000L).as("hm")), checkpointDir)
-    var auth: DataFrame = null
+    val hub0 = loop.checkpoint(nodes.select(col("id"), lit(1000000L).as("hm")))
     try {
-      for (_ <- 1 to iters) {
-        auth = halfStep(hub.withColumnRenamed("hm", "sc"), "sc", "src", "dst")
+      val (hub, auth) = loop.fixed((hub0, hub0), iters) { case ((hub, _), _) =>
+        val auth = halfStep(hub.withColumnRenamed("hm", "sc"), "sc", "src", "dst")
           .withColumnRenamed("sc", "am")
-        hub = halfStep(auth.withColumnRenamed("am", "sc"), "sc", "dst", "src")
-          .withColumnRenamed("sc", "hm")
+        (halfStep(auth.withColumnRenamed("am", "sc"), "sc", "dst", "src")
+          .withColumnRenamed("sc", "hm"), auth)
       }
       auth.join(hub, "id")
         .select(col("id").as("node_id"),
@@ -348,12 +347,11 @@ object Graph {
     // each round reads the label frame TWICE (vote side + carry side),
     // so a persist-only rotation doubles the logical plan per round —
     // the eager checkpoint truncates lineage like the CC resolution
-    var labels = Curation.truncateLineage(
-      nodes.join(sd, Seq("id"), "left")
-        .select(col("id"), col("seed_label"), col("seed_label").as("label")),
-      checkpointDir)
+    val loop = Iterate("labelPropagate", checkpointDir)
+    val init = loop.checkpoint(nodes.join(sd, Seq("id"), "left")
+      .select(col("id"), col("seed_label"), col("seed_label").as("label")))
     try {
-      for (_ <- 1 to iters) {
+      val labels = loop.fixed(init, iters) { (labels, _) =>
         val votes = e
           .join(labels.select(col("id").as("src"), col("label")), "src")
           .filter(col("label").isNotNull)
@@ -362,12 +360,10 @@ object Graph {
         val winners = votes.groupBy(col("id"))
           .agg(min(struct((-col("c")).as("nc"), col("label").as("lb"))).as("w"))
           .select(col("id"), col("w.lb").as("vlabel"))
-        labels = Curation.truncateLineage(
-          labels.join(winners, Seq("id"), "left")
-            .select(col("id"), col("seed_label"),
-              when(col("seed_label").isNotNull, col("seed_label"))
-                .otherwise(coalesce(col("vlabel"), col("label"))).as("label")),
-          checkpointDir)
+        loop.checkpoint(labels.join(winners, Seq("id"), "left")
+          .select(col("id"), col("seed_label"),
+            when(col("seed_label").isNotNull, col("seed_label"))
+              .otherwise(coalesce(col("vlabel"), col("label"))).as("label")))
       }
       labels.select(col("id").as("node_id"), col("label"),
         col("seed_label").isNotNull.as("is_seed"))
@@ -595,45 +591,48 @@ object Graph {
     val nodes = und.select(col("a").as("id")).union(und.select(col("b").as("id")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    def liveEdges(alive: DataFrame): DataFrame = und
-      .join(alive.select(col("id").as("a")), "a")
-      .join(alive.select(col("id").as("b")), "b")
-    def degrees(live: DataFrame): DataFrame = live
-      .select(col("a").as("id")).unionAll(live.select(col("b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("c"))
-    // each round reads the alive frame TWICE (both edge endpoints), so
-    // a persist-only rotation doubles the logical plan per round —
-    // 2^iters lineage copies OOM the planner before any data moves.
-    // The eager checkpoint truncates lineage exactly like the CC
-    // resolution's rounds (Curation.truncateLineage).
-    // EARLY EXIT at the provable fixpoint: the synchronous peel is
-    // monotone (alive_{r+1} ⊆ alive_r — degrees() only emits ids from
-    // the current alive set), so an unchanged COUNT is an unchanged
-    // SET, and every remaining budgeted round is the identity. `iters`
-    // stays the correctness budget; the count is one ~node-partition
-    // scan of the just-checkpointed frame, vs ~5 AQE stage jobs per
-    // skipped round (measured: the peel queries are JOB-COUNT-bound
-    // at any SF where the graph fits the cluster — guide §1.2/§7.3).
-    var alive = nodes
-    var aliveCount = alive.count()
-    var stable = false
-    for (_ <- 1 to iters if !stable) {
-      alive = Curation.truncateLineage(
-        degrees(liveEdges(alive)).filter(col("c") >= k).select(col("id")),
-        checkpointDir)
-      val nextCount = alive.count()
-      stable = nextCount == aliveCount
-      aliveCount = nextCount
-    }
+    val loop = Iterate("kCore", checkpointDir)
+    val alive = peel(loop, und, loop.observe(nodes, count(lit(1))), k, iters).df
     // und/nodes stay persisted for the returned frame's final degree
     // pass — released by clearCache(), the docTermCounts discipline
     nodes
-      .join(degrees(liveEdges(alive)), Seq("id"), "left")
+      .join(degrees(liveEdges(und, alive)), Seq("id"), "left")
       .join(alive.select(col("id"), lit(true).as("__in")), Seq("id"), "left")
       .select(col("id").as("node_id"),
         coalesce(col("__in"), lit(false)).as("in_core"),
         coalesce(col("c"), lit(0L)).as("core_degree"))
   }
+
+  /** The live edges of `und` (canonical `(a, b)`) among `alive` ids. */
+  private def liveEdges(und: DataFrame, alive: DataFrame): DataFrame = und
+    .join(alive.select(col("id").as("a")), "a")
+    .join(alive.select(col("id").as("b")), "b")
+
+  private def degrees(live: DataFrame): DataFrame = live
+    .select(col("a").as("id")).unionAll(live.select(col("b").as("id")))
+    .groupBy(col("id")).agg(count(lit(1)).as("c"))
+
+  /** The synchronous peel shared by [[kCore]] and [[coreness]]: at most
+    * `iters` rounds, each keeping the `alive` ids with degree ≥ k among
+    * alive nodes.
+    *
+    * Each round reads the alive frame TWICE (both edge endpoints), so a
+    * persist-only rotation doubles the logical plan per round — 2^iters
+    * lineage copies OOM the planner before any data moves; the eager
+    * checkpoint truncates lineage exactly like the CC resolution's.
+    * EARLY EXIT at the provable fixpoint: the peel is monotone
+    * (alive_{r+1} ⊆ alive_r — degrees() only emits ids from the current
+    * alive set), so an unchanged COUNT is an unchanged SET, and every
+    * remaining budgeted round is the identity. `iters` stays the
+    * correctness budget; the count rides the checkpoint's own job,
+    * and every skipped round saves ~5 AQE stage jobs (the peel queries
+    * are JOB-COUNT-bound at any SF where the graph fits the cluster). */
+  private def peel(loop: Iterate.Loop, und: DataFrame, alive: Iterate.Observed,
+                   k: Int, iters: Int): Iterate.Observed =
+    loop.fixpoint(alive, iters, Iterate.Return)(_.signal) { (alive, _) =>
+      loop.observe(degrees(liveEdges(und, alive.df)).filter(col("c") >= k).select(col("id")),
+        count(lit(1)))
+    }
 
   /** C100 oracle generator: the synchronous peel unrolled — each
     * round's alive set is MATERIALIZED because the next round's edge
@@ -750,10 +749,11 @@ object Graph {
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val base = 1000000L - dampingMicro
-    var ranks = nodes
+    val loop = Iterate("personalizedPageRank")
+    val init = nodes
       .select(col("id"), when(col("is_seed"), lit(1000000L)).otherwise(lit(0L)).as("rm"))
     try {
-      for (_ <- 1 to iters) {
+      val ranks = loop.fixed(init, iters) { (ranks, _) =>
         val contribs = withDeg
           .join(ranks.withColumnRenamed("id", "src"), "src")
           .select(col("dst").as("id"), expr("rm div deg").as("c"))
@@ -766,7 +766,7 @@ object Graph {
         // eager tiny checkpoint per round (the pageRank discipline):
         // constant-size plans, and it replaces the old
         // persist+count+unpersist rotation's extra materialization pass
-        ranks = Curation.truncateLineage(next, None)
+        loop.checkpoint(next)
       }
       nodes.join(ranks, "id")
         .select(col("id").as("node_id"), col("is_seed"),
@@ -862,25 +862,11 @@ object Graph {
       .unionAll(und0.select(col("b").as("u"), col("a").as("v")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var dist = graft.operators.Curation.truncateLineage(
-        seeds.select(seedId.cast("long").as("id")).distinct()
-          .withColumn("dist", lit(0L)),
-        checkpointDir)
-      var frontier = dist
-      var h = 1L
-      while (h <= k && !frontier.isEmpty) {
-        val next = graft.operators.Curation.truncateLineage(
-          frontier.join(und, col("id") === col("u"))
-            .select(col("v").as("id")).distinct()
-            .join(dist, Seq("id"), "left_anti")
-            .withColumn("dist", lit(h)),
-          checkpointDir)
-        dist = graft.operators.Curation.truncateLineage(
-          dist.unionByName(next), checkpointDir)
-        frontier = next
-        h += 1
-      }
-      dist.select(col("id").as("node_id"), col("dist"))
+      bfs(Iterate("kHopDistances", checkpointDir), seeds, seedId, k) { (frontier, dist, _) =>
+        frontier.join(und, col("id") === col("u"))
+          .select(col("v").as("id")).distinct()
+          .join(dist, Seq("id"), "left_anti")
+      }.select(col("id").as("node_id"), col("dist"))
     } finally {
       // every round's frame is eagerly checkpoint-truncated, so the
       // returned result no longer reads the edge cache — release it
@@ -888,6 +874,24 @@ object Graph {
       // leaking it for the session's lifetime
       und.unpersist(blocking = false): Unit
     }
+  }
+
+  /** The frontier expansion both k-hop variants share: from the seeds
+    * at dist 0, hop h's frontier is `expand(previous frontier, every row
+    * reached so far, h)` at dist h, for at most `hops` hops. Returns
+    * every reached `(id, dist)` row. Each hop's rows are new, so an
+    * unchanged reached count ⇔ an empty frontier: nothing is left to
+    * expand. */
+  private def bfs(loop: Iterate.Loop, seeds: DataFrame, seedId: Column, hops: Int)(
+      expand: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
+    val seeded = loop.observe(
+      seeds.select(seedId.cast("long").as("id")).distinct().withColumn("dist", lit(0L)),
+      count(lit(1)))
+    loop.fixpoint((seeded, seeded.df), hops, Iterate.Return)(_._1.signal) {
+      case ((reached, frontier), h) =>
+        val next = loop.checkpoint(expand(frontier, reached.df, h).withColumn("dist", lit(h.toLong)))
+        (loop.observe(reached.df.unionByName(next), count(lit(1))), next)
+    }._1.df
   }
 
   /** [[kHopDistances]] with a PER-HOP edge-label mask (C148b) — the
@@ -931,26 +935,11 @@ object Graph {
       .unionAll(und0.select(col("b").as("u"), col("a").as("v"), col("lbl")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var frontier = graft.operators.Curation.truncateLineage(
-        seeds.select(seedId.cast("long").as("id")).distinct()
-          .withColumn("dist", lit(0L)),
-        checkpointDir)
-      var states = frontier
-      var h = 1
-      while (h <= hopLabels.size && !frontier.isEmpty) {
-        val mask = hopLabels(h - 1)
-        val next = graft.operators.Curation.truncateLineage(
-          frontier.join(und.filter(col("lbl").isin(mask: _*)),
-              col("id") === col("u"))
+      bfs(Iterate("kHopDistancesLabeled", checkpointDir), seeds, seedId, hopLabels.size) {
+        (frontier, _, h) =>
+          frontier.join(und.filter(col("lbl").isin(hopLabels(h - 1): _*)), col("id") === col("u"))
             .select(col("v").as("id")).distinct()
-            .withColumn("dist", lit(h.toLong)),
-          checkpointDir)
-        states = graft.operators.Curation.truncateLineage(
-          states.unionByName(next), checkpointDir)
-        frontier = next
-        h += 1
-      }
-      states.groupBy(col("id")).agg(min(col("dist")).as("dist"))
+      }.groupBy(col("id")).agg(min(col("dist")).as("dist"))
         .select(col("id").as("node_id"), col("dist"))
     } finally {
       // rounds are eagerly checkpoint-truncated — the returned frame
@@ -1289,40 +1278,21 @@ object Graph {
     val nodes = und.select(col("a").as("id")).union(und.select(col("b").as("id")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    def liveEdges(alive: DataFrame): DataFrame = und
-      .join(alive.select(col("id").as("a")), "a")
-      .join(alive.select(col("id").as("b")), "b")
-    def degrees(live: DataFrame): DataFrame = live
-      .select(col("a").as("id")).unionAll(live.select(col("b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("c"))
-    var alive: DataFrame = Curation.truncateLineage(nodes, checkpointDir)
-    // the kCore early-exit, carried across phases: the peel is monotone
-    // within a phase (alive_{r+1} ⊆ alive_r), so an unchanged count is
-    // the phase fixpoint and the remaining budgeted rounds are
-    // identities — skip them (the result is bit-identical; itersPerK
-    // stays the correctness budget). Each phase k > current must still
-    // run its first round (the threshold rose). Measured: the 4×8
-    // budget ran 32 rounds ≈ 200 tiny sequential jobs; the fixture
-    // reaches each phase fixpoint in far fewer.
-    var aliveCount = alive.count()
-    var out: DataFrame = null
-    for (k <- 1 to maxK) {
-      val prev = alive
-      var stable = false
-      for (_ <- 1 to itersPerK if !stable) {
-        alive = Curation.truncateLineage(
-          degrees(liveEdges(alive)).filter(col("c") >= k).select(col("id")),
-          checkpointDir)
-        val nextCount = alive.count()
-        stable = nextCount == aliveCount
-        aliveCount = nextCount
-      }
-      val dropped = prev.join(alive, Seq("id"), "left_anti")
-        .select(col("id").as("node_id"), lit(k - 1L).as("coreness"))
-      out = if (out == null) dropped else out.unionByName(dropped)
+    // the kCore early-exit, carried across phases: each phase resumes
+    // from the previous phase's fixpoint (and its observed count) and
+    // must still run its first round (the threshold rose). Measured:
+    // the 4×8 budget ran 32 rounds ≈ 200 tiny sequential jobs; the
+    // fixture reaches each phase fixpoint in far fewer.
+    val init = Iterate("coreness", checkpointDir).observe(nodes, count(lit(1)))
+    val phases = (1 to maxK).scanLeft(init) { (alive, k) =>
+      peel(Iterate(s"coreness.k$k", checkpointDir), und, alive, k, itersPerK)
+    }.map(_.df)
+    val dropped = phases.zip(phases.tail).zipWithIndex.map { case ((prev, alive), k) =>
+      prev.join(alive, Seq("id"), "left_anti")
+        .select(col("id").as("node_id"), lit(k.toLong).as("coreness"))
     }
-    out.unionByName(
-      alive.select(col("id").as("node_id"), lit(maxK.toLong).as("coreness")))
+    (dropped :+ phases.last.select(col("id").as("node_id"), lit(maxK.toLong).as("coreness")))
+      .reduce(_ unionByName _)
   }
 
   /** C106 oracle generator: maxK phases × itersPerK rounds unrolled;

@@ -113,24 +113,6 @@ class NdjsonBatchSink(delivery: Delivery, conf: SinkConfig = SinkConfig())
     }
   }
 
-  /** Count/byte-bounded chunking of a pre-materialized batch — same
-    * [[shouldFlush]] predicate with the time dimension pinned to zero
-    * (a batch has no arrival times). */
-  private[graft] def chunk(records: Seq[Array[Byte]]): Seq[Seq[Array[Byte]]] = {
-    val out = Seq.newBuilder[Seq[Array[Byte]]]
-    var cur = Seq.newBuilder[Array[Byte]]
-    var n = 0
-    var bytes = 0L
-    records.foreach { r =>
-      if (shouldFlush(n, bytes, r.length, 0L, 0L)) {
-        out += cur.result(); cur = Seq.newBuilder; n = 0; bytes = 0L
-      }
-      cur += r; n += 1; bytes += r.length
-    }
-    if (n > 0) out += cur.result()
-    out.result()
-  }
-
   /** Retry only the failed subset, with 250ms·2ⁿ backoff, then DLQ —
     * the reference's loop at firehose_sender.go:97-127. */
   private[graft] def sendWithRetry(stream: String, records: Seq[Array[Byte]]): Unit = {

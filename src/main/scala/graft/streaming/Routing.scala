@@ -33,13 +33,7 @@ object Routing {
     * [[Forwarder.start]]: first matching route wins, `default`
     * otherwise. Pure codegen'd predicates — routing adds no shuffle. */
   def column(routes: Seq[Route], default: String = "main"): Column =
-    routes.foldRight(lit(default)) { (route, fallthrough) =>
-      val cond = route.matchers.toSeq
-        .map { case (field, vals) => col(field).isin(vals: _*) }
-        .reduceOption(_ && _)
-        .getOrElse(lit(true))
-      when(cond, lit(route.name)).otherwise(fallthrough)
-    }
+    compile(routes, default, _ => true)
 
   /** Schema-aware compile: like [[column]], but matchers over fields
     * the frame LACKS (or that aren't string-typed, e.g. the summary
@@ -47,20 +41,24 @@ object Routing {
     * to the next, mirroring the reference's unmatched→default
     * semantics instead of failing analysis at stream start. */
   def columnFor(df: org.apache.spark.sql.DataFrame, routes: Seq[Route],
-                default: String = "main"): Column = {
-    val stringFields = df.schema.fields.collect {
+                default: String = "main"): Column =
+    compile(routes, default, df.schema.fields.collect {
       case f if f.dataType == org.apache.spark.sql.types.StringType => f.name
-    }.toSet
+    }.toSet)
+
+  /** The one route fold: a matcher over a field outside `present` is
+    * `false`. */
+  private def compile(routes: Seq[Route], default: String,
+                      present: String => Boolean): Column =
     routes.foldRight(lit(default)) { (route, fallthrough) =>
       val cond = route.matchers.toSeq
         .map { case (field, vals) =>
-          if (stringFields(field)) col(field).isin(vals: _*) else lit(false)
+          if (present(field)) col(field).isin(vals: _*) else lit(false)
         }
         .reduceOption(_ && _)
         .getOrElse(lit(true))
       when(cond, lit(route.name)).otherwise(fallthrough)
     }
-  }
 
   /** Parse the `routes:` section of a kvconfig.yml-shaped document
     * (two-space indentation, `field: ["v1", "v2"]` matcher lists — the
@@ -133,10 +131,4 @@ object Routing {
     }
     routes.map { case (n, m) => Route(n, m, outputs.get(n)) }.toSeq
   }
-
-  /** Load + compile a routing file in one step (driver-side IO). */
-  def fromKvConfigFile(path: String, default: String = "main"): Column =
-    column(parseKvConfig(
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        "UTF-8")), default)
 }

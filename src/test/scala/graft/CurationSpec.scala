@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.Curation
+import graft.operators.{Curation, Iterate}
 
 class CurationSpec extends AnyFunSuite {
   import SparkTest._
@@ -124,28 +124,29 @@ class CurationSpec extends AnyFunSuite {
   test("maxIter boundary: diameter == maxIter converges via the re-verify round") {
     // a diameter-5 chain last changes its labeling in propagation round
     // 5; with maxIter = 5 the loop exhausts its budget before OBSERVING
-    // an unchanged sum, and only the post-loop re-verify propagation
-    // (Curation.connectedComponents) proves convergence — this is the
-    // exact branch the round-5 fix added, and the health log must count
-    // that extra propagation
+    // an unchanged sum, and only the re-verify propagation proves
+    // convergence — the [iterate] record must count that extra round
     val chain = pairs(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L, 5L -> 6L)
-    val errBuf = new java.io.ByteArrayOutputStream()
-    val realErr = System.err
-    val got = try {
-      System.setErr(new java.io.PrintStream(errBuf, true))
+    val (got, log) = IterateSpec.recorded {
       Curation.connectedComponents(chain, col("a"), col("b"), maxIter = 5)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    } finally System.setErr(realErr)
+    }
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 6L -> 1L))
-    val log = errBuf.toString
-    assert(log.contains("6 propagation rounds"), s"health log was: $log")
-    assert(log.contains("incl. 1 re-verify"), s"health log was: $log")
+    val rounds = log.filter(_.contains(" round="))
+    assert(rounds.size == 6, s"record was: $log")
+    assert(rounds.count(_.contains(" verify=true")) == 1, s"record was: $log")
+    assert(log.last == "[iterate] op=connectedComponents rounds=6 converged=true",
+      s"record was: $log")
     // diameter maxIter+1 must still throw: the re-verify round is a
     // verification, not a free extra budget round
-    val e = intercept[IllegalStateException] {
-      Curation.connectedComponents(chain, col("a"), col("b"), maxIter = 4).collect()
+    val (e, failedLog) = IterateSpec.recorded {
+      intercept[IllegalStateException] {
+        Curation.connectedComponents(chain, col("a"), col("b"), maxIter = 4).collect()
+      }
     }
     assert(e.getMessage.contains("did not converge"))
+    assert(failedLog.last == "[iterate] op=connectedComponents rounds=5 converged=false",
+      s"record was: $failedLog")
   }
 
   test("durable checkpointing yields bit-identical labels in both CC variants") {
@@ -1265,7 +1266,7 @@ class CurationSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (1 to 500).toDF("id")
       .repartition(7, col("id")).withColumn("lbl", col("id") * 3)
-    val kept = Curation.truncateLineage(df, None, keepPartitioning = true)
+    val kept = Iterate("test", keepPartitioning = true).checkpoint(df)
     // same rows, same schema
     assert(kept.schema == df.schema)
     assert(kept.orderBy("id").collect().toSeq ==
@@ -1286,7 +1287,7 @@ class CurationSpec extends AnyFunSuite {
     assert(agg.agg(sum("sum(lbl)")).collect()(0).getLong(0) ==
       3L * 500 * 501 / 2)
     // the default re-wrap still resets to the unpartitioned form
-    val plain = Curation.truncateLineage(df, None)
+    val plain = Iterate("test").checkpoint(df)
     plain.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         assert(lr.outputPartitioning.toString.contains("UnknownPartitioning"),

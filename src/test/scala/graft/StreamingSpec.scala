@@ -287,8 +287,8 @@ class StreamingSpec extends AnyFunSuite {
     TestDeliveries.calls.clear()
     val sink = new NdjsonBatchSink(new TestDeliveries.ChunkRecorder,
       SinkConfig(batchCount = 3, batchBytes = 1000, batchIntervalMs = 0))
-    val recs = (0 until 10).map(i => s"rec-$i".getBytes("UTF-8"))
-    sink.chunk(recs).foreach(c => sink.sendWithRetry("s", c))
+    val rows = (0 until 10).map(i => ("s", s"rec-$i".getBytes("UTF-8")))
+    sink.processRows(rows.iterator, () => 0L)
     assert(TestDeliveries.calls.asScala.toSeq == Seq(3, 3, 3, 1))
   }
 
@@ -297,11 +297,13 @@ class StreamingSpec extends AnyFunSuite {
     val sink = new NdjsonBatchSink(new TestDeliveries.ChunkRecorder,
       SinkConfig(batchCount = 3, batchBytes = 1000))
     sink.sendWithRetry("s", Nil) // empty batch → no delivery call at all
-    val recs = (0 until 10).map(i => s"rec-$i".getBytes("UTF-8"))
-    sink.chunk(recs).foreach(c => sink.sendWithRetry("s", c))
+    val rows = (0 until 10).map(i => ("s", s"rec-$i".getBytes("UTF-8")))
+    sink.processRows(rows.iterator, () => 0L)
     assert(TestDeliveries.calls.asScala.toSeq == Seq(3, 3, 3, 1))
-    val big = Seq(Array.fill(600)('x'.toByte), Array.fill(600)('x'.toByte))
-    assert(sink.chunk(big).map(_.size) == Seq(1, 1)) // byte bound splits
+    TestDeliveries.calls.clear()
+    val big = Seq.fill(2)(("s", Array.fill(600)('x'.toByte)))
+    sink.processRows(big.iterator, () => 0L)
+    assert(TestDeliveries.calls.asScala.toSeq == Seq(1, 1)) // byte bound splits
   }
 
   test("kvconfig-shaped routing file parses and demuxes through the forwarder") {

@@ -40,5 +40,9 @@ for name in sorted(oracle):
         print(f"OK   {name}: {len(srows)} rows")
     except Exception as e:
         print(f"FAIL {name}: {type(e).__name__}: {e}"); fails += 1
+if not oracle:
+    # an empty oracle set (e.g. a mistyped SPARK_GRAFT_ONLY) proves nothing
+    print("NO ORACLE QUERIES compared: oracle_sql.json is empty")
+    sys.exit(1)
 print(f"{'ALL GREEN' if fails==0 else f'{fails} FAILURES'} / {len(oracle)} oracle queries")
 sys.exit(1 if fails else 0)
