@@ -275,10 +275,8 @@ object Bench {
     // unset (the driver's mode) runs the selected mode's set. Unknown
     // names warn loudly instead of silently shrinking the run (a typo
     // must not read as a clean bench).
-    val names = sys.env.get("SPARK_GRAFT_ONLY") match {
-      case Some(list) =>
-        val asked = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        val (known, unknown) = asked.partition(SparkEntry.queries.contains)
+    val names = SparkEntry.onlyQueries(sys.env.get("SPARK_GRAFT_ONLY")) match {
+      case Some((known, unknown)) =>
         if (unknown.nonEmpty)
           System.err.println(s"[bench] WARNING: unknown SPARK_GRAFT_ONLY queries ignored: ${unknown.mkString(", ")}")
         known.sorted

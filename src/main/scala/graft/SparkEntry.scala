@@ -21,6 +21,14 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.fn).toMap
 
+  /** The `SPARK_GRAFT_ONLY=q1,q2` subset: `None` when unset, else the
+    * asked names (trimmed, blanks and repeats dropped, in asked order)
+    * split into `(known, unknown)` against the registry. Verify refuses
+    * any unknown name; Bench warns and runs the known ones. */
+  def onlyQueries(spec: Option[String]): Option[(Seq[String], Seq[String])] =
+    spec.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+      .partition(queries.contains))
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

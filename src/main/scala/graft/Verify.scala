@@ -20,14 +20,22 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // SPARK_GRAFT_ONLY=q1,q2 narrows to named queries for local oracle
+    // iteration; the driver leaves it unset. An unknown name fails the
+    // run before anything executes — dropping it would let the oracle
+    // compare pass on fewer queries than were asked for.
+    val only = SparkEntry.onlyQueries(sys.env.get("SPARK_GRAFT_ONLY")).map {
+      case (known, unknown) =>
+        if (unknown.nonEmpty) {
+          System.err.println(s"[verify] unknown SPARK_GRAFT_ONLY queries: ${unknown.mkString(", ")}")
+          System.exit(2)
+        }
+        known.toSet
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q1,q2 narrows to named queries for local oracle
-    // iteration (same contract as Bench); the driver leaves it unset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

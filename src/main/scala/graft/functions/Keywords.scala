@@ -81,7 +81,7 @@ object Keywords {
     * (doc_id, term, tf) do. The top-k window gets the map-side
     * WindowGroupLimit rescue, partitioned by query_id. */
   /** The materialized retrieval structure [[bm25AgainstIndex]] scores
-    * from (C127, the `pqIndex`/`minhashIndex` discipline applied to
+    * from (C127, the `annIndex`/`minhashIndex` discipline applied to
     * text): term postings with per-doc tf, per-term document
     * frequencies, per-doc lengths, and the 1-row corpus stats. Build
     * once, write all four as tables (partition/bucket `postings` by

@@ -238,6 +238,11 @@ object Similarity {
       java.util.Arrays.asList(df.collect(): _*), df.schema)
   }
 
+  /** Fail fast, by name, when an index frame lacks its contract columns. */
+  private def requireCols(df: DataFrame, what: String, cols: String*): Unit =
+    require(cols.forall(df.columns.contains),
+      s"$what frame must carry (${cols.mkString(", ")}); got ${df.columns.mkString(", ")}")
+
   def ivfTrainCells(corpus: DataFrame, id: Column, vec: Column,
                     nlist: Int, iters: Int = 1): DataFrame = {
     graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
@@ -300,16 +305,6 @@ object Similarity {
         array_sort(collect_list(struct(col("pos"), col("centroid")))),
         s => s.getField("centroid")).as("cv"))
 
-  /** The IVF candidate front-end's full output: centroids `(grp, cv)`,
-    * the corpus's final re-assignment `(neighbor_id, cell)`, and the
-    * candidate pairs `(query_id, neighbor_id)`. [[ivfTopK]] consumes
-    * only the candidates; the residual IVF+PQ path also needs the
-    * assignment (residuals are vs the ASSIGNED cell's centroid — the
-    * same cells the probe matches against, or reconstruction and
-    * probing would disagree) and the centroids. */
-  private case class IvfFrontEnd(cvecs: DataFrame, corpusCells: DataFrame,
-                                 cand: DataFrame)
-
   /** Score every row of `df` against the broadcast centroid frame —
     * (id, grp, s) rows, |df|·nlist of them, computed map-side. */
   private def cellScores(df: DataFrame, idName: String,
@@ -370,17 +365,30 @@ object Similarity {
   /** Cell centroids from the seed assignment, corpus re-assignment by
     * combiner-friendly argmax, per-query nprobe cell probing —
     * candidate pairs exclude self, ids only. */
-  private def ivfFrontEnd(corpus: DataFrame, corpusId: Column, corpusVec: Column,
-                          cellSeed: Column,
-                          queries: DataFrame, queryId: Column, queryVec: Column,
-                          nprobe: Int): IvfFrontEnd = {
+  private def ivfCandidates(corpus: DataFrame, corpusId: Column, corpusVec: Column,
+                            cellSeed: Column,
+                            queries: DataFrame, queryId: Column, queryVec: Column,
+                            nprobe: Int): DataFrame = {
     val (cvecs, corpusCells) = ivfAssign(corpus, corpusId, corpusVec, cellSeed)
-    val cand = ivfCandOf(corpusCells,
-      ivfProbes(queries, queryId, queryVec, cvecs, nprobe))
-    IvfFrontEnd(cvecs, corpusCells, cand)
+    ivfCandOf(corpusCells, ivfProbes(queries, queryId, queryVec, cvecs, nprobe))
   }
 
-  /** Persistable IVF index (the [[pqIndex]] discipline for the coarse
+  /** Candidate pairs from a prebuilt [[ivfIndex]]: each query probes the
+    * broadcast centroid table and takes the (tombstone-guarded) stored
+    * cells' members — id-keyed, no corpus-wide scoring pass. */
+  private def probedCandidates(ivf: Ivf, tombstones: Option[DataFrame],
+                               queries: DataFrame, queryId: Column,
+                               queryVec: Column): DataFrame = {
+    requireCols(ivf.centroids, "centroid", "cell", "cv")
+    requireCols(ivf.cells, "cells", "vec_id", "cell")
+    ivfCandOf(
+      tombstoneGuarded(ivf.cells, tombstones)
+        .select(col("vec_id").as("neighbor_id"), col("cell")),
+      ivfProbes(queries, queryId, queryVec,
+        ivf.centroids.select(col("cell").as("grp"), col("cv")), ivf.nprobe))
+  }
+
+  /** Persistable IVF index (the [[annIndex]] discipline for the coarse
     * quantizer): train + assign ONCE, materialize the returned
     * `(centroids (cell, cv), cells (vec_id, cell))` frames as tables,
     * then search any query batch with [[ivfTopKAgainstIndex]]. This is
@@ -407,7 +415,7 @@ object Similarity {
 
   /** Nearest-centroid assignment of NEW vectors under a FROZEN
     * [[ivfIndex]] centroid table — the cells-side APPEND path, the
-    * coarse-quantizer analogue of bqEncode-under-frozen-stats: the
+    * coarse-quantizer analogue of BQ encode-under-frozen-stats: the
     * argmax (and its grp-asc tie-break) is [[assignCells]]'s single
     * definition shared with the index build, so re-assigning the
     * index's own rows reproduces its cells exactly and a streamed
@@ -415,14 +423,13 @@ object Similarity {
     * chosen (spec-pinned). Without this leg a streamed vector has
     * codes but NO cell, and every cell-bounded composition (IVF+BQ,
     * IVF+PQ) silently misses it — the append story must grow BOTH
-    * index tables. NULL/empty vectors are excluded (the bqEncode
+    * index tables. NULL/empty vectors are excluded (the BQ encode
     * contract). One codegen scoring pass against the broadcast
     * nlist-row centroid table; returns `(vec_id, cell)`. */
   def ivfAssignAgainstIndex(df: DataFrame, id: Column, vec: Column,
                             centroids: DataFrame): DataFrame = {
     graft.GraftExtensions.ensureRegistered(df.sparkSession)
-    require(Seq("cell", "cv").forall(centroids.columns.contains),
-      s"centroid frame must carry (cell, cv); got ${centroids.columns.mkString(", ")}")
+    requireCols(centroids, "centroid", "cell", "cv")
     assignCells(
       df.select(id.as("neighbor_id"), vec.cast("array<double>").as("v"))
         .filter(col("v").isNotNull && size(col("v")) > 0),
@@ -467,17 +474,10 @@ object Similarity {
                           k: Int, nprobe: Int = 2,
                           tombstones: Option[DataFrame] = None): DataFrame = {
     graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    require(Seq("cell", "cv").forall(centroids.columns.contains),
-      s"centroid frame must carry (cell, cv); got ${centroids.columns.mkString(", ")}")
-    require(Seq("vec_id", "cell").forall(cells.columns.contains),
-      s"cells frame must carry (vec_id, cell); got ${cells.columns.mkString(", ")}")
-    val cvecs = centroids.select(col("cell").as("grp"), col("cv"))
-    val cand = ivfCandOf(
-      tombstoneGuarded(cells, tombstones)
-        .select(col("vec_id").as("neighbor_id"), col("cell")),
-      ivfProbes(queries, queryId, queryVec, cvecs, nprobe))
-    exactReRank(cand, corpus, corpusId, corpusVec,
-      queries, queryId, queryVec, k)
+    exactReRank(
+      probedCandidates(Ivf(centroids, cells, nprobe), tombstones,
+        queries, queryId, queryVec),
+      corpus, corpusId, corpusVec, queries, queryId, queryVec, k)
   }
 
   /** Graph-expanded ANN search (C122): [[ivfTopKAgainstIndex]]'s
@@ -509,16 +509,9 @@ object Similarity {
                         queries: DataFrame, queryId: Column, queryVec: Column,
                         k: Int, nprobe: Int = 2): DataFrame = {
     graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    require(Seq("cell", "cv").forall(centroids.columns.contains),
-      s"centroid frame must carry (cell, cv); got ${centroids.columns.mkString(", ")}")
-    require(Seq("vec_id", "cell").forall(cells.columns.contains),
-      s"cells frame must carry (vec_id, cell); got ${cells.columns.mkString(", ")}")
-    require(Seq("src", "dst").forall(graph.columns.contains),
-      s"graph frame must carry (src, dst); got ${graph.columns.mkString(", ")}")
-    val cvecs = centroids.select(col("cell").as("grp"), col("cv"))
-    val seeds = ivfCandOf(
-      cells.select(col("vec_id").as("neighbor_id"), col("cell")),
-      ivfProbes(queries, queryId, queryVec, cvecs, nprobe))
+    requireCols(graph, "graph", "src", "dst")
+    val seeds = probedCandidates(Ivf(centroids, cells, nprobe), None,
+      queries, queryId, queryVec)
     val edges = graph.select(col("src"), col("dst"))
     val hop = seeds.join(edges, seeds("neighbor_id") === edges("src"))
       .select(col("query_id"), col("dst").as("neighbor_id"))
@@ -797,13 +790,6 @@ object Similarity {
     out.iterator
   }
 
-  private def ivfCandidates(corpus: DataFrame, corpusId: Column, corpusVec: Column,
-                            cellSeed: Column,
-                            queries: DataFrame, queryId: Column, queryVec: Column,
-                            nprobe: Int): DataFrame =
-    ivfFrontEnd(corpus, corpusId, corpusVec, cellSeed,
-      queries, queryId, queryVec, nprobe).cand
-
   /** IVF over a TRUNCATED (Matryoshka-prefix) quantizer with
     * full-dimension re-rank (C150) — the composite the C149 recall
     * curve exists to justify: centroids, cell assignment and query
@@ -852,7 +838,257 @@ object Similarity {
         round(col("cosine"), 4).as("cosine"))
   }
 
-  // --- C38: product quantization (PQ-ADC) ---------------------------------
+  // --- C38/C54/C154: the ANN codecs behind one index build and one search --
+
+  /** The coarse stage of [[annSearch]]: a prebuilt [[ivfIndex]]'s
+    * `(cell, cv)` centroids and `(vec_id, cell)` cells, probed
+    * `nprobe` cells per query. */
+  final case class Ivf(centroids: DataFrame, cells: DataFrame, nprobe: Int)
+
+  /** What a codec contributes to the shared search, under frozen stats:
+    * a per-code-row preparation, the per-query frame (broadcast, keyed
+    * `query_id`) and the approximate score over a (code, query) row. */
+  private final case class Scoring(prepCodes: DataFrame => DataFrame,
+                                   queries: DataFrame, approx: Column)
+
+  /** An ANN codec: `train` freezes its stats (or codebook), `encode`
+    * turns vectors into `(vec_id, codes)` under them, and its scoring
+    * ranks codes against a query for the shortlist. Every codec runs
+    * the same pipeline ([[annIndex]], [[annSearch]]): candidates,
+    * approximate score, top-`shortlist` per query, exact cosine
+    * re-rank. The re-rank is exact, so with `shortlist ≥ |corpus| − 1`
+    * every codec's search EQUALS [[bruteTopK]] (spec-pinned); the
+    * codecs differ only in bytes per vector and how good the shortlist
+    * is at a tight cut. Train and score are engine-reproducible, so
+    * shortlist boundaries compare identical values under the DuckDB
+    * oracles. */
+  sealed trait Codec {
+    def train(corpus: DataFrame, id: Column, vec: Column): DataFrame
+    def encode(df: DataFrame, id: Column, vec: Column, stats: DataFrame): DataFrame
+    private[Similarity] def requireStats(stats: DataFrame): Unit
+    private[Similarity] def scoring(stats: DataFrame, queries: DataFrame,
+                                    queryId: Column, queryVec: Column): Scoring
+    private[Similarity] def build(corpus: DataFrame, id: Column,
+                                  vec: Column): (DataFrame, DataFrame) = {
+      val stats = train(corpus, id, vec)
+      (stats, encode(corpus, id, vec, stats))
+    }
+  }
+
+  object Codec {
+
+    /** Scalar quantization (C54): per-dimension `(d, lo, hi)` stats,
+      * one byte per dimension (8× smaller than float64). min/max are
+      * order-independent, so the stats are bit-identical on any
+      * partitioning. The shortlist ranks the decoded cosine TRUNCATED
+      * to 1e-9: both engines compute it with different association,
+      * agree far below 1e-9, and so cut identical shortlists. */
+    case object SQ8 extends Codec {
+      def train(corpus: DataFrame, id: Column, vec: Column): DataFrame =
+        corpus.select(posexplode(vec.cast("array<double>")).as(Seq("d", "x")))
+          .groupBy(col("d"))
+          .agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
+
+      def encode(df: DataFrame, id: Column, vec: Column, stats: DataFrame): DataFrame = {
+        graft.GraftExtensions.ensureRegistered(df.sparkSession)
+        requireStats(stats)
+        df.select(id.as("vec_id"), vec.cast("array<double>").as("v"))
+          .crossJoin(broadcast(sqStatsRow(stats)))
+          .select(col("vec_id"), sqCodesExpr(col("v")).as("codes"))
+      }
+
+      private[Similarity] def requireStats(stats: DataFrame): Unit =
+        requireCols(stats, "stats", "d", "lo", "hi")
+
+      private[Similarity] def scoring(stats: DataFrame, queries: DataFrame,
+                                      queryId: Column, queryVec: Column): Scoring =
+        Scoring(
+          _.crossJoin(broadcast(sqStatsRow(stats))).withColumn("dec", sqDecodeExpr),
+          queries.select(queryId.as("query_id"),
+            VectorFunctions.normalized(queryVec).as("qv")),
+          (VectorFunctions.dot(VectorFunctions.normalized(col("dec")), col("qv"))
+            * 1e9).cast("long"))
+    }
+
+    /** Product quantization (C38): m per-subspace quantizers of ksub
+      * codewords, trained `iters` Lloyd rounds by the same FNV-seeded,
+      * fixed-point recipe as [[ivfTrainCells]]. The stats frame is the
+      * codebook `(sub, code, cv)`; codes are m integers per vector,
+      * stored as `array<tinyint>` when ksub ≤ 128 so the ~32×
+      * compression is real on disk. dim must be divisible by m
+      * (checked per row). The index build trains and encodes from ONE
+      * persisted subvector frame. Scoring is ADC: each query's lookup
+      * table of subvector·codeword dots, folded left over a row's codes
+      * ([[pqAdcScore]]); the oracles replicate the association. */
+    final case class PQ(m: Int, ksub: Int, iters: Int = 1) extends Codec {
+      def train(corpus: DataFrame, id: Column, vec: Column): DataFrame = {
+        graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
+        pqTrainOn(pqSubvectors(corpus, id, vec, m)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), ksub, iters)
+      }
+
+      def encode(df: DataFrame, id: Column, vec: Column, books: DataFrame): DataFrame = {
+        graft.GraftExtensions.ensureRegistered(df.sparkSession)
+        requireStats(books)
+        codesOf(pqSubvectors(df, id, vec, m), books)
+      }
+
+      override private[Similarity] def build(corpus: DataFrame, id: Column,
+                                             vec: Column): (DataFrame, DataFrame) = {
+        val subs = pqSubvectors(corpus, id, vec, m)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // books is a LocalRelation (pqTrainOn localizes per round)
+        val books = pqTrainOn(subs, ksub, iters)
+        (books, codesOf(subs, books))
+      }
+
+      private def codesOf(subs: DataFrame, books: DataFrame): DataFrame = {
+        val codes = pqCodesOf(pqAssign(subs, books))
+        if (ksub <= 128)
+          codes.select(col("vec_id"), col("codes").cast("array<tinyint>").as("codes"))
+        else codes
+      }
+
+      private[Similarity] def requireStats(books: DataFrame): Unit =
+        requireCols(books, "codebook", "sub", "code", "cv")
+
+      private[Similarity] def scoring(books: DataFrame, queries: DataFrame,
+                                      queryId: Column, queryVec: Column): Scoring =
+        Scoring(_.crossJoin(broadcast(pqN2Row(books, m, ksub))),
+          pqLuts(queries, queryId, queryVec, m, ksub, books),
+          pqAdcScore(m, ksub))
+    }
+
+    /** The 1-bit codecs' shared stats and codes (C154): the
+      * per-dimension threshold is the corpus MEAN carried as exact
+      * integers — `(d, s, n)` with s = Σ round(x_d·1e6) accumulated in
+      * decimal(38,0) (so train never wraps; DuckDB's HUGEINT sum is the
+      * oracle twin) and n the count, so bit d is `round(x_d·1e6)·n > s_d`
+      * and the mean never materializes as a float. Codes are ⌈d/32⌉
+      * packed longs ([[bqWordsExpr]]); NULL and EMPTY vectors are
+      * excluded (no bits to quantize). Encoding new rows under frozen
+      * stats IS the append path (spec-pinned). */
+    sealed abstract class Binary extends Codec {
+      def train(corpus: DataFrame, id: Column, vec: Column): DataFrame =
+        corpus.select(vec.cast("array<double>").as("v"))
+          .filter(col("v").isNotNull && size(col("v")) > 0)
+          .select(posexplode(transform(col("v"),
+            x => round(x * lit(1e6)).cast("long"))).as(Seq("d", "xfx")))
+          .groupBy(col("d"))
+          .agg(sum(col("xfx").cast("decimal(38,0)")).as("s"),
+            count(lit(1)).as("n"))
+
+      def encode(df: DataFrame, id: Column, vec: Column, stats: DataFrame): DataFrame = {
+        requireStats(stats)
+        df.select(id.as("vec_id"), vec.cast("array<double>").as("v"))
+          .filter(col("v").isNotNull && size(col("v")) > 0)
+          .crossJoin(broadcast(bqStatsRow(stats)))
+          .select(col("vec_id"), bqWordsExpr(col("v")).as("codes"))
+      }
+
+      private[Similarity] def requireStats(stats: DataFrame): Unit =
+        requireCols(stats, "stats", "d", "s", "n")
+    }
+
+    /** Symmetric BQ: queries encode under the SAME corpus thresholds
+      * and the score is the negated Hamming distance on the native
+      * `graft_hamming` kernel (xor + bitCount over the packed words;
+      * kernel == HOF fold spec-pinned). Exact integers, so the
+      * shortlist boundary needs no float discipline; ties break on
+      * neighbor id. */
+    case object BQ extends Binary {
+      private[Similarity] def scoring(stats: DataFrame, queries: DataFrame,
+                                      queryId: Column, queryVec: Column): Scoring =
+        Scoring(identity,
+          encode(queries, queryId, queryVec, stats)
+            .select(col("vec_id").as("query_id"), col("codes").as("qcodes")),
+          -call_function("graft_hamming", col("codes"), col("qcodes")))
+    }
+
+    /** Asymmetric BQ (C154d): the corpus stays 1-bit packed (the same
+      * index bytes as [[BQ]]) but the query is never quantized — a row
+      * scores `Σ_d qfx_d·(2·b_d − 1)`, the query's fixed-point
+      * components under the bit pattern's signs. Keeping the query's
+      * magnitudes recovers recall the Hamming pass throws away, at d
+      * sign-sums per row instead of d/32 xor words. The score is an
+      * exact integer; bits unpack from the stored words
+      * ([[bqAsymScore]]), and `dim` comes from the stats table (a
+      * bounded count). A query whose length differs from dim fails
+      * fast ([[bqAsymQueryFx]]). */
+    case object AsymBQ extends Binary {
+      private[Similarity] def scoring(stats: DataFrame, queries: DataFrame,
+                                      queryId: Column, queryVec: Column): Scoring = {
+        val dim = stats.count().toInt
+        require(dim > 0, "stats table is empty — train before searching")
+        Scoring(identity, bqAsymQueryFx(queries, queryId, queryVec, dim),
+          bqAsymScore(dim))
+      }
+    }
+  }
+
+  /** Pay-once index build for any codec: `(stats, codes)` — materialize
+    * both as tables (parquet, bucketed via Layout) and search every
+    * later query batch with [[annSearch]] without retraining; at
+    * 100 TB the encode is the corpus-scan cost and is paid per corpus
+    * version, not per query batch. The codec's parameters (PQ's m,
+    * ksub) used to build MUST match every later search. */
+  def annIndex(codec: Codec, corpus: DataFrame, id: Column,
+               vec: Column): (DataFrame, DataFrame) = {
+    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
+    codec.build(corpus, id, vec)
+  }
+
+  /** ANN search against a prebuilt [[annIndex]], one pipeline for
+    * every codec (the REPOSE partition → bound → prune → refine
+    * shape): candidates are every code row, or with `ivf` only the
+    * members of each query's `nprobe` probed cells (the FAISS IVF +
+    * codec composition — the probe bounds WHICH codes are scored,
+    * never how, so `nprobe = nlist` equals the flat search at the same
+    * shortlist; spec-pinned); the codec scores each candidate, the
+    * top-`shortlist` per query survive, and [[exactReRank]] fetches
+    * full vectors for those ids only. The approximate stage reads
+    * codes, never corpus vectors, and nothing corpus-sized shuffles in
+    * the flat scan; `corpus` supplies vectors for the re-rank only.
+    *
+    * `tombstones` is the StreamIndex reader contract as an argument: a
+    * still-growing streamed artifact dir is searched with the takedown
+    * list, which guards codes AND cells in lockstep (a tombstoned id
+    * neither seeds a candidate nor carries a code); search with
+    * tombstones ≡ search over the [[indexRemove]]-rebuilt tables. */
+  def annSearch(codec: Codec, stats: DataFrame, codes: DataFrame,
+                corpus: DataFrame, corpusId: Column, corpusVec: Column,
+                queries: DataFrame, queryId: Column, queryVec: Column,
+                k: Int, shortlist: Int, ivf: Option[Ivf] = None,
+                tombstones: Option[DataFrame] = None): DataFrame = {
+    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
+    val cand = ivf.map(probedCandidates(_, tombstones, queries, queryId, queryVec))
+    codec.requireStats(stats)
+    requireCols(codes, "codes", "vec_id", "codes")
+    val sc = codec.scoring(stats, queries, queryId, queryVec)
+    val coded = tombstoneGuarded(codes, tombstones)
+      .select(col("vec_id").as("neighbor_id"), col("codes"))
+    val paired = cand match {
+      case None => sc.prepCodes(coded)
+        .join(broadcast(sc.queries), col("neighbor_id") =!= col("query_id"))
+      case Some(c) => sc.prepCodes(c.join(coded, "neighbor_id"))
+        .join(broadcast(sc.queries), "query_id")
+    }
+    exactReRank(approxShortlist(paired.withColumn("approx", sc.approx), shortlist),
+      corpus, corpusId, corpusVec, queries, queryId, queryVec, k)
+  }
+
+  /** Top-`shortlist` per query by `approx` (ties on neighbor id) →
+    * `(query_id, neighbor_id)`, self excluded. */
+  private def approxShortlist(scored: DataFrame, shortlist: Int): DataFrame = {
+    val wA = Window.partitionBy(col("query_id"))
+      .orderBy(col("approx").desc, col("neighbor_id"))
+    scored.filter(col("neighbor_id") =!= col("query_id"))
+      .withColumn("srank", row_number().over(wA))
+      .filter(col("srank") <= shortlist)
+      .select(col("query_id"), col("neighbor_id"))
+  }
+
+  // --- PQ internals ---------------------------------------------------------
 
   /** Subvector view: m rows per vector — `(vec_id, sub, sv)` where sv
     * is the sub-th dim/m-length slice. dim must be divisible by m —
@@ -899,29 +1135,11 @@ object Similarity {
       .agg(max(struct(col("s"), (-col("code")).as("nc"))).as("m"))
       .select(col("vec_id"), col("sub"), (-col("m.nc")).as("code"))
 
-  /** Product-quantization codebook training (SURVEY.md §2.C38): m
-    * independent per-subspace quantizers of ksub codewords each,
-    * trained by the SAME engine-reproducible recipe as
-    * [[ivfTrainCells]] — FNV-seeded init, fixed-point centroids,
-    * argmax re-assignment with integer tie-break — so the whole train
-    * chain is DuckDB-oracle-checkable. Returns `(sub, code, cv)`; feed
-    * it to [[pqEncode]]/[[pqTopK]]. Codewords that attract no members
-    * drop out of the codebook (they can then never be assigned —
-    * consistent in both engines). At scale this is the index-build
-    * step: train once on a sample, persist the codebook (m·ksub tiny
-    * rows), encode the corpus incrementally. */
-  def pqTrainCodebooks(corpus: DataFrame, id: Column, vec: Column,
-                       m: Int, ksub: Int, iters: Int = 1): DataFrame = {
-    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    pqTrainOn(
-      pqSubvectors(corpus, id, vec, m)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      ksub, iters)
-  }
-
-  /** Train over an (already persisted) subvector frame — shared by the
-    * standalone train API and [[pqTopK]], whose encode step reuses the
-    * SAME frame instead of re-slicing the corpus. */
+  /** Codebook training over an (already persisted) subvector frame:
+    * FNV-seeded init, fixed-point centroids, argmax re-assignment with
+    * integer tie-break — the whole chain is DuckDB-oracle-checkable.
+    * Codewords that attract no members drop out of the codebook (they
+    * can then never be assigned — consistent in both engines). */
   private def pqTrainOn(subs: DataFrame, ksub: Int, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     var codes = subs.select(col("vec_id"), col("sub"),
@@ -940,45 +1158,13 @@ object Similarity {
   }
 
   /** Collapse a per-(vector, subspace) assignment to the per-vector
-    * code array (subspace order) — shared by [[pqEncode]] and
-    * [[pqTopK]]. */
+    * code array (subspace order). */
   private def pqCodesOf(assigned: DataFrame): DataFrame =
     assigned.groupBy(col("vec_id"))
       .agg(transform(
         array_sort(collect_list(struct(col("sub"), col("code")))),
         s => s.getField("code")).as("codes"))
 
-  /** Encode each vector as its m nearest codewords — `(vec_id, codes)`
-    * with `codes` ordered by subspace. THE memory story at 100 TB:
-    * after encoding, ANN scoring touches m small integers per vector
-    * (store them as bytes in a real deployment) instead of dim floats
-    * — a 64-dim float corpus compresses ~32× before anyone computes a
-    * distance. */
-  def pqEncode(corpus: DataFrame, id: Column, vec: Column, m: Int,
-               books: DataFrame): DataFrame = {
-    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    pqCodesOf(pqAssign(pqSubvectors(corpus, id, vec, m), books))
-  }
-
-  /** PQ-ADC top-k search: train → encode → asymmetric-distance
-    * shortlist → EXACT cosine re-rank.
-    *
-    * The ADC stage is where the scale win lives: each query
-    * precomputes a lookup table of its subvector dot products against
-    * every codeword (m·ksub doubles per query — broadcast), plus one
-    * 1-row broadcast of codeword squared norms; a corpus vector's
-    * approximate score is then m array lookups folded left —
-    * `Σⱼ lut[codesⱼ] / √(Σⱼ ‖c_codesⱼ‖²)` — a pure map stage over the
-    * codes frame. No corpus vector is read, nothing corpus-sized
-    * shuffles; the only per-query state is the top-`shortlist` window
-    * (row_number ≤ R plans a map-side WindowGroupLimit). The exact
-    * re-rank fetches full vectors for shortlist·|Q| ids only. With
-    * `shortlist >= |corpus| - 1` the result is EXACTLY [[bruteTopK]]
-    * (the re-rank is exact over all candidates) — spec-pinned.
-    *
-    * The fold is left-associated and the oracle replicates the same
-    * association, so the float shortlist boundary compares identical
-    * doubles in both engines. */
   /** Dense per-query ADC lookup arrays — `(query_id, lutd)` with
     * lutd[sub·ksub + code] = dot(query subvector, codeword). Empty
     * codewords hold 0.0: they are never assigned, so the slot is never
@@ -1008,127 +1194,19 @@ object Similarity {
   /** LEFT-ASSOCIATED m-term fold of `arr[j·ksub + codes[j]]` over the
     * row's `codes` column (the oracles reproduce the association, so
     * shortlist boundaries compare identical doubles). The code cast
-    * accepts any integral storage type — the narrowed byte codes of
-    * [[pqIndex]] fold identically. */
+    * accepts any integral storage type — the narrowed byte codes fold
+    * identically. */
   private def pqFold(arr: Column, m: Int, ksub: Int): Column =
     aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
       (acc, j) => acc + element_at(arr,
         j * ksub + element_at(col("codes"), j + 1).cast("int") + 1))
 
   /** The ADC approximate score over a frame carrying `codes`, `lutd`,
-    * `n2arr`. */
+    * `n2arr`: `Σⱼ lut[codesⱼ] / √(Σⱼ ‖c_codesⱼ‖²)`. */
   private def pqAdcScore(m: Int, ksub: Int): Column =
     pqFold(col("lutd"), m, ksub) / sqrt(pqFold(col("n2arr"), m, ksub))
 
-  /** Top-`shortlist` per query by ADC score → `(query_id, neighbor_id)`. */
-  private def pqShortlist(scored: DataFrame, shortlist: Int): DataFrame = {
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("neighbor_id"))
-    scored.filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("srank", row_number().over(wA))
-      .filter(col("srank") <= shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-  }
-
-  /** Train + encode on ONE persisted corpus-sized subvector frame —
-    * re-slicing the corpus for encode would pay a second scan while
-    * the train-time cache sat pinned and unread. Shared by [[pqTopK]]
-    * and [[ivfPqTopK]] so a train/encode change can't diverge them.
-    * Returns (codebook, codes). */
-  private def pqTrainEncode(corpus: DataFrame, id: Column, vec: Column,
-                            m: Int, ksub: Int, iters: Int): (DataFrame, DataFrame) = {
-    val subs = pqSubvectors(corpus, id, vec, m)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // books is a LocalRelation (pqTrainOn localizes per round) — no
-    // persist needed
-    val books = pqTrainOn(subs, ksub, iters)
-    (books, pqCodesOf(pqAssign(subs, books)))
-  }
-
-  /** The ADC-scan + shortlist + exact-re-rank tail shared by
-    * [[pqTopK]] and [[pqTopKAgainstIndex]] — ONE definition so the
-    * trained-inline and prebuilt-index searches can't diverge. */
-  private def pqAdcSearch(books: DataFrame, codes: DataFrame,
-                          corpus: DataFrame, corpusId: Column, corpusVec: Column,
-                          queries: DataFrame, queryId: Column, queryVec: Column,
-                          m: Int, ksub: Int, k: Int, shortlist: Int): DataFrame = {
-    val scored = codes
-      .crossJoin(broadcast(pqN2Row(books, m, ksub)))
-      .crossJoin(broadcast(pqLuts(queries, queryId, queryVec, m, ksub, books)))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        pqAdcScore(m, ksub).as("approx"))
-    exactReRank(pqShortlist(scored, shortlist),
-      corpus, corpusId, corpusVec, queries, queryId, queryVec, k)
-  }
-
-  def pqTopK(corpus: DataFrame, corpusId: Column, corpusVec: Column,
-             queries: DataFrame, queryId: Column, queryVec: Column,
-             m: Int, ksub: Int, k: Int, shortlist: Int,
-             iters: Int = 1): DataFrame = {
-    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    val (books, codes) = pqTrainEncode(corpus, corpusId, corpusVec, m, ksub, iters)
-    pqAdcSearch(books, codes, corpus, corpusId, corpusVec,
-      queries, queryId, queryVec, m, ksub, k, shortlist)
-  }
-
-  /** Persistable PQ index (the [[graft.operators.Dedup.minhashIndex]]
-    * pattern for ANN): train + encode ONCE, materialize the returned
-    * `(codebook, codes)` frames as tables (parquet/bucketed via
-    * Layout), then search any query batch with
-    * [[pqTopKAgainstIndex]] without retraining — at 100 TB the encode
-    * is the corpus-scan cost center and must be paid per corpus
-    * version, not per query batch. Codes are stored as
-    * `array<tinyint>` when ksub ≤ 128 (fits the signed byte) — the
-    * ~32× compression story is only real if the storage type actually
-    * shrinks; wider ksub keeps the long codes. The (m, ksub) used to
-    * build MUST match every later search; store them with the
-    * tables. */
-  def pqIndex(corpus: DataFrame, id: Column, vec: Column,
-              m: Int, ksub: Int, iters: Int = 1): (DataFrame, DataFrame) = {
-    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    val (books, codes) = pqTrainEncode(corpus, id, vec, m, ksub, iters)
-    (books, narrowCodes(codes, ksub))
-  }
-
-  /** Byte-typed codes when they fit the signed byte (ksub ≤ 128) — the
-    * claimed ~32× compression is only real if the STORED type shrinks.
-    * Shared by every index-materializing API so appended codes union
-    * cleanly with built ones. */
-  private def narrowCodes(codes: DataFrame, ksub: Int): DataFrame =
-    if (ksub <= 128)
-      codes.select(col("vec_id"), col("codes").cast("array<tinyint>").as("codes"))
-    else codes
-
-  /** [[pqTopK]] with the train/encode stage served from a prebuilt
-    * [[pqIndex]] — only the query batch is sliced and LUT-ed; the
-    * codes table is scanned as-is. `corpus` supplies full vectors for
-    * the exact re-rank ONLY (shortlist·|Q| lookups, not a scan). */
-  def pqTopKAgainstIndex(books: DataFrame, codes: DataFrame,
-                         corpus: DataFrame, corpusId: Column, corpusVec: Column,
-                         queries: DataFrame, queryId: Column, queryVec: Column,
-                         m: Int, ksub: Int, k: Int, shortlist: Int): DataFrame = {
-    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    require(Seq("sub", "code", "cv").forall(books.columns.contains),
-      s"codebook frame must carry (sub, code, cv); got ${books.columns.mkString(", ")}")
-    require(Seq("vec_id", "codes").forall(codes.columns.contains),
-      s"codes frame must carry (vec_id, codes); got ${codes.columns.mkString(", ")}")
-    pqAdcSearch(books, codes, corpus, corpusId, corpusVec,
-      queries, queryId, queryVec, m, ksub, k, shortlist)
-  }
-
-  // --- C54: scalar quantization (SQ8) -------------------------------------
-
-  /** Per-dimension [lo, hi] training stats for the scalar quantizer —
-    * `(d, lo, hi)`, one row per dimension. min/max are exactly
-    * order-independent (no accumulation error), so the stats — and
-    * everything encoded from them — are bit-identical on any
-    * partitioning. Scale shape: one posexplode to `(d, x)` skinny rows
-    * with map-side-combined min/max partials — only `dims` rows leave
-    * each partition. */
-  def sqTrain(corpus: DataFrame, id: Column, vec: Column): DataFrame =
-    corpus.select(posexplode(vec.cast("array<double>")).as(Seq("d", "x")))
-      .groupBy(col("d"))
-      .agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
+  // --- SQ8 internals --------------------------------------------------------
 
   /** 1-row dense (los, his) arrays ordered by dimension — the bounded
     * broadcast every encode/decode stage crossJoins (dims doubles ×2,
@@ -1142,9 +1220,8 @@ object Similarity {
   /** Element encode over a frame carrying `los`/`his`: linear map of
     * each dimension onto 256 levels, clamped, stored byte-centered
     * (code − 128 ∈ [−128, 127]) so the array is a genuine
-    * `array<tinyint>` — 8× smaller than the float64 working form, 4×
-    * smaller than float32 storage. A collapsed dimension (hi = lo)
-    * encodes 0 and decodes to lo exactly. */
+    * `array<tinyint>`. A collapsed dimension (hi = lo) encodes 0 and
+    * decodes to lo exactly. */
   private def sqCodesExpr(v: Column): Column =
     transform(v, (x, i) => {
       val lo = element_at(col("los"), i + 1)
@@ -1165,95 +1242,7 @@ object Similarity {
       lo + (c.cast("double") + lit(128.0)) * (hi - lo) / lit(255.0)
     })
 
-  /** Scalar-quantize the corpus against trained stats →
-    * `(vec_id, codes array<tinyint>)`. One map stage over the corpus
-    * (the 1-row stats broadcast rides along); nothing shuffles. */
-  def sqEncode(corpus: DataFrame, id: Column, vec: Column,
-               stats: DataFrame): DataFrame = {
-    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    require(Seq("d", "lo", "hi").forall(stats.columns.contains),
-      s"stats frame must carry (d, lo, hi); got ${stats.columns.mkString(", ")}")
-    corpus.select(id.as("vec_id"), vec.cast("array<double>").as("v"))
-      .crossJoin(broadcast(sqStatsRow(stats)))
-      .select(col("vec_id"), sqCodesExpr(col("v")).as("codes"))
-  }
-
-  /** SQ8 index: (stats, codes) as materializable tables — the
-    * [[pqIndex]] discipline for the scalar quantizer. Encode is paid
-    * once per corpus version; every later search reads 1 byte per
-    * dimension per vector instead of the vector. */
-  def sqIndex(corpus: DataFrame, id: Column, vec: Column): (DataFrame, DataFrame) = {
-    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    val stats = sqTrain(corpus, id, vec)
-    (stats, sqEncode(corpus, id, vec, stats))
-  }
-
-  /** SQ8 ANN search against a prebuilt [[sqIndex]]: dequantize-and-
-    * score shortlist → exact cosine re-rank. The approximate stage is
-    * a pure map over the codes table (decode + cosine against the
-    * broadcast query set — corpus vectors unread, nothing corpus-sized
-    * shuffles); full vectors are fetched for shortlist·|Q| ids only.
-    * The shortlist ranks on the approx score TRUNCATED to 1e-9 (the
-    * engine-parity quantization discipline of the fixed-point
-    * centroids): both engines compute the cosine with different
-    * association, agree far below 1e-9, and so cut identical
-    * shortlists. With `shortlist ≥ |corpus| − 1` the result EQUALS
-    * [[bruteTopK]] — spec-pinned. */
-  def sqTopKAgainstIndex(stats: DataFrame, codes: DataFrame,
-                         corpus: DataFrame, corpusId: Column, corpusVec: Column,
-                         queries: DataFrame, queryId: Column, queryVec: Column,
-                         k: Int, shortlist: Int): DataFrame = {
-    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    require(Seq("d", "lo", "hi").forall(stats.columns.contains),
-      s"stats frame must carry (d, lo, hi); got ${stats.columns.mkString(", ")}")
-    require(Seq("vec_id", "codes").forall(codes.columns.contains),
-      s"codes frame must carry (vec_id, codes); got ${codes.columns.mkString(", ")}")
-    val qn = queries.select(queryId.as("query_id"),
-      VectorFunctions.normalized(queryVec).as("qv"))
-    val scored = codes.select(col("vec_id").as("neighbor_id"), col("codes"))
-      .crossJoin(broadcast(sqStatsRow(stats)))
-      .withColumn("dec", sqDecodeExpr)
-      .join(broadcast(qn), col("neighbor_id") =!= col("query_id"))
-      .withColumn("approx",
-        (VectorFunctions.dot(VectorFunctions.normalized(col("dec")), col("qv"))
-          * 1e9).cast("long"))
-    pqShortlist(scored, shortlist)
-      .transform(cand => exactReRank(cand, corpus, corpusId, corpusVec,
-        queries, queryId, queryVec, k))
-  }
-
-  /** Inline SQ8 top-k: train → encode → search in one call. */
-  def sqTopK(corpus: DataFrame, corpusId: Column, corpusVec: Column,
-             queries: DataFrame, queryId: Column, queryVec: Column,
-             k: Int, shortlist: Int): DataFrame = {
-    val (stats, codes) = sqIndex(corpus, corpusId, corpusVec)
-    sqTopKAgainstIndex(stats, codes, corpus, corpusId, corpusVec,
-      queries, queryId, queryVec, k, shortlist)
-  }
-
-  // --- C154: binary quantization (1-bit Hamming) ---------------------------
-
-  /** 1-bit binary-quantization train (C154; the rung below [[sqTopK]]'s
-    * SQ8 on the compression ladder — 32× smaller than float32, the
-    * 2024 embedding-DB default for the first-pass scan): the
-    * per-dimension threshold is the corpus MEAN, carried as exact
-    * integers — (d, s, n) with s = Σ round(x_d·1e6) and n the corpus
-    * count, so bit d of any vector is `round(x_d·1e6)·n > s_d`
-    * (multiply through by n: the mean never materializes as a float —
-    * the arBuckets all-integer argmin trick — and the bit is identical
-    * in any engine). The per-dim sum `s` ACCUMULATES in decimal(38,0)
-    * (the C37/recencyAllocation rule — a documented long bound is a
-    * bound someone will cross silently; DuckDB's HUGEINT sum is the
-    * oracle twin), so train never wraps at any corpus size; the
-    * encode-side compare multiplies in decimal too ([[bqWordsExpr]]). */
-  def bqTrain(corpus: DataFrame, id: Column, vec: Column): DataFrame =
-    corpus.select(vec.cast("array<double>").as("v"))
-      .filter(col("v").isNotNull && size(col("v")) > 0)
-      .select(posexplode(transform(col("v"),
-        x => round(x * lit(1e6)).cast("long"))).as(Seq("d", "xfx")))
-      .groupBy(col("d"))
-      .agg(sum(col("xfx").cast("decimal(38,0)")).as("s"),
-        count(lit(1)).as("n"))
+  // --- BQ internals ---------------------------------------------------------
 
   /** 1-row dense (ss, ns) threshold arrays ordered by dimension — the
     * bounded broadcast the encode stage crossJoins (the sqStatsRow
@@ -1271,11 +1260,11 @@ object Similarity {
     * words keep every intermediate positive and exact in both). Word
     * order and bit significance are fold order — both sides pack
     * identically, which is all Hamming needs. The threshold compare
-    * multiplies vfx·n in decimal(38,0) (matching [[bqTrain]]'s decimal
+    * multiplies vfx·n in decimal(38,0) (matching [[Codec.Binary]]'s decimal
     * `s`), so the encode side can't silently wrap either. A
     * zero-length vector yields an EMPTY code array (enforced by the
     * `when` guard — without it `sequence(0, -1)` would auto-step DOWN
-    * and emit two spurious zero words); [[bqEncode]] additionally
+    * and emit two spurious zero words); [[Codec.Binary]]'s encode additionally
     * filters such vectors out, the bruteTopK empty-input contract. */
   private def bqWordsExpr(v: Column): Column =
     graft.functions.Cols.let(bqBitsExpr(v)) { bits =>
@@ -1309,7 +1298,7 @@ object Similarity {
     * index. The bit rule is [[bqBitsExpr]], the SAME expression the
     * stored words pack, so the monitor watches exactly what the index
     * contains. Scale shape: a d× map-side explode that collapses to
-    * ≤ 2d rows per partition before any shuffle (the bqTrain shape). */
+    * ≤ 2d rows per partition before any shuffle (the BQ train shape). */
   def bqBitBuckets(df: DataFrame, vec: Column, stats: DataFrame): DataFrame =
     df.select(vec.cast("array<double>").as("v"))
       .filter(col("v").isNotNull && size(col("v")) > 0)
@@ -1327,118 +1316,6 @@ object Similarity {
   def bqBitCounts(df: DataFrame, vec: Column, stats: DataFrame): DataFrame =
     bqBitBuckets(df, vec, stats)
       .groupBy(col("grp"), col("bucket")).agg(count(lit(1)).as("n"))
-
-  /** Binary codes for a frame under trained thresholds: `(vec_id,
-    * codes)` with codes = array of ⌈d/32⌉ longs. One codegen map pass
-    * over a bounded 1-row stats broadcast; NULL and EMPTY vectors
-    * excluded (the bruteTopK contract — an empty embedding has no bits
-    * to quantize and must not enter the Hamming shortlist). */
-  def bqEncode(df: DataFrame, id: Column, vec: Column,
-               stats: DataFrame): DataFrame =
-    df.select(id.as("vec_id"), vec.cast("array<double>").as("v"))
-      .filter(col("v").isNotNull && size(col("v")) > 0)
-      .crossJoin(broadcast(bqStatsRow(stats)))
-      .select(col("vec_id"), bqWordsExpr(col("v")).as("codes"))
-
-  /** Pay-once BQ index build: (stats, codes) — persist both as parquet
-    * and search any later query batch without touching corpus vectors
-    * until the re-rank (the sqIndex discipline). */
-  def bqIndex(corpus: DataFrame, id: Column,
-              vec: Column): (DataFrame, DataFrame) = {
-    val stats = bqTrain(corpus, id, vec)
-    (stats, bqEncode(corpus, id, vec, stats))
-  }
-
-  /** BQ ANN search against a prebuilt [[bqIndex]]: Hamming-distance
-    * shortlist over the packed words → exact cosine re-rank. The
-    * approximate stage reads ⌈d/32⌉ longs per corpus row (32× less
-    * than float32 vectors) and scores with xor + bit_count — exact
-    * INTEGER distances, so unlike the SQ/PQ float scores the shortlist
-    * boundary needs no quantization discipline at all; ties break on
-    * neighbor id. Queries encode under the SAME corpus thresholds.
-    * With `shortlist ≥ |corpus| − 1` the result EQUALS [[bruteTopK]]
-    * (spec-pinned). */
-  def bqTopKAgainstIndex(stats: DataFrame, codes: DataFrame,
-                         corpus: DataFrame, corpusId: Column, corpusVec: Column,
-                         queries: DataFrame, queryId: Column, queryVec: Column,
-                         k: Int, shortlist: Int,
-                         tombstones: Option[DataFrame] = None): DataFrame = {
-    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    require(Seq("d", "s", "n").forall(stats.columns.contains),
-      s"stats frame must carry (d, s, n); got ${stats.columns.mkString(", ")}")
-    require(Seq("vec_id", "codes").forall(codes.columns.contains),
-      s"codes frame must carry (vec_id, codes); got ${codes.columns.mkString(", ")}")
-    val qc = bqEncode(queries, queryId, queryVec, stats)
-      .select(col("vec_id").as("query_id"), col("codes").as("qcodes"))
-    val scored = tombstoneGuarded(codes, tombstones)
-      .select(col("vec_id").as("neighbor_id"), col("codes"))
-      .join(broadcast(qc), col("neighbor_id") =!= col("query_id"))
-      .withColumn("approx", bqHammingNeg(col("codes"), col("qcodes")))
-    exactReRank(pqShortlist(scored, shortlist),
-      corpus, corpusId, corpusVec, queries, queryId, queryVec, k)
-  }
-
-  /** NEGATED Hamming distance between two packed code arrays (so the
-    * shared shortlist's desc order ranks nearest-first) — ONE
-    * definition shared by the linear BQ scan and the IVF-bounded
-    * composition. Rides the native `graft_hamming` kernel (a
-    * Long.bitCount(xor) loop over the unsafe array data) instead of
-    * the aggregate(zip_with(...)) HOF chain, which allocates an
-    * intermediate array and lambda frames per word — this loop runs
-    * once per (corpus row × query), THE hot path of the first pass
-    * at scale. Same exact integers in the same order (kernel-equals-
-    * HOF spec-pinned), so the shortlist boundary cannot move. */
-  private def bqHammingNeg(codes: Column, qcodes: Column): Column =
-    -call_function("graft_hamming", codes, qcodes)
-
-  /** Asymmetric BQ search (C154d — production BQ's better half, the
-    * standard practice in the modern vector-DB literature): the CORPUS
-    * stays 1-bit packed (identical storage/IO to [[bqTopKAgainstIndex]])
-    * but the QUERY is never quantized — each corpus row scores
-    * `Σ_d qfx_d · (2·b_d − 1)`, the query's fixed-point components
-    * summed with the corpus bit pattern's signs. Keeping the query's
-    * magnitudes recovers recall the symmetric Hamming pass throws away
-    * (a query component near the threshold contributes ~nothing here
-    * but a full ±1 bit there) at identical index bytes; the honest
-    * price is compute — d sign-sums per row instead of d/32 xor words
-    * (BQ scans are storage/IO-bound, which is why production systems
-    * take this trade).
-    *
-    * Integer discipline: qfx = round(q_d·1e6) are the module's
-    * once-rounded exact integers and the bits are exact, so the score
-    * is an exact integer — the shortlist boundary needs no float
-    * discipline, same as Hamming. Bits unpack from the stored words
-    * arithmetically (shift/mask from the 32-bit fold's layout — the
-    * [[bqAsymScore]] dispatch: compile-time constants unrolled up to
-    * [[AsymUnrollLimit]], a dynamic fold past it), so the scan still
-    * READS only ⌈d/32⌉ longs per row; `dim` comes from the stats table
-    * (a bounded 1-row fetch, the index's own dimensionality record). A
-    * query vector whose length differs from dim fails fast
-    * ([[bqAsymQueryFx]]) instead of NULL-scoring. With
-    * `shortlist ≥ |corpus| − 1` the exact re-rank sees every candidate
-    * and the result EQUALS [[bruteTopK]] (spec-pinned); at equal TIGHT
-    * shortlists the spec pins recall ≥ the symmetric scan on the
-    * benchmark corpus. */
-  def bqTopKAsymmetricAgainstIndex(stats: DataFrame, codes: DataFrame,
-                                   corpus: DataFrame, corpusId: Column, corpusVec: Column,
-                                   queries: DataFrame, queryId: Column, queryVec: Column,
-                                   k: Int, shortlist: Int,
-                                   tombstones: Option[DataFrame] = None): DataFrame = {
-    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    require(Seq("d", "s", "n").forall(stats.columns.contains),
-      s"stats frame must carry (d, s, n); got ${stats.columns.mkString(", ")}")
-    require(Seq("vec_id", "codes").forall(codes.columns.contains),
-      s"codes frame must carry (vec_id, codes); got ${codes.columns.mkString(", ")}")
-    val dim = stats.count().toInt
-    require(dim > 0, "stats table is empty — train before searching")
-    val scored = tombstoneGuarded(codes, tombstones)
-      .select(col("vec_id").as("neighbor_id"), col("codes"))
-      .join(broadcast(bqAsymQueryFx(queries, queryId, queryVec, dim)),
-        col("neighbor_id") =!= col("query_id"))
-      .withColumn("approx", bqAsymScore(dim))
-    exactReRank(pqShortlist(scored, shortlist),
-      corpus, corpusId, corpusVec, queries, queryId, queryVec, k)
-  }
 
   /** The asymmetric query projection: once-rounded fixed-point
     * components under the index's dimensionality CONTRACT — a query
@@ -1520,184 +1397,6 @@ object Similarity {
       acc + element_at(col("qfx"), d + 1) * (bit * lit(2L) - lit(1L))
     })
 
-  /** Inline asymmetric BQ top-k: train → encode → search. */
-  def bqTopKAsymmetric(corpus: DataFrame, corpusId: Column, corpusVec: Column,
-                       queries: DataFrame, queryId: Column, queryVec: Column,
-                       k: Int, shortlist: Int): DataFrame = {
-    val (stats, codes) = bqIndex(corpus, corpusId, corpusVec)
-    bqTopKAsymmetricAgainstIndex(stats, codes, corpus, corpusId, corpusVec,
-      queries, queryId, queryVec, k, shortlist)
-  }
-
-  /** Inline BQ top-k: train → encode → search in one call. */
-  def bqTopK(corpus: DataFrame, corpusId: Column, corpusVec: Column,
-             queries: DataFrame, queryId: Column, queryVec: Column,
-             k: Int, shortlist: Int): DataFrame = {
-    val (stats, codes) = bqIndex(corpus, corpusId, corpusVec)
-    bqTopKAgainstIndex(stats, codes, corpus, corpusId, corpusVec,
-      queries, queryId, queryVec, k, shortlist)
-  }
-
-  /** IVF + BQ composed search (C154c — the FAISS IVF+binary-refine
-    * shape): the plain BQ scan is linear BY DESIGN (32× cheaper bytes
-    * over the whole corpus); composing it with the coarse quantizer
-    * makes the first pass CORPUS-BOUNDED — a query Hamming-scores only
-    * the ⌈d/32⌉-long codes of its nprobe probed cells' members
-    * (nprobe/nlist of the corpus), then exact-re-ranks the shortlist.
-    * Both ingredients keep their own proven recipes: candidates are
-    * [[ivfTopKAgainstIndex]]'s id-only (query_id, neighbor_id) pairs
-    * from the stored cells, the Hamming scorer is
-    * [[bqTopKAgainstIndex]]'s single [[bqHammingNeg]] definition. With
-    * `nprobe = nlist` the candidate set is every non-self pair, so the
-    * result EQUALS plain [[bqTopK]] at the same shortlist
-    * (spec-pinned — the probe bounds WHICH codes are scored, never how).
-    * Scale: the per-query cell probe is a broadcast centroid compare;
-    * candidate ids shuffle as (long, long); codes attach by one
-    * id-keyed join; corpus vectors are read for the shortlist only. */
-  def ivfBqTopKAgainstIndex(centroids: DataFrame, cells: DataFrame,
-                            stats: DataFrame, codes: DataFrame,
-                            corpus: DataFrame, corpusId: Column, corpusVec: Column,
-                            queries: DataFrame, queryId: Column, queryVec: Column,
-                            k: Int, nprobe: Int, shortlist: Int,
-                            tombstones: Option[DataFrame] = None): DataFrame = {
-    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    require(Seq("cell", "cv").forall(centroids.columns.contains),
-      s"centroid frame must carry (cell, cv); got ${centroids.columns.mkString(", ")}")
-    require(Seq("vec_id", "cell").forall(cells.columns.contains),
-      s"cells frame must carry (vec_id, cell); got ${cells.columns.mkString(", ")}")
-    require(Seq("d", "s", "n").forall(stats.columns.contains),
-      s"stats frame must carry (d, s, n); got ${stats.columns.mkString(", ")}")
-    require(Seq("vec_id", "codes").forall(codes.columns.contains),
-      s"codes frame must carry (vec_id, codes); got ${codes.columns.mkString(", ")}")
-    val cvecs = centroids.select(col("cell").as("grp"), col("cv"))
-    // guarding BOTH keyed artifacts keeps the lockstep contract: a
-    // tombstoned id must neither seed a candidate nor carry a code
-    val cand = ivfCandOf(
-      tombstoneGuarded(cells, tombstones)
-        .select(col("vec_id").as("neighbor_id"), col("cell")),
-      ivfProbes(queries, queryId, queryVec, cvecs, nprobe))
-    val qc = bqEncode(queries, queryId, queryVec, stats)
-      .select(col("vec_id").as("query_id"), col("codes").as("qcodes"))
-    val scored = cand
-      .join(tombstoneGuarded(codes, tombstones)
-          .select(col("vec_id").as("neighbor_id"), col("codes")),
-        "neighbor_id")
-      .join(broadcast(qc), "query_id")
-      .withColumn("approx", bqHammingNeg(col("codes"), col("qcodes")))
-    exactReRank(pqShortlist(scored, shortlist),
-      corpus, corpusId, corpusVec, queries, queryId, queryVec, k)
-  }
-
-  /** Inline IVF+BQ top-k: train both quantizers, encode, search. */
-  def ivfBqTopK(corpus: DataFrame, corpusId: Column, corpusVec: Column,
-                queries: DataFrame, queryId: Column, queryVec: Column,
-                nlist: Int, nprobe: Int, k: Int, shortlist: Int,
-                ivfIters: Int = 1): DataFrame = {
-    val (cents, cells) = ivfIndex(corpus, corpusId, corpusVec, nlist, ivfIters)
-    val (stats, codes) = bqIndex(corpus, corpusId, corpusVec)
-    ivfBqTopKAgainstIndex(cents, cells, stats, codes,
-      corpus, corpusId, corpusVec, queries, queryId, queryVec,
-      k, nprobe, shortlist)
-  }
-
-  /** IVF + ASYMMETRIC BQ composed search (C154g — [[ivfBqTopKAgainstIndex]]
-    * with [[bqTopKAsymmetricAgainstIndex]]'s scorer): the coarse
-    * quantizer bounds WHICH packed codes are scored (nprobe/nlist of
-    * the corpus, id-only candidate pairs) and the float query scores
-    * each candidate's bit pattern with its own fixed-point magnitudes
-    * — the recall recovery of the asymmetric pass at the corpus bound
-    * of the IVF pass, identical index bytes to both. Candidates are
-    * [[ivfCandOf]]'s pairs from the stored cells (the probe bounds
-    * WHICH codes are scored, never how), the scorer is the single
-    * [[bqAsymScore]] definition, so with `nprobe = nlist` the result
-    * EQUALS plain [[bqTopKAsymmetric]] at the same shortlist
-    * (spec-pinned). Exact-integer scores end-to-end; same (long, long)
-    * shuffle shape as the symmetric composition. */
-  def ivfBqTopKAsymmetricAgainstIndex(centroids: DataFrame, cells: DataFrame,
-                                      stats: DataFrame, codes: DataFrame,
-                                      corpus: DataFrame, corpusId: Column, corpusVec: Column,
-                                      queries: DataFrame, queryId: Column, queryVec: Column,
-                                      k: Int, nprobe: Int, shortlist: Int,
-                                      tombstones: Option[DataFrame] = None): DataFrame = {
-    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    require(Seq("cell", "cv").forall(centroids.columns.contains),
-      s"centroid frame must carry (cell, cv); got ${centroids.columns.mkString(", ")}")
-    require(Seq("vec_id", "cell").forall(cells.columns.contains),
-      s"cells frame must carry (vec_id, cell); got ${cells.columns.mkString(", ")}")
-    require(Seq("d", "s", "n").forall(stats.columns.contains),
-      s"stats frame must carry (d, s, n); got ${stats.columns.mkString(", ")}")
-    require(Seq("vec_id", "codes").forall(codes.columns.contains),
-      s"codes frame must carry (vec_id, codes); got ${codes.columns.mkString(", ")}")
-    val dim = stats.count().toInt
-    require(dim > 0, "stats table is empty — train before searching")
-    val cvecs = centroids.select(col("cell").as("grp"), col("cv"))
-    val cand = ivfCandOf(
-      tombstoneGuarded(cells, tombstones)
-        .select(col("vec_id").as("neighbor_id"), col("cell")),
-      ivfProbes(queries, queryId, queryVec, cvecs, nprobe))
-    val scored = cand
-      .join(tombstoneGuarded(codes, tombstones)
-          .select(col("vec_id").as("neighbor_id"), col("codes")),
-        "neighbor_id")
-      .join(broadcast(bqAsymQueryFx(queries, queryId, queryVec, dim)),
-        "query_id")
-      .withColumn("approx", bqAsymScore(dim))
-    exactReRank(pqShortlist(scored, shortlist),
-      corpus, corpusId, corpusVec, queries, queryId, queryVec, k)
-  }
-
-  /** Inline IVF + asymmetric BQ top-k: train both quantizers, encode,
-    * search. */
-  def ivfBqTopKAsymmetric(corpus: DataFrame, corpusId: Column, corpusVec: Column,
-                          queries: DataFrame, queryId: Column, queryVec: Column,
-                          nlist: Int, nprobe: Int, k: Int, shortlist: Int,
-                          ivfIters: Int = 1): DataFrame = {
-    val (cents, cells) = ivfIndex(corpus, corpusId, corpusVec, nlist, ivfIters)
-    val (stats, codes) = bqIndex(corpus, corpusId, corpusVec)
-    ivfBqTopKAsymmetricAgainstIndex(cents, cells, stats, codes,
-      corpus, corpusId, corpusVec, queries, queryId, queryVec,
-      k, nprobe, shortlist)
-  }
-
-  /** IVF+PQ composed search (the FAISS-style index architecture,
-    * complete): the coarse quantizer's probed cells bound WHICH
-    * vectors are scored, the product quantizer's codes bound WHAT is
-    * read to score them, and the exact re-rank keeps precision — at
-    * scale a query therefore touches nprobe/nlist of the corpus, reads
-    * m small integers per touched vector, and fetches full vectors
-    * only for the shortlist. Both quantizers train by the same
-    * engine-reproducible recipe, so the whole composition sits under
-    * one DuckDB oracle. Candidates come from [[ivfCandidates]]
-    * (id-only pairs); the ADC score joins codes by id and the
-    * broadcast per-query LUTs, still never reading a corpus vector. */
-  def ivfPqTopK(corpus: DataFrame, corpusId: Column, corpusVec: Column,
-                queries: DataFrame, queryId: Column, queryVec: Column,
-                nlist: Int, nprobe: Int, m: Int, ksub: Int, k: Int,
-                shortlist: Int, ivfIters: Int = 1, pqIters: Int = 1): DataFrame = {
-    graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    // persisted like prototypicality's cells: ivfCandidates consumes
-    // the assignment twice (centroid agg + re-assignment) — without
-    // the boundary the Lloyd train pipeline executes twice
-    val cells = ivfTrainCells(corpus, corpusId, corpusVec, nlist, ivfIters)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // a minimal private projection: joining the trained cells onto the
-    // caller's frame directly would collide if it already carries a
-    // `cell` column (e.g. an ivfTopK-style pre-indexed corpus)
-    val indexed = corpus.select(corpusId.as("__ivf_id"), corpusVec.as("__ivf_v"))
-      .join(cells.withColumnsRenamed(
-        Map("vec_id" -> "__ivf_id", "cell" -> "__ivf_cell")), "__ivf_id")
-    val cand = ivfCandidates(indexed, col("__ivf_id"), col("__ivf_v"),
-      col("__ivf_cell"), queries, queryId, queryVec, nprobe)
-    val (books, codes) = pqTrainEncode(corpus, corpusId, corpusVec, m, ksub, pqIters)
-    val scored = cand
-      .join(codes, col("neighbor_id") === codes("vec_id"))
-      .join(broadcast(pqLuts(queries, queryId, queryVec, m, ksub, books)), "query_id")
-      .crossJoin(broadcast(pqN2Row(books, m, ksub)))
-      .select(col("query_id"), col("neighbor_id"), pqAdcScore(m, ksub).as("approx"))
-    exactReRank(pqShortlist(scored, shortlist),
-      corpus, corpusId, corpusVec, queries, queryId, queryVec, k)
-  }
-
   /** IVF+PQ with RESIDUAL encoding (C42) — the classical IVFADC recipe
     * (Jégou et al. 2011, "Product Quantization for Nearest Neighbor
     * Search"): the product quantizer encodes `v − µ_cell(v)` instead of
@@ -1754,7 +1453,7 @@ object Similarity {
     // corpus-sized assignment still needs a cache pin
     val acell = cc0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val resid = residualFrame(corpus, corpusId, corpusVec, acell, cvecs)
-    val (books, codes) = pqTrainEncode(resid, col("rid"), col("r"), m, ksub, pqIters)
+    val (books, codes) = Codec.PQ(m, ksub, pqIters).build(resid, col("rid"), col("r"))
     (cvecs, acell, books, codes)
   }
 
@@ -1809,11 +1508,11 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         ((col("qc") + pqFold(col("lutd"), m, ksub))
           / sqrt(col("mu2") + pqFold(col("t2arr"), m, ksub))).as("approx"))
-    exactReRank(pqShortlist(scored, shortlist),
+    exactReRank(approxShortlist(scored, shortlist),
       corpus, corpusId, corpusVec, queries, queryId, queryVec, k)
   }
 
-  /** Persistable IVFADC index — the composed [[ivfIndex]]+[[pqIndex]]
+  /** Persistable IVFADC index — the composed [[ivfIndex]]+[[Codec.PQ]]
     * story with residual encoding, i.e. the complete billion-scale
     * search state: `(centroids (cell, cv), cells (vec_id, cell),
     * codebook (sub, code, cv), codes (vec_id, codes))` with
@@ -1832,7 +1531,7 @@ object Similarity {
       ivfPqResBuild(corpus, corpusId, corpusVec, nlist, m, ksub, ivfIters, pqIters)
     (cvecs.select(col("grp").as("cell"), col("cv")),
       acell.select(col("neighbor_id").as("vec_id"), col("cell")),
-      books, narrowCodes(codes, ksub))
+      books, codes)
   }
 
   /** Incremental IVFADC append (the C33/C1 increment discipline for the
@@ -1843,7 +1542,7 @@ object Similarity {
     * `(cells (vec_id, cell), codes (vec_id, codes))` rows to UNION
     * onto the stored index tables. Both stages are the build path's
     * own per-row functions ([[assignCells]], [[residualFrame]],
-    * [[pqEncode]]) — appending the index's own rows reproduces its
+    * [[Codec.PQ]]'s encode) — appending the index's own rows reproduces its
     * tables exactly (spec-pinned), so a grown index is
     * indistinguishable from one whose encode pass saw the increment.
     * At 100 TB this is the daily-ingest shape: the increment pays
@@ -1874,19 +1573,17 @@ object Similarity {
                                           m: Int, ksub: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     graft.GraftExtensions.ensureRegistered(increment.sparkSession)
-    require(Seq("cell", "cv").forall(centroids.columns.contains),
-      s"centroid frame must carry (cell, cv); got ${centroids.columns.mkString(", ")}")
-    require(Seq("sub", "code", "cv").forall(books.columns.contains),
-      s"codebook frame must carry (sub, code, cv); got ${books.columns.mkString(", ")}")
+    requireCols(centroids, "centroid", "cell", "cv")
+    requireCols(books, "codebook", "sub", "code", "cv")
     val cvecs = centroids.select(col("cell").as("grp"), col("cv"))
     val c = increment.select(incId.as("neighbor_id"),
       incVec.cast("array<double>").as("v"))
     val cells = assignCells(c, cvecs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val resid = residualFrame(increment, incId, incVec, cells, cvecs)
-    val codes = pqEncode(resid, col("rid"), col("r"), m, books)
+    val codes = Codec.PQ(m, ksub).encode(resid, col("rid"), col("r"), books)
     (cells.select(col("neighbor_id").as("vec_id"), col("cell")),
-      narrowCodes(codes, ksub), cells)
+      codes, cells)
   }
 
   /** The DELETE half of every keyed ANN artifact ([[ivfPqResAppend]]'s
@@ -1931,10 +1628,8 @@ object Similarity {
     * and codebooks stay frozen per the [[indexRemove]] contract. */
   def ivfPqResRemove(cells: DataFrame, codes: DataFrame,
                      ids: DataFrame): (DataFrame, DataFrame) = {
-    require(Seq("vec_id", "cell").forall(cells.columns.contains),
-      s"cells frame must carry (vec_id, cell); got ${cells.columns.mkString(", ")}")
-    require(Seq("vec_id", "codes").forall(codes.columns.contains),
-      s"codes frame must carry (vec_id, codes); got ${codes.columns.mkString(", ")}")
+    requireCols(cells, "cells", "vec_id", "cell")
+    requireCols(codes, "codes", "vec_id", "codes")
     (indexRemove(cells, ids), indexRemove(codes, ids))
   }
 
@@ -2002,14 +1697,10 @@ object Similarity {
                                shortlist: Int,
                                tombstones: Option[DataFrame] = None): DataFrame = {
     graft.GraftExtensions.ensureRegistered(corpus.sparkSession)
-    require(Seq("cell", "cv").forall(centroids.columns.contains),
-      s"centroid frame must carry (cell, cv); got ${centroids.columns.mkString(", ")}")
-    require(Seq("vec_id", "cell").forall(cells.columns.contains),
-      s"cells frame must carry (vec_id, cell); got ${cells.columns.mkString(", ")}")
-    require(Seq("sub", "code", "cv").forall(books.columns.contains),
-      s"codebook frame must carry (sub, code, cv); got ${books.columns.mkString(", ")}")
-    require(Seq("vec_id", "codes").forall(codes.columns.contains),
-      s"codes frame must carry (vec_id, codes); got ${codes.columns.mkString(", ")}")
+    requireCols(centroids, "centroid", "cell", "cv")
+    requireCols(cells, "cells", "vec_id", "cell")
+    requireCols(books, "codebook", "sub", "code", "cv")
+    requireCols(codes, "codes", "vec_id", "codes")
     val cvecs = centroids.select(col("cell").as("grp"), col("cv"))
     // both keyed artifacts guarded in lockstep (the ivfPqResRemove
     // contract): a tombstoned id neither seeds a candidate nor scores

@@ -2,12 +2,30 @@ package graft.operators
 
 import graft.Q
 import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.multimodal.Media
 
 /** Oracle-backed similarity-search and multimodal queries
   * (SURVEY.md §2.C6-C7, C12). */
 object SimilarityQueries {
+  import Similarity.Codec
+
+  /** Build `codec`'s index over the embeddings and search `qset`
+    * against it — flat, or bounded by an [[Similarity.ivfIndex]] of
+    * `nlist` cells probed `nprobe` per query when `ivf = Some((nlist,
+    * nprobe))`. */
+  private def codecTopK(e: DataFrame, qset: DataFrame, codec: Codec,
+                        k: Int, shortlist: Int,
+                        ivf: Option[(Int, Int)] = None): DataFrame = {
+    val coarse = ivf.map { case (nlist, nprobe) =>
+      val (cents, cells) = Similarity.ivfIndex(e, col("vec_id"), col("embedding"), nlist)
+      Similarity.Ivf(cents, cells, nprobe)
+    }
+    val (stats, codes) = Similarity.annIndex(codec, e, col("vec_id"), col("embedding"))
+    Similarity.annSearch(codec, stats, codes, e, col("vec_id"), col("embedding"),
+      qset, col("vec_id"), col("embedding"), k, shortlist, coarse)
+  }
 
   /** Query set: vec_id < 10 against the full corpus (self excluded). */
   val qBrute = Q(
@@ -601,10 +619,8 @@ object SimilarityQueries {
     "qann_pq",
     (s, dir) => {
       val e = Tables(s, dir).embeddings
-      Similarity.pqTopK(
-          e, col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
-          m = 4, ksub = 8, k = 5, shortlist = 50, iters = 1)
+      codecTopK(e, e.filter(col("vec_id") < 10), Codec.PQ(m = 4, ksub = 8, iters = 1),
+          k = 5, shortlist = 50)
         .transform(Q.orderedDump(_, col("query_id"), col("rank")))
     },
     Some(pqOracleSql(m = 4, ksub = 8, dsub = 16, k = 5, shortlist = 50, nq = 10)))
@@ -618,10 +634,8 @@ object SimilarityQueries {
     "qann_pq2",
     (s, dir) => {
       val e = Tables(s, dir).embeddings
-      Similarity.pqTopK(
-          e, col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
-          m = 4, ksub = 8, k = 5, shortlist = 50, iters = 2)
+      codecTopK(e, e.filter(col("vec_id") < 10), Codec.PQ(m = 4, ksub = 8, iters = 2),
+          k = 5, shortlist = 50)
         .transform(Q.orderedDump(_, col("query_id"), col("rank")))
     },
     Some(pqOracleSql(m = 4, ksub = 8, dsub = 16, k = 5, shortlist = 50,
@@ -636,11 +650,8 @@ object SimilarityQueries {
     "qann_ivfpq",
     (s, dir) => {
       val e = Tables(s, dir).embeddings
-      Similarity.ivfPqTopK(
-          e, col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
-          nlist = 10, nprobe = 3, m = 4, ksub = 8, k = 5, shortlist = 30,
-          ivfIters = 1, pqIters = 1)
+      codecTopK(e, e.filter(col("vec_id") < 10), Codec.PQ(m = 4, ksub = 8),
+          k = 5, shortlist = 30, ivf = Some((10, 3)))
         .transform(Q.orderedDump(_, col("query_id"), col("rank")))
     },
     Some(s"""
@@ -1217,10 +1228,7 @@ object SimilarityQueries {
     "qann_sq",
     (s, dir) => {
       val e = Tables(s, dir).embeddings
-      Similarity.sqTopK(
-          e, col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
-          k = 5, shortlist = 50)
+      codecTopK(e, e.filter(col("vec_id") < 10), Codec.SQ8, k = 5, shortlist = 50)
         .transform(Q.orderedDump(_, col("query_id"), col("rank")))
     },
     Some("""
@@ -1264,7 +1272,7 @@ object SimilarityQueries {
     * formulation. */
   /** The C154 threshold/bit/pack chain as CTEs over an existing
     * `e(vec_id, v)` — fx (fixed-point components, NULL/empty vectors
-    * excluded: the bqEncode contract), st (per-dim exact-integer
+    * excluded: the BQ encode contract), st (per-dim exact-integer
     * threshold sums), sr (1-row dense arrays), bits (vfx·n > s), words
     * (32-bit pack fold). ONE definition shared by the linear-scan
     * oracle ([[bqOracleSql]]) and the IVF-bounded composition
@@ -1318,10 +1326,7 @@ object SimilarityQueries {
     "qann_bq",
     (s, dir) => {
       val e = Tables(s, dir).embeddings
-      Similarity.bqTopK(
-          e, col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
-          k = 5, shortlist = 50)
+      codecTopK(e, e.filter(col("vec_id") < 10), Codec.BQ, k = 5, shortlist = 50)
         .transform(Q.orderedDump(_, col("query_id"), col("rank")))
     },
     Some(bqOracleSql(50)))
@@ -1338,9 +1343,7 @@ object SimilarityQueries {
       val qset = e.filter(col("vec_id") < 10)
       val truth = Similarity.bruteTopK(
         e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"), k = 5)
-      val res = Similarity.bqTopK(
-        e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"),
-        k = 5, shortlist = 20)
+      val res = codecTopK(e, qset, Codec.BQ, k = 5, shortlist = 20)
       Similarity.annRecall(truth, res).transform(Q.orderedDump(_, col("query_id")))
     },
     Some(s"""
@@ -1383,11 +1386,7 @@ object SimilarityQueries {
     "qann_bq_asym",
     (s, dir) => {
       val e = Tables(s, dir).embeddings
-      val (stats, codes) = Similarity.bqIndex(e, col("vec_id"), col("embedding"))
-      Similarity.bqTopKAsymmetricAgainstIndex(stats, codes,
-          e, col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
-          k = 5, shortlist = 20)
+      codecTopK(e, e.filter(col("vec_id") < 10), Codec.AsymBQ, k = 5, shortlist = 20)
         .transform(Q.orderedDump(_, col("query_id"), col("rank")))
     },
     Some(bqAsymOracleSql(k = 5, shortlist = 20)))
@@ -1396,7 +1395,7 @@ object SimilarityQueries {
     * probe → cand, the qann_ivf_trained recipe verbatim) feeding the
     * proven BQ word chain's Hamming rank — the composition is a JOIN
     * of the two green oracles, exactly mirroring the Spark side where
-    * ivfBqTopKAgainstIndex joins ivfCandOf's pairs to bqHammingNeg.
+    * annSearch joins the IVF candidate pairs to BQ's Hamming score.
     * `hscored` avoids the `scored` name reRankSql owns. */
   private def ivfBqOracleSql(k: Int, nprobe: Int, shortlist: Int): String = s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
@@ -1428,10 +1427,8 @@ object SimilarityQueries {
     "qann_ivf_bq",
     (s, dir) => {
       val e = Tables(s, dir).embeddings
-      Similarity.ivfBqTopK(
-          e, col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
-          nlist = 10, nprobe = 2, k = 5, shortlist = 20)
+      codecTopK(e, e.filter(col("vec_id") < 10), Codec.BQ, k = 5, shortlist = 20,
+          ivf = Some((10, 2)))
         .transform(Q.orderedDump(_, col("query_id"), col("rank")))
     },
     Some(ivfBqOracleSql(k = 5, nprobe = 2, shortlist = 20)))
@@ -1450,9 +1447,7 @@ object SimilarityQueries {
       val qset = e.filter(col("vec_id") < 10)
       val truth = Similarity.bruteTopK(
         e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"), k = 5)
-      val res = Similarity.ivfBqTopK(
-        e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"),
-        nlist = 10, nprobe = 2, k = 5, shortlist = 20)
+      val res = codecTopK(e, qset, Codec.BQ, k = 5, shortlist = 20, ivf = Some((10, 2)))
       Similarity.annRecall(truth, res).transform(Q.orderedDump(_, col("query_id")))
     },
     Some(s"""
@@ -1478,7 +1473,7 @@ object SimilarityQueries {
     "qann_bq_bitcounts",
     (s, dir) => {
       val e = Tables(s, dir).embeddings
-      val stats = Similarity.bqTrain(e, col("vec_id"), col("embedding"))
+      val stats = Codec.BQ.train(e, col("vec_id"), col("embedding"))
       Similarity.bqBitCounts(e, col("embedding"), stats)
         .orderBy(col("bucket"))
     },
@@ -1518,7 +1513,7 @@ object SimilarityQueries {
     * qann_bq_asym scorer CTE over the candidate pairs, scored from the
     * `bits` CTE the words pack verbatim) — the composition is again a
     * JOIN of two green oracles, exactly mirroring the Spark side where
-    * ivfBqTopKAsymmetricAgainstIndex joins ivfCandOf's pairs to the
+    * annSearch joins the IVF candidate pairs to AsymBQ's
     * bqAsymScore sign-sum. */
   private def ivfBqAsymOracleSql(k: Int, nprobe: Int, shortlist: Int): String = s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
@@ -1551,10 +1546,8 @@ object SimilarityQueries {
     "qann_ivf_bq_asym",
     (s, dir) => {
       val e = Tables(s, dir).embeddings
-      Similarity.ivfBqTopKAsymmetric(
-          e, col("vec_id"), col("embedding"),
-          e.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
-          nlist = 10, nprobe = 2, k = 5, shortlist = 20)
+      codecTopK(e, e.filter(col("vec_id") < 10), Codec.AsymBQ, k = 5, shortlist = 20,
+          ivf = Some((10, 2)))
         .transform(Q.orderedDump(_, col("query_id"), col("rank")))
     },
     Some(ivfBqAsymOracleSql(k = 5, nprobe = 2, shortlist = 20)))
@@ -1572,9 +1565,8 @@ object SimilarityQueries {
       val qset = e.filter(col("vec_id") < 10)
       val truth = Similarity.bruteTopK(
         e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"), k = 5)
-      val res = Similarity.ivfBqTopKAsymmetric(
-        e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"),
-        nlist = 10, nprobe = 2, k = 5, shortlist = 20)
+      val res = codecTopK(e, qset, Codec.AsymBQ, k = 5, shortlist = 20,
+        ivf = Some((10, 2)))
       Similarity.annRecall(truth, res).transform(Q.orderedDump(_, col("query_id")))
     },
     Some(s"""

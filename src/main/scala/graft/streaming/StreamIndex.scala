@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.operators.Similarity.Codec
 
 /** Streaming index maintenance — the INGEST path of the pay-once ANN
   * index (SURVEY.md §2.C154, streaming side): embeddings arrive
@@ -55,7 +56,7 @@ object StreamIndex {
     *
     * Contract stack (each leg proven elsewhere, composed here):
     *  - Encoding runs against the FROZEN stats table at `statsDir` —
-    *    `bqEncode` under frozen stats IS the append path (the BQ
+    *    `Codec.BQ.encode` under frozen stats IS the append path (the BQ
     *    append-parity law: re-encoding existing rows reproduces their
     *    codes byte-for-byte, and a grown table under a full shortlist
     *    equals bruteTopK over the union).
@@ -65,7 +66,7 @@ object StreamIndex {
     *    between the write and the commit log — replaces its own
     *    output instead of duplicating codes.
     *  - Readers take `spark.read.parquet(codesDir)` as the
-    *    `(vec_id, codes)` table of `bqTopKAgainstIndex`; the
+    *    `(vec_id, codes)` table of `annSearch(Codec.BQ, …)`; the
     *    discovered `batch` partition column is dropped by selection.
     *
     * Scale shape: per batch, one codegen map pass over the new rows
@@ -135,7 +136,7 @@ object StreamIndex {
         .option("checkpointLocation", checkpointDir)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Similarity.bqEncode(guard(batch), col(id), col(vec), stats)
+          Codec.BQ.encode(guard(batch), col(id), col(vec), stats)
             .write.mode("overwrite")
             .parquet(codesDir.stripSuffix("/") + s"/batch=$batchId")
         }
@@ -230,7 +231,7 @@ object StreamIndex {
           val pinned = guard(batch).persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
-            graft.operators.Similarity.bqEncode(pinned, col(id), col(vec), stats)
+            Codec.BQ.encode(pinned, col(id), col(vec), stats)
               .write.mode("overwrite")
               .parquet(codesDir.stripSuffix("/") + s"/batch=$batchId")
             graft.operators.Similarity
@@ -438,43 +439,12 @@ object StreamIndex {
                            schema: StructType, id: String, vec: String,
                            checkpointDir: String, centroidsDir: String,
                            countsDir: String, alarmsDir: String,
-                           refCountsDir: String): StreamingQuery = {
-    graft.GraftExtensions.ensureRegistered(spark)
-    val cents = spark.read.parquet(centroidsDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    unpersistOnTermination(spark,
-      DropStats.startBucketMonitorOver(spark,
-        spark.readStream.schema(schema).parquet(inputDir),
-        checkpointDir, countsDir, alarmsDir)(
-        batch => graft.operators.Similarity
-          .ivfCellBuckets(batch, col(id), col(vec), cents)) {
-        counts =>
-          val ref = counts.sparkSession.read.parquet(refCountsDir)
-            .select(col("grp").as("source"), col("bucket"), col("n"))
-          graft.operators.Profile.psiOverCounts(ref,
-              counts.select(col("grp").as("source"), col("bucket"), col("n")))
-            .select(col("source").as("grp"), col("n_buckets"), col("psi"))
-      },
-      Seq(cents))
-  }
+                           refCountsDir: String): StreamingQuery =
+    startDriftMonitor(spark, inputDir, schema, checkpointDir, centroidsDir,
+        countsDir, alarmsDir, refCountsDir) { (batch, cents) =>
+      graft.operators.Similarity.ivfCellBuckets(batch, col(id), col(vec), cents)
+    }
 
-  /** Streaming BQ drift monitor (C154h — the retrain trigger
-    * [[startBqIndexAppend]]'s scaladoc prescribes): tail the SAME
-    * embedding stream, maintain per-dimension bit-population partial
-    * counts under the frozen stats (bucket = 2·d + bit, the
-    * [[graft.operators.Similarity.bqBitBuckets]] shape — exactly the
-    * bit rule the stored words pack), and after every micro-batch
-    * recompute PSI against the TRAINING corpus's pinned bit
-    * populations at `refCountsDir`
-    * (`Similarity.bqBitCounts(trainingCorpus, vec, stats)` written to
-    * parquet). Read the alarms with the C152 folklore (< 0.1 stable,
-    * 0.1–0.25 investigate, > 0.25 moved → retrain+re-encode). Rides
-    * [[DropStats]]'s partial-count plumbing verbatim, so replay
-    * idempotence, staged alarm renames, and the batch-twin law
-    * (output after N files ≡ `Profile.psiOverCounts(ref,
-    * bqBitCounts(those N files))`) all carry over; the
-    * smoothing/micro-nat tree is psiOverCounts' single definition, so
-    * the monitor inherits the oracle-gated exactness. */
   /** The tombstone guard's documented endgame as ONE named primitive
     * (remove → compact → publish): read each streamed `batch=<id>`
     * artifact dir, anti-join the tombstone list out of it (the same
@@ -609,39 +579,60 @@ object StreamIndex {
                                  source: String, checkpointDir: String,
                                  mergesDir: String, countsDir: String,
                                  alarmsDir: String,
-                                 refCountsDir: String): StreamingQuery = {
-    graft.GraftExtensions.ensureRegistered(spark)
-    val merges = spark.read.parquet(mergesDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    unpersistOnTermination(spark,
-      DropStats.startBucketMonitorOver(spark,
-        spark.readStream.schema(schema).parquet(inputDir),
-        checkpointDir, countsDir, alarmsDir)(
-        batch => graft.functions.Keywords.fertilityBuckets(
-          batch, col(id), col(text), col(source), merges)) {
-        counts =>
-          val ref = counts.sparkSession.read.parquet(refCountsDir)
-            .select(col("grp").as("source"), col("bucket"), col("n"))
-          graft.operators.Profile.psiOverCounts(ref,
-              counts.select(col("grp").as("source"), col("bucket"), col("n")))
-            .select(col("source").as("grp"), col("n_buckets"), col("psi"))
-      },
-      Seq(merges))
-  }
+                                 refCountsDir: String): StreamingQuery =
+    startDriftMonitor(spark, inputDir, schema, checkpointDir, mergesDir,
+        countsDir, alarmsDir, refCountsDir) { (batch, merges) =>
+      graft.functions.Keywords.fertilityBuckets(
+        batch, col(id), col(text), col(source), merges)
+    }
 
+  /** Streaming BQ drift monitor (C154h — the retrain trigger
+    * [[startBqIndexAppend]]'s scaladoc prescribes): tail the SAME
+    * embedding stream, maintain per-dimension bit-population partial
+    * counts under the frozen stats (bucket = 2·d + bit, the
+    * [[graft.operators.Similarity.bqBitBuckets]] shape — exactly the
+    * bit rule the stored words pack), and after every micro-batch
+    * recompute PSI against the TRAINING corpus's pinned bit
+    * populations at `refCountsDir`
+    * (`Similarity.bqBitCounts(trainingCorpus, vec, stats)` written to
+    * parquet). Read the alarms with the C152 folklore (< 0.1 stable,
+    * 0.1–0.25 investigate, > 0.25 moved → retrain+re-encode). Rides
+    * [[DropStats]]'s partial-count plumbing verbatim, so replay
+    * idempotence, staged alarm renames, and the batch-twin law
+    * (output after N files ≡ `Profile.psiOverCounts(ref,
+    * bqBitCounts(those N files))`) all carry over; the
+    * smoothing/micro-nat tree is psiOverCounts' single definition, so
+    * the monitor inherits the oracle-gated exactness. */
   def startBqDriftMonitor(spark: SparkSession, inputDir: String,
                           schema: StructType, vec: String,
                           checkpointDir: String, statsDir: String,
                           countsDir: String, alarmsDir: String,
-                          refCountsDir: String): StreamingQuery = {
+                          refCountsDir: String): StreamingQuery =
+    startDriftMonitor(spark, inputDir, schema, checkpointDir, statsDir,
+        countsDir, alarmsDir, refCountsDir) { (batch, stats) =>
+      graft.operators.Similarity.bqBitBuckets(batch, col(vec), stats)
+    }
+
+  /** The one drift-monitor shape behind the three above: pin the frozen
+    * artifact at `artifactDir` once per query start, bucket every
+    * micro-batch against it with `buckets` (the `(grp, bucket)` rows
+    * [[DropStats]]' partial-count plumbing accumulates), and after
+    * every micro-batch write `(grp, n_buckets, psi)` per grp — PSI of
+    * the accumulated counts against the reference counts at
+    * `refCountsDir` ([[graft.operators.Profile.psiOverCounts]]'
+    * single definition). The pin is released on termination. */
+  private def startDriftMonitor(spark: SparkSession, inputDir: String,
+                                schema: StructType, checkpointDir: String,
+                                artifactDir: String, countsDir: String,
+                                alarmsDir: String, refCountsDir: String)(
+      buckets: (DataFrame, DataFrame) => DataFrame): StreamingQuery = {
     graft.GraftExtensions.ensureRegistered(spark)
-    val stats = spark.read.parquet(statsDir)
+    val artifact = spark.read.parquet(artifactDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     unpersistOnTermination(spark,
       DropStats.startBucketMonitorOver(spark,
         spark.readStream.schema(schema).parquet(inputDir),
-        checkpointDir, countsDir, alarmsDir)(
-        batch => graft.operators.Similarity.bqBitBuckets(batch, col(vec), stats)) {
+        checkpointDir, countsDir, alarmsDir)(buckets(_, artifact)) {
         counts =>
           val ref = counts.sparkSession.read.parquet(refCountsDir)
             .select(col("grp").as("source"), col("bucket"), col("n"))
@@ -649,6 +640,6 @@ object StreamIndex {
               counts.select(col("grp").as("source"), col("bucket"), col("n")))
             .select(col("source").as("grp"), col("n_buckets"), col("psi"))
       },
-      Seq(stats))
+      Seq(artifact))
   }
 }

@@ -97,8 +97,8 @@ class NullSafetySpec extends AnyFunSuite {
       graft.operators.Curation.packShards(docs, col("doc_id"), lit(1L), 100L),
       graft.operators.Similarity.ivfTrainCells(
         embs, col("vec_id"), col("embedding"), nlist = 4, iters = 1),
-      graft.operators.Similarity.pqTrainCodebooks(
-        embs, col("vec_id"), col("embedding"), m = 2, ksub = 4, iters = 1),
+      graft.operators.Similarity.Codec.PQ(m = 2, ksub = 4).train(
+        embs, col("vec_id"), col("embedding")),
       graft.operators.Similarity.bruteTopK(embs, col("vec_id"), col("embedding"),
         embs, col("vec_id"), col("embedding"), 2),
       graft.operators.Curation.corpusDiff(docs, docs, col("doc_id"), col("text")),

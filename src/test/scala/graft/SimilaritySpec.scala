@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.operators.Similarity.{Codec, Ivf}
 import graft.multimodal.Media
 import graft.sources.Tables
 
@@ -72,24 +73,6 @@ class SimilaritySpec extends AnyFunSuite {
   // deterministic: FNV-seeded train), pinned at measured − 0.1
   private val RecallFloorPq = 0.38
 
-  test("pqTopK with a full-corpus shortlist equals bruteTopK exactly") {
-    // the ADC stage only selects CANDIDATES; the re-rank is exact — so
-    // with shortlist >= |corpus| - 1 the approximation cannot change
-    // the answer, and any difference is a bug in the encode/score
-    // plumbing, not quantization loss
-    val e = Tables(spark, sf).embeddings
-    val q = e.filter(col("vec_id") < 10)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    val brute = rows(Similarity.bruteTopK(e, col("vec_id"), col("embedding"),
-      q, col("vec_id"), col("embedding"), 5))
-    val pq = rows(Similarity.pqTopK(e, col("vec_id"), col("embedding"),
-      q, col("vec_id"), col("embedding"),
-      m = 4, ksub = 8, k = 5, shortlist = 600))
-    assert(pq == brute, s"pq ${pq.take(5)} vs brute ${brute.take(5)}")
-  }
-
   test("pqTopK recall@5 rises with the shortlist and holds the pinned floor") {
     val e = Tables(spark, sf).embeddings
     val q = e.filter(col("vec_id") < 10)
@@ -98,10 +81,12 @@ class SimilaritySpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val brute = pairs(Similarity.bruteTopK(e, col("vec_id"), col("embedding"),
       q, col("vec_id"), col("embedding"), 5))
+    val pqCodec = Codec.PQ(m = 4, ksub = 8)
+    val (books, codes) = Similarity.annIndex(pqCodec, e, col("vec_id"), col("embedding"))
     def recallAt(shortlist: Int): Double = {
-      val pq = pairs(Similarity.pqTopK(e, col("vec_id"), col("embedding"),
-        q, col("vec_id"), col("embedding"),
-        m = 4, ksub = 8, k = 5, shortlist = shortlist))
+      val pq = pairs(Similarity.annSearch(pqCodec, books, codes,
+        e, col("vec_id"), col("embedding"), q, col("vec_id"), col("embedding"),
+        k = 5, shortlist = shortlist))
       (brute & pq).size.toDouble / brute.size
     }
     val (r50, r100) = (recallAt(50), recallAt(100))
@@ -110,6 +95,19 @@ class SimilaritySpec extends AnyFunSuite {
     // a larger shortlist's candidates are a superset, and the re-rank
     // is exact — recall is monotone in the shortlist BY CONSTRUCTION
     assert(r100 >= r50, s"monotonicity broken: $r100 < $r50")
+  }
+
+  /** PQ search bounded by a 10-cell trained IVF index probed 3 cells
+    * per query — the qann_ivfpq composition. */
+  private def ivfPqSearch(e: org.apache.spark.sql.DataFrame,
+                          q: org.apache.spark.sql.DataFrame,
+                          shortlist: Int): org.apache.spark.sql.DataFrame = {
+    val (cents, cells) = Similarity.ivfIndex(e, col("vec_id"), col("embedding"), nlist = 10)
+    val pq = Codec.PQ(m = 4, ksub = 8)
+    val (books, codes) = Similarity.annIndex(pq, e, col("vec_id"), col("embedding"))
+    Similarity.annSearch(pq, books, codes, e, col("vec_id"), col("embedding"),
+      q, col("vec_id"), col("embedding"), k = 5, shortlist = shortlist,
+      ivf = Some(Ivf(cents, cells, nprobe = 3)))
   }
 
   test("ivfPqTopK with a full shortlist equals ivfTopK over the same trained cells") {
@@ -128,9 +126,7 @@ class SimilaritySpec extends AnyFunSuite {
     val ivf = rows(Similarity.ivfTopK(indexed, col("vec_id"), col("embedding"),
       col("cell"), indexed.filter(col("vec_id") < 10), col("vec_id"),
       col("embedding"), k = 5, nprobe = 3))
-    val ivfpq = rows(Similarity.ivfPqTopK(e, col("vec_id"), col("embedding"),
-      q, col("vec_id"), col("embedding"),
-      nlist = 10, nprobe = 3, m = 4, ksub = 8, k = 5, shortlist = 600))
+    val ivfpq = rows(ivfPqSearch(e, q, shortlist = 600))
     assert(ivfpq == ivf, s"ivfpq ${ivfpq.take(5)} vs ivf ${ivf.take(5)}")
 
     // realistic shortlist: the ADC ordering now DECIDES which probed
@@ -141,10 +137,7 @@ class SimilaritySpec extends AnyFunSuite {
     // shortlist by construction (superset candidates, exact re-rank).
     val ivfSet = ivf.map(r => (r._1, r._2)).toSet
     def recallAt(shortlist: Int): Double = {
-      val got = rows(Similarity.ivfPqTopK(e, col("vec_id"), col("embedding"),
-        q, col("vec_id"), col("embedding"),
-        nlist = 10, nprobe = 3, m = 4, ksub = 8, k = 5, shortlist = shortlist))
-        .map(r => (r._1, r._2)).toSet
+      val got = rows(ivfPqSearch(e, q, shortlist)).map(r => (r._1, r._2)).toSet
       (ivfSet & got).size.toDouble / ivfSet.size
     }
     val (r20, r60) = (recallAt(20), recallAt(60))
@@ -159,9 +152,11 @@ class SimilaritySpec extends AnyFunSuite {
     // a hard error at execution
     val e = Tables(spark, sf).embeddings
     intercept[Exception] {
-      Similarity.pqTopK(e, col("vec_id"), col("embedding"),
+      val pq = Codec.PQ(m = 5, ksub = 8)
+      val (books, codes) = Similarity.annIndex(pq, e, col("vec_id"), col("embedding"))
+      Similarity.annSearch(pq, books, codes, e, col("vec_id"), col("embedding"),
         e.filter(col("vec_id") < 3), col("vec_id"), col("embedding"),
-        m = 5, ksub = 8, k = 3, shortlist = 10).count()
+        k = 3, shortlist = 10).count()
     }
   }
 
@@ -193,43 +188,10 @@ class SimilaritySpec extends AnyFunSuite {
     def recallOf(got: Seq[(Long, Long, Long, Double)]): Double =
       (ivfSet & got.map(r => (r._1, r._2)).toSet).size.toDouble / ivfSet.size
     val res20 = recallOf(resAt(20))
-    val plain20 = recallOf(rows(Similarity.ivfPqTopK(e, col("vec_id"), col("embedding"),
-      q, col("vec_id"), col("embedding"),
-      nlist = 10, nprobe = 3, m = 4, ksub = 8, k = 5, shortlist = 20)))
+    val plain20 = recallOf(rows(ivfPqSearch(e, q, shortlist = 20)))
     info(s"measured recall@5 at shortlist=20: residual $res20 vs raw-vector $plain20")
     assert(res20 >= plain20,
       s"residual encoding lost recall: $res20 < $plain20 at equal budget")
-  }
-
-  test("PQ search from a parquet index equals the inline path; codes are bytes") {
-    // the minhashIndex discipline for ANN: materialize (codebook,
-    // codes), read back, search WITHOUT retraining — pair-for-pair
-    // equal to the train-inline path (deterministic FNV-seeded train,
-    // parquet round-trips doubles exactly); and the codes column is
-    // actually narrow (array<tinyint> at ksub=8), or the ~32×
-    // compression claim would be fiction
-    val e = Tables(spark, sf).embeddings
-    val q = e.filter(col("vec_id") < 10)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    val direct = rows(Similarity.pqTopK(e, col("vec_id"), col("embedding"),
-      q, col("vec_id"), col("embedding"), m = 4, ksub = 8, k = 5, shortlist = 50))
-    val (books, codes) = Similarity.pqIndex(e, col("vec_id"), col("embedding"),
-      m = 4, ksub = 8)
-    assert(codes.schema("codes").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType]
-        .elementType == org.apache.spark.sql.types.ByteType,
-      s"codes not byte-typed: ${codes.schema("codes").dataType}")
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqidx").toString
-    books.write.mode("overwrite").parquet(s"$dir/books")
-    codes.write.mode("overwrite").parquet(s"$dir/codes")
-    val viaIndex = rows(Similarity.pqTopKAgainstIndex(
-      spark.read.parquet(s"$dir/books"), spark.read.parquet(s"$dir/codes"),
-      e, col("vec_id"), col("embedding"),
-      q, col("vec_id"), col("embedding"), m = 4, ksub = 8, k = 5, shortlist = 50))
-    assert(viaIndex == direct,
-      s"index path ${viaIndex.take(3)} vs inline ${direct.take(3)}")
   }
 
   test("IVF search from a parquet index equals the inline path") {
@@ -444,47 +406,7 @@ class SimilaritySpec extends AnyFunSuite {
         e, col("vec_id"), col("embedding"), q, col("vec_id"), col("embedding"),
         k = 5, nprobe = 3)),
       "ivf")
-    // BQ symmetric + asymmetric: the codes table is the streamed artifact
-    val (stats, bqCodes) = Similarity.bqIndex(e, col("vec_id"), col("embedding"))
-    assertLaw(
-      rows(Similarity.bqTopKAgainstIndex(stats, bqCodes,
-        e, col("vec_id"), col("embedding"), q, col("vec_id"), col("embedding"),
-        k = 5, shortlist = 30, tombstones = Some(tsDup))),
-      rows(Similarity.bqTopKAgainstIndex(stats,
-        Similarity.indexRemove(bqCodes, ts),
-        e, col("vec_id"), col("embedding"), q, col("vec_id"), col("embedding"),
-        k = 5, shortlist = 30)),
-      "bq")
-    assertLaw(
-      rows(Similarity.bqTopKAsymmetricAgainstIndex(stats, bqCodes,
-        e, col("vec_id"), col("embedding"), q, col("vec_id"), col("embedding"),
-        k = 5, shortlist = 30, tombstones = Some(tsDup))),
-      rows(Similarity.bqTopKAsymmetricAgainstIndex(stats,
-        Similarity.indexRemove(bqCodes, ts),
-        e, col("vec_id"), col("embedding"), q, col("vec_id"), col("embedding"),
-        k = 5, shortlist = 30)),
-      "bq_asym")
-    // composed IVF+BQ, both scorers: cells AND codes guarded in lockstep
-    assertLaw(
-      rows(Similarity.ivfBqTopKAgainstIndex(icents, icells, stats, bqCodes,
-        e, col("vec_id"), col("embedding"), q, col("vec_id"), col("embedding"),
-        k = 5, nprobe = 3, shortlist = 30, tombstones = Some(tsDup))),
-      rows(Similarity.ivfBqTopKAgainstIndex(icents,
-        Similarity.indexRemove(icells, ts), stats,
-        Similarity.indexRemove(bqCodes, ts),
-        e, col("vec_id"), col("embedding"), q, col("vec_id"), col("embedding"),
-        k = 5, nprobe = 3, shortlist = 30)),
-      "ivf_bq")
-    assertLaw(
-      rows(Similarity.ivfBqTopKAsymmetricAgainstIndex(icents, icells, stats, bqCodes,
-        e, col("vec_id"), col("embedding"), q, col("vec_id"), col("embedding"),
-        k = 5, nprobe = 3, shortlist = 30, tombstones = Some(tsDup))),
-      rows(Similarity.ivfBqTopKAsymmetricAgainstIndex(icents,
-        Similarity.indexRemove(icells, ts), stats,
-        Similarity.indexRemove(bqCodes, ts),
-        e, col("vec_id"), col("embedding"), q, col("vec_id"), col("embedding"),
-        k = 5, nprobe = 3, shortlist = 30)),
-      "ivf_bq_asym")
+    // the four codecs, flat and IVF-bounded: the codec table below
   }
 
   test("ivfPqResUpsert with modified vectors equals the frozen-artifact rebuild-with") {
@@ -868,64 +790,196 @@ class SimilaritySpec extends AnyFunSuite {
     assert(r.getLong(4) == junk.length.toLong)
   }
 
-  test("SQ8: full shortlist equals bruteTopK; index round-trip; byte codes; constant dim") {
-    import spark.implicits._
+  // --- the codec table: SQ8, PQ, BQ and asymmetric BQ share one index
+  // build and one search, so the same four laws hold for each ----------
+
+  /** (name, codec, stored code element type). */
+  private val codecTable: Seq[(String, Codec, org.apache.spark.sql.types.DataType)] = Seq(
+    ("SQ8", Codec.SQ8, org.apache.spark.sql.types.ByteType),
+    ("PQ", Codec.PQ(m = 4, ksub = 8), org.apache.spark.sql.types.ByteType),
+    ("BQ", Codec.BQ, org.apache.spark.sql.types.LongType),
+    ("AsymBQ", Codec.AsymBQ, org.apache.spark.sql.types.LongType))
+
+  /** Shared fixtures: corpus, 10 queries, the brute truth, an 8-cell
+    * IVF index, and its parquet reload. */
+  private lazy val codecFixture = {
+    val e = Tables(spark, sf).embeddings
+    val q = e.filter(col("vec_id") < 10)
+    val (cents, cells) = Similarity.ivfIndex(e, col("vec_id"), col("embedding"), nlist = 8)
+    val dir = java.nio.file.Files.createTempDirectory("graft-codecs").toString
+    cents.write.parquet(s"$dir/cents"); cells.write.parquet(s"$dir/cells")
+    val reloaded = (spark.read.parquet(s"$dir/cents"), spark.read.parquet(s"$dir/cells"))
+    (e, q, codecRows(Similarity.bruteTopK(e, col("vec_id"), col("embedding"),
+      q, col("vec_id"), col("embedding"), k = 5)), (cents, cells), reloaded, dir)
+  }
+
+  private def codecRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Double)] =
+    df.orderBy("query_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+
+  codecTable.foreach { case (name, codec, codeType) =>
+    test(s"codec table, $name: flat = brute, full probe = flat, round-trip, tombstones") {
+      val (e, q, brute, (cents, cells), (rCents, rCells), dir) = codecFixture
+      val n = e.count().toInt
+      val (stats, codes) = Similarity.annIndex(codec, e, col("vec_id"), col("embedding"))
+      assert(codes.schema("codes").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
+        .elementType == codeType, s"$name codes stored as ${codes.schema("codes").dataType}")
+      def search(st: org.apache.spark.sql.DataFrame, co: org.apache.spark.sql.DataFrame,
+                 shortlist: Int, ivf: Option[Ivf] = None,
+                 tombstones: Option[org.apache.spark.sql.DataFrame] = None) =
+        codecRows(Similarity.annSearch(codec, st, co, e, col("vec_id"), col("embedding"),
+          q, col("vec_id"), col("embedding"), k = 5, shortlist = shortlist,
+          ivf = ivf, tombstones = tombstones))
+
+      // (1) the re-rank is exact: shortlist ≥ n − 1 sees every candidate
+      assert(search(stats, codes, n) == brute, s"$name: full-shortlist search != bruteTopK")
+
+      // (2) nprobe = nlist makes every non-self pair a candidate: the
+      // IVF bound changes WHICH codes are scored, never how
+      val flat = search(stats, codes, 25)
+      assert(search(stats, codes, 25, Some(Ivf(cents, cells, nprobe = 8))) == flat,
+        s"$name: full-probe IVF search != flat search at the same shortlist")
+
+      // (3) pay-once index: reloaded stats + codes (and cells) search
+      // identically, the decimal(38,0) BQ sums included
+      stats.write.parquet(s"$dir/$name/stats"); codes.write.parquet(s"$dir/$name/codes")
+      val (rStats, rCodes) = (spark.read.parquet(s"$dir/$name/stats"),
+        spark.read.parquet(s"$dir/$name/codes"))
+      assert(search(rStats, rCodes, 20) == search(stats, codes, 20),
+        s"$name: reloaded index searches differently")
+      assert(search(rStats, rCodes, 20, Some(Ivf(rCents, rCells, nprobe = 3))) ==
+        search(stats, codes, 20, Some(Ivf(cents, cells, nprobe = 3))),
+        s"$name: reloaded IVF-bounded index searches differently")
+
+      // (4) the tombstone guard is exactly the takedown: flat and
+      // IVF-bounded (codes AND cells guarded). The tombstone frame is
+      // int-typed, duplicated and arbitrarily named — the indexRemove
+      // cast/distinct contract must hold here too.
+      val ts = e.filter(col("vec_id") % 4 === 1).select(col("vec_id").cast("int").as("doc"))
+      val tsDup = ts.unionByName(ts)
+      val rmCodes = Similarity.indexRemove(codes, ts)
+      for (ivf <- Seq(None, Some(Ivf(cents, cells, nprobe = 3)))) {
+        val guarded = search(stats, codes, 30, ivf, Some(tsDup))
+        val removed = search(stats, rmCodes, 30,
+          ivf.map(i => i.copy(cells = Similarity.indexRemove(i.cells, ts))))
+        assert(guarded == removed && removed.nonEmpty,
+          s"$name ivf=${ivf.isDefined}: guarded ${guarded.take(3)} vs removed ${removed.take(3)}")
+        assert(!guarded.exists(_._2 % 4 == 1),
+          s"$name ivf=${ivf.isDefined}: a tombstoned id surfaced as a neighbor")
+      }
+    }
+  }
+
+  test("pqTopK with a full-corpus shortlist equals bruteTopK exactly") {
+    // the ADC stage only selects CANDIDATES; the re-rank is exact — so
+    // with shortlist >= |corpus| - 1 the approximation cannot change
+    // the answer, whatever the corpus size beyond n
+    val (e, q, brute, _, _, _) = codecFixture
+    val (books, codes) = Similarity.annIndex(Codec.PQ(m = 4, ksub = 8), e,
+      col("vec_id"), col("embedding"))
+    val pq = codecRows(Similarity.annSearch(Codec.PQ(m = 4, ksub = 8), books, codes,
+      e, col("vec_id"), col("embedding"), q, col("vec_id"), col("embedding"),
+      k = 5, shortlist = 600))
+    assert(pq == brute, s"pq ${pq.take(5)} vs brute ${brute.take(5)}")
+  }
+
+  test("PQ search from a parquet index equals the inline path; codes are bytes") {
+    // materialize (codebook, codes), read back, search WITHOUT
+    // retraining — pair-for-pair equal to searching the freshly built
+    // frames at a cut where quantization decides; and the codes column
+    // is actually narrow (array<tinyint> at ksub=8)
+    val (e, q, _, _, _, _) = codecFixture
+    val pq = Codec.PQ(m = 4, ksub = 8)
+    val (books, codes) = Similarity.annIndex(pq, e, col("vec_id"), col("embedding"))
+    assert(codes.schema("codes").dataType
+        .asInstanceOf[org.apache.spark.sql.types.ArrayType]
+        .elementType == org.apache.spark.sql.types.ByteType,
+      s"codes not byte-typed: ${codes.schema("codes").dataType}")
+    val dir = java.nio.file.Files.createTempDirectory("graft-pqidx").toString
+    books.write.mode("overwrite").parquet(s"$dir/books")
+    codes.write.mode("overwrite").parquet(s"$dir/codes")
+    def search(b: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.DataFrame) =
+      codecRows(Similarity.annSearch(pq, b, c, e, col("vec_id"), col("embedding"),
+        q, col("vec_id"), col("embedding"), k = 5, shortlist = 50))
+    val direct = search(books, codes)
+    val viaIndex = search(spark.read.parquet(s"$dir/books"), spark.read.parquet(s"$dir/codes"))
+    assert(viaIndex == direct,
+      s"index path ${viaIndex.take(3)} vs inline ${direct.take(3)}")
+  }
+
+  test("IVF+BQ: full probe equals plain BQ; contract guards fail fast") {
+    // nprobe = nlist => the candidate set is every non-self pair, so
+    // the IVF bound changes WHICH codes are scored, never how — the
+    // composed search must equal the linear BQ scan exactly
     val e = graft.sources.Tables(spark, sf).embeddings
     val qset = e.filter(col("vec_id") < 5)
-    val n = e.count().toInt
+    val (stats, codes) = Similarity.annIndex(Codec.BQ, e, col("vec_id"), col("embedding"))
+    val (cents8, cells8) = Similarity.ivfIndex(e, col("vec_id"), col("embedding"), nlist = 8)
+    def search(ivf: Option[Ivf]) =
+      Similarity.annSearch(Codec.BQ, stats, codes, e, col("vec_id"), col("embedding"),
+        qset, col("vec_id"), col("embedding"), k = 5, shortlist = 25, ivf = ivf)
+        .collect().map(_.toString).sorted.toSeq
+    assert(search(Some(Ivf(cents8, cells8, nprobe = 8))) == search(None),
+      "full-probe IVF+BQ must equal the linear BQ scan")
 
-    // shortlist >= corpus-1 => the exact re-rank sees every candidate
-    val brute = Similarity.bruteTopK(e, col("vec_id"), col("embedding"),
-      qset, col("vec_id"), col("embedding"), k = 5).collect().map(_.toString).sorted
-    val full = Similarity.sqTopK(e, col("vec_id"), col("embedding"),
-      qset, col("vec_id"), col("embedding"), k = 5, shortlist = n).collect()
-      .map(_.toString).sorted
-    assert(full.toSeq == brute.toSeq, "full-shortlist SQ8 must equal bruteTopK")
+    // contract guards: each index frame checked by name
+    val (_, cells4) = Similarity.ivfIndex(e, col("vec_id"), col("embedding"), nlist = 4)
+    val ex = intercept[IllegalArgumentException] {
+      search(Some(Ivf(cells4, cells4, nprobe = 2)))
+    }
+    assert(ex.getMessage.contains("centroid frame must carry"))
+  }
 
-    // index round-trip: parquet-materialized search == inline, pair-for-pair
-    val (stats, codes) = Similarity.sqIndex(e, col("vec_id"), col("embedding"))
+  test("IVF+BQ index persistence: all four artifacts round-trip through parquet") {
+    // centroids + cells (coarse quantizer) and stats + codes (binary
+    // quantizer) all materialize as parquet and searching against the
+    // reloaded artifacts is result-identical (incl. the decimal(38,0)
+    // stats sums surviving the format hop)
+    val e = graft.sources.Tables(spark, sf).embeddings
+    val qset = e.filter(col("vec_id") < 5)
+    val (cents, cells) = Similarity.ivfIndex(e, col("vec_id"), col("embedding"), nlist = 8)
+    val (stats, codes) = Similarity.annIndex(Codec.BQ, e, col("vec_id"), col("embedding"))
+    val dir = java.nio.file.Files.createTempDirectory("ivfbqidx").toString
+    cents.write.parquet(s"$dir/cents"); cells.write.parquet(s"$dir/cells")
+    stats.write.parquet(s"$dir/stats"); codes.write.parquet(s"$dir/codes")
+    def search(ce: org.apache.spark.sql.DataFrame, cl: org.apache.spark.sql.DataFrame,
+               st: org.apache.spark.sql.DataFrame, co: org.apache.spark.sql.DataFrame) =
+      Similarity.annSearch(Codec.BQ, st, co, e, col("vec_id"), col("embedding"),
+        qset, col("vec_id"), col("embedding"), k = 5, shortlist = 20,
+        ivf = Some(Ivf(ce, cl, nprobe = 3))).collect().map(_.toString).sorted.toSeq
+    val inline = search(cents, cells, stats, codes)
+    val rt = search(
+      spark.read.parquet(s"$dir/cents"), spark.read.parquet(s"$dir/cells"),
+      spark.read.parquet(s"$dir/stats"), spark.read.parquet(s"$dir/codes"))
+    assert(rt == inline, "reloaded composed index must search identically")
+  }
+
+  test("SQ8: byte codes; a collapsed dimension encodes 0 and decodes to lo") {
+    import spark.implicits._
+    val e = graft.sources.Tables(spark, sf).embeddings
+    val (_, codes) = Similarity.annIndex(Codec.SQ8, e, col("vec_id"), col("embedding"))
     assert(codes.schema("codes").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
       .elementType == org.apache.spark.sql.types.ByteType,
       s"codes must store as array<tinyint>, got ${codes.schema("codes").dataType}")
-    val dir = java.nio.file.Files.createTempDirectory("sqidx").toString
-    stats.write.mode("overwrite").parquet(s"$dir/stats")
-    codes.write.mode("overwrite").parquet(s"$dir/codes")
-    val inline = Similarity.sqTopKAgainstIndex(stats, codes,
-      e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"),
-      k = 5, shortlist = 32).collect().map(_.toString).sorted
-    val rt = Similarity.sqTopKAgainstIndex(
-      spark.read.parquet(s"$dir/stats"), spark.read.parquet(s"$dir/codes"),
-      e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"),
-      k = 5, shortlist = 32).collect().map(_.toString).sorted
-    assert(rt.toSeq == inline.toSeq, "parquet round-trip must equal inline search")
 
     // collapsed dimension (hi == lo) encodes 0-centered and decodes to lo
     val const = Seq((1L, Seq(1.0f, 5.0f)), (2L, Seq(1.0f, -3.0f)), (3L, Seq(1.0f, 0.0f)))
       .toDF("vec_id", "embedding")
-    val (cs, cc) = Similarity.sqIndex(const, col("vec_id"), col("embedding"))
+    val (cs, cc) = Similarity.annIndex(Codec.SQ8, const, col("vec_id"), col("embedding"))
     val c1 = cc.filter(col("vec_id") === 1L).select(element_at(col("codes"), 1))
       .head().getByte(0)
     assert(c1 == -128.toByte, s"constant dim must encode as -128 (code 0), got $c1")
-    val top = Similarity.sqTopKAgainstIndex(cs, cc,
+    val top = Similarity.annSearch(Codec.SQ8, cs, cc,
       const, col("vec_id"), col("embedding"),
       const.filter(col("vec_id") === 1L), col("vec_id"), col("embedding"),
       k = 1, shortlist = 3).head()
     assert(top.getLong(1) == 3L, s"nearest to (1,5) among (1,-3),(1,0) is (1,0); got $top")
   }
 
-  test("BQ: full shortlist equals bruteTopK; bit/pack hand fixture; index round-trip") {
+  test("BQ: bit/pack hand fixture; word count; contract guards; empty input excluded") {
     import spark.implicits._
     val e = graft.sources.Tables(spark, sf).embeddings
     val qset = e.filter(col("vec_id") < 5)
-    val n = e.count().toInt
-
-    // shortlist >= corpus-1 => the exact re-rank sees every candidate
-    val brute = Similarity.bruteTopK(e, col("vec_id"), col("embedding"),
-      qset, col("vec_id"), col("embedding"), k = 5).collect().map(_.toString).sorted
-    val full = Similarity.bqTopK(e, col("vec_id"), col("embedding"),
-      qset, col("vec_id"), col("embedding"), k = 5, shortlist = n).collect()
-      .map(_.toString).sorted
-    assert(full.toSeq == brute.toSeq, "full-shortlist BQ must equal bruteTopK")
 
     // hand fixture: 3 vectors, 2 dims. Dim sums: s1 = (1+3+5)e6 = 9e6,
     // s2 = (4+2+0)e6 = 6e6, n = 3. Bits (x*3e6 > s): v1 = (3e6>9e6 → 0,
@@ -934,34 +988,30 @@ class SimilaritySpec extends AnyFunSuite {
     // 10b=2.
     val tiny = Seq((1L, Seq(1.0f, 4.0f)), (2L, Seq(3.0f, 2.0f)),
       (3L, Seq(5.0f, 0.0f))).toDF("vec_id", "embedding")
-    val (ts, tc) = Similarity.bqIndex(tiny, col("vec_id"), col("embedding"))
+    val (ts, tc) = Similarity.annIndex(Codec.BQ, tiny, col("vec_id"), col("embedding"))
     val codes = tc.orderBy("vec_id").collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(codes == Map(1L -> Seq(1L), 2L -> Seq(0L), 3L -> Seq(2L)),
       s"got $codes")
 
-    // index round-trip: parquet-materialized search == inline
-    val dir = java.nio.file.Files.createTempDirectory("bqidx").toString
-    val (stats, bcodes) = Similarity.bqIndex(e, col("vec_id"), col("embedding"))
-    stats.write.mode("overwrite").parquet(s"$dir/stats")
-    bcodes.write.mode("overwrite").parquet(s"$dir/codes")
-    val inline = Similarity.bqTopKAgainstIndex(stats, bcodes,
-      e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"),
-      k = 5, shortlist = 32).collect().map(_.toString).sorted
-    val rt = Similarity.bqTopKAgainstIndex(
-      spark.read.parquet(s"$dir/stats"), spark.read.parquet(s"$dir/codes"),
-      e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"),
-      k = 5, shortlist = 32).collect().map(_.toString).sorted
-    assert(rt.toSeq == inline.toSeq, "parquet round-trip must equal inline search")
-    assert(Similarity.bqEncode(e, col("vec_id"), col("embedding"), stats)
+    val (stats, bcodes) = Similarity.annIndex(Codec.BQ, e, col("vec_id"), col("embedding"))
+    assert(Codec.BQ.encode(e, col("vec_id"), col("embedding"), stats)
       .select(size(col("codes"))).head().getInt(0) == 2,
       "64 dims must pack into 2 32-bit words")
-    // a frame missing its contract columns fails fast, not silently
+    // a frame missing its contract columns fails fast, by name, not silently
     val ex = intercept[IllegalArgumentException] {
-      Similarity.bqTopKAgainstIndex(bcodes, bcodes, e, col("vec_id"),
+      Similarity.annSearch(Codec.BQ, bcodes, bcodes, e, col("vec_id"),
         col("embedding"), qset, col("vec_id"), col("embedding"), 5, 32)
     }
     assert(ex.getMessage.contains("stats frame must carry"))
+    val (cents, cells) = Similarity.ivfIndex(e, col("vec_id"),
+      col("embedding"), nlist = 4)
+    val exIvf = intercept[IllegalArgumentException] {
+      Similarity.annSearch(Codec.BQ, stats, bcodes,
+        e, col("vec_id"), col("embedding"), qset, col("vec_id"),
+        col("embedding"), k = 5, shortlist = 10, ivf = Some(Ivf(cells, cells, nprobe = 2)))
+    }
+    assert(exIvf.getMessage.contains("centroid frame must carry"))
 
     // empty/NULL vectors never enter the code table (an empty
     // embedding has no bits — without the guard sequence(0,-1) would
@@ -970,40 +1020,11 @@ class SimilaritySpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
       .unionByName(Seq(3L).toDF("vec_id")
         .withColumn("embedding", lit(null).cast("array<float>")))
-    val encoded = Similarity.bqEncode(withEmpty, col("vec_id"),
+    val encoded = Codec.BQ.encode(withEmpty, col("vec_id"),
       col("embedding"), ts).orderBy("vec_id").collect()
     assert(encoded.map(_.getLong(0)).toSeq == Seq(1L),
       "empty and NULL embeddings must be excluded from the code table")
     assert(encoded.head.getSeq[Long](1).nonEmpty)
-  }
-
-  test("IVF+BQ: full probe equals plain BQ; contract guards fail fast") {
-    import spark.implicits._
-    val e = graft.sources.Tables(spark, sf).embeddings
-    val qset = e.filter(col("vec_id") < 5)
-    // nprobe = nlist => the candidate set is every non-self pair, so
-    // the IVF bound changes WHICH codes are scored, never how — the
-    // composed search must equal the linear BQ scan exactly
-    val plain = Similarity.bqTopK(e, col("vec_id"), col("embedding"),
-      qset, col("vec_id"), col("embedding"), k = 5, shortlist = 25)
-      .collect().map(_.toString).sorted
-    val composed = Similarity.ivfBqTopK(e, col("vec_id"), col("embedding"),
-      qset, col("vec_id"), col("embedding"),
-      nlist = 8, nprobe = 8, k = 5, shortlist = 25)
-      .collect().map(_.toString).sorted
-    assert(composed.toSeq == plain.toSeq,
-      "full-probe IVF+BQ must equal the linear BQ scan")
-
-    // contract guards: each index frame checked by name
-    val (cents, cells) = Similarity.ivfIndex(e, col("vec_id"),
-      col("embedding"), nlist = 4)
-    val (stats, codes) = Similarity.bqIndex(e, col("vec_id"), col("embedding"))
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.ivfBqTopKAgainstIndex(cells, cells, stats, codes,
-        e, col("vec_id"), col("embedding"), qset, col("vec_id"),
-        col("embedding"), k = 5, nprobe = 2, shortlist = 10)
-    }
-    assert(ex.getMessage.contains("centroid frame must carry"))
   }
 
   test("graft_hamming kernel == the HOF fold on edge shapes") {
@@ -1057,102 +1078,46 @@ class SimilaritySpec extends AnyFunSuite {
     assert(n.isNullAt(0), "NULL codes must yield NULL distance")
   }
 
-  test("IVF+BQ index persistence: all four artifacts round-trip through parquet") {
-    // the composition's pay-once story: centroids + cells (coarse
-    // quantizer) and stats + codes (binary quantizer) all materialize
-    // as parquet and searching against the reloaded artifacts is
-    // result-identical — per-part round-trips are proven elsewhere;
-    // this pins the COMPOSED search against reloaded everything
-    // (incl. the decimal(38,0) stats sums surviving the format hop)
+  /** Hits@5 of a BQ-family search of the first ten vectors against the
+    * brute truth, flat or IVF-bounded (10 cells, 2 probed — the
+    * registered qann_ivf_bq* settings), at the tight 20-of-500 cut. */
+  private def bqHits(codec: Codec, ivf: Boolean): Long = {
     val e = graft.sources.Tables(spark, sf).embeddings
-    val qset = e.filter(col("vec_id") < 5)
-    val (cents, cells) = Similarity.ivfIndex(e, col("vec_id"), col("embedding"),
-      nlist = 8)
-    val (stats, codes) = Similarity.bqIndex(e, col("vec_id"), col("embedding"))
-    val dir = java.nio.file.Files.createTempDirectory("ivfbqidx").toString
-    cents.write.parquet(s"$dir/cents"); cells.write.parquet(s"$dir/cells")
-    stats.write.parquet(s"$dir/stats"); codes.write.parquet(s"$dir/codes")
-    def search(ce: org.apache.spark.sql.DataFrame, cl: org.apache.spark.sql.DataFrame,
-               st: org.apache.spark.sql.DataFrame, co: org.apache.spark.sql.DataFrame) =
-      Similarity.ivfBqTopKAgainstIndex(ce, cl, st, co,
-        e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"),
-        k = 5, nprobe = 3, shortlist = 20).collect().map(_.toString).sorted.toSeq
-    val inline = search(cents, cells, stats, codes)
-    val rt = search(
-      spark.read.parquet(s"$dir/cents"), spark.read.parquet(s"$dir/cells"),
-      spark.read.parquet(s"$dir/stats"), spark.read.parquet(s"$dir/codes"))
-    assert(rt == inline, "reloaded composed index must search identically")
+    val q10 = e.filter(col("vec_id") < 10)
+    val truth = Similarity.bruteTopK(e, col("vec_id"), col("embedding"),
+      q10, col("vec_id"), col("embedding"), k = 5)
+    val coarse = if (!ivf) None else {
+      val (cents, cells) = Similarity.ivfIndex(e, col("vec_id"), col("embedding"), nlist = 10)
+      Some(Ivf(cents, cells, nprobe = 2))
+    }
+    val (stats, codes) = Similarity.annIndex(codec, e, col("vec_id"), col("embedding"))
+    val res = Similarity.annSearch(codec, stats, codes, e, col("vec_id"), col("embedding"),
+      q10, col("vec_id"), col("embedding"), k = 5, shortlist = 20, ivf = coarse)
+    Similarity.annRecall(truth, res)
+      .agg(org.apache.spark.sql.functions.sum(col("hits"))).head().getLong(0)
   }
 
-  test("asymmetric BQ: full shortlist equals bruteTopK; recall beats symmetric at an equal tight cut") {
-    val e = graft.sources.Tables(spark, sf).embeddings
-    val qset = e.filter(col("vec_id") < 10)
-    val n = e.count().toInt
-
-    // same re-rank contract: a full shortlist washes out the scorer
-    val brute = Similarity.bruteTopK(e, col("vec_id"), col("embedding"),
-      qset, col("vec_id"), col("embedding"), k = 5)
-      .collect().map(_.toString).sorted
-    val full = Similarity.bqTopKAsymmetric(e, col("vec_id"), col("embedding"),
-      qset, col("vec_id"), col("embedding"), k = 5, shortlist = n)
-      .collect().map(_.toString).sorted
-    assert(full.toSeq == brute.toSeq, "full-shortlist asym BQ must equal bruteTopK")
-
+  test("asymmetric BQ: recall beats symmetric at an equal tight cut") {
     // identical index bytes, equal tight cut: keeping the query's
-    // magnitudes must not LOSE recall vs quantizing it to bits too
-    val truth = Similarity.bruteTopK(e, col("vec_id"), col("embedding"),
-      qset, col("vec_id"), col("embedding"), k = 5)
-    def hits(res: org.apache.spark.sql.DataFrame): Long =
-      Similarity.annRecall(truth, res)
-        .agg(org.apache.spark.sql.functions.sum(col("hits"))).head().getLong(0)
-    val symHits = hits(Similarity.bqTopK(e, col("vec_id"), col("embedding"),
-      qset, col("vec_id"), col("embedding"), k = 5, shortlist = 20))
-    val asymHits = hits(Similarity.bqTopKAsymmetric(e, col("vec_id"),
-      col("embedding"), qset, col("vec_id"), col("embedding"),
-      k = 5, shortlist = 20))
+    // magnitudes must not LOSE recall vs quantizing it to bits too.
     // NOTE: asym >= sym is an empirical property of THIS benchmark
     // corpus (deterministic today), not a mathematical invariant of
     // the two scorers — a per-query flip under a benign fixture change
     // is possible. If a regeneration of the embedding generator or
     // the shortlist constant flips it, re-audit the fixture before
     // suspecting a scorer bug.
+    val (symHits, asymHits) = (bqHits(Codec.BQ, ivf = false), bqHits(Codec.AsymBQ, ivf = false))
     assert(asymHits >= symHits,
       s"asymmetric recall must not trail symmetric at equal shortlist: $asymHits vs $symHits")
   }
 
-  test("IVF+asym-BQ: full probe equals the linear asym scan; recall reads beside symmetric") {
-    val e = graft.sources.Tables(spark, sf).embeddings
-    val qset = e.filter(col("vec_id") < 5)
-    // nprobe = nlist => the candidate set is every non-self pair — the
-    // IVF bound changes WHICH codes are sign-sum-scored, never how,
-    // so the composed search must equal the linear asymmetric scan
-    val plain = Similarity.bqTopKAsymmetric(e, col("vec_id"), col("embedding"),
-      qset, col("vec_id"), col("embedding"), k = 5, shortlist = 25)
-      .collect().map(_.toString).sorted
-    val composed = Similarity.ivfBqTopKAsymmetric(e, col("vec_id"), col("embedding"),
-      qset, col("vec_id"), col("embedding"),
-      nlist = 8, nprobe = 8, k = 5, shortlist = 25)
-      .collect().map(_.toString).sorted
-    assert(composed.toSeq == plain.toSeq,
-      "full-probe IVF+asym-BQ must equal the linear asymmetric BQ scan")
-
-    // the registered settings' recall gate: at the SAME cell bound and
-    // shortlist, keeping the query's magnitudes must not lose recall
-    // vs the symmetric Hamming composition (fixture-pinned like the
-    // linear-scan gate above — an empirical property of the benchmark
-    // corpus, not an invariant; re-audit the fixture if it flips)
-    val q10 = e.filter(col("vec_id") < 10)
-    val truth = Similarity.bruteTopK(e, col("vec_id"), col("embedding"),
-      q10, col("vec_id"), col("embedding"), k = 5)
-    def hits(res: org.apache.spark.sql.DataFrame): Long =
-      Similarity.annRecall(truth, res)
-        .agg(org.apache.spark.sql.functions.sum(col("hits"))).head().getLong(0)
-    val symHits = hits(Similarity.ivfBqTopK(e, col("vec_id"), col("embedding"),
-      q10, col("vec_id"), col("embedding"),
-      nlist = 10, nprobe = 2, k = 5, shortlist = 20))
-    val asymHits = hits(Similarity.ivfBqTopKAsymmetric(e, col("vec_id"), col("embedding"),
-      q10, col("vec_id"), col("embedding"),
-      nlist = 10, nprobe = 2, k = 5, shortlist = 20))
+  test("IVF+asym-BQ: recall reads beside symmetric at the registered settings") {
+    // at the SAME cell bound and shortlist, keeping the query's
+    // magnitudes must not lose recall vs the symmetric Hamming
+    // composition (fixture-pinned like the linear-scan gate above — an
+    // empirical property of the benchmark corpus, not an invariant;
+    // re-audit the fixture if it flips)
+    val (symHits, asymHits) = (bqHits(Codec.BQ, ivf = true), bqHits(Codec.AsymBQ, ivf = true))
     assert(asymHits >= symHits,
       s"IVF+asym recall must not trail IVF+sym at equal settings: $asymHits vs $symHits")
   }
@@ -1167,7 +1132,7 @@ class SimilaritySpec extends AnyFunSuite {
       def v(seed: Int): Seq[Float] =
         (0 until dim).map(d => ((seed * 31 + d * 7) % 11 - 5) + 0.5f)
       val corpus = (1 to 6).map(s => (100L + s, v(s))).toDF("vec_id", "embedding")
-      val (stats, codes) = Similarity.bqIndex(corpus, col("vec_id"), col("embedding"))
+      val (stats, codes) = Similarity.annIndex(Codec.BQ, corpus, col("vec_id"), col("embedding"))
       val qfx = (1 to 2).map(s => (900L + s, v(s + 7))).toDF("vec_id", "embedding")
         .select(col("vec_id").as("query_id"),
           transform(col("embedding").cast("array<double>"),
@@ -1193,7 +1158,8 @@ class SimilaritySpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val shortQ = Seq((900L, Seq(1.0f, 2.0f, 3.0f))).toDF("vec_id", "embedding")
     val ex = intercept[Exception] {
-      Similarity.bqTopKAsymmetric(corpus, col("vec_id"), col("embedding"),
+      val (stats, codes) = Similarity.annIndex(Codec.AsymBQ, corpus, col("vec_id"), col("embedding"))
+      Similarity.annSearch(Codec.AsymBQ, stats, codes, corpus, col("vec_id"), col("embedding"),
         shortQ, col("vec_id"), col("embedding"), k = 3, shortlist = 5)
         .collect()
     }
@@ -1219,7 +1185,7 @@ class SimilaritySpec extends AnyFunSuite {
         (0 until dim).map(d => ((seed * 31 + d * 7) % 11 - 5) + 0.5f)
       val corpus = Seq((101L, v(1)), (102L, v(2)), (103L, v(3)))
         .toDF("vec_id", "embedding")
-      val (stats, codes) = Similarity.bqIndex(corpus, col("vec_id"), col("embedding"))
+      val (stats, codes) = Similarity.annIndex(Codec.BQ, corpus, col("vec_id"), col("embedding"))
       // ground-truth bits straight from the threshold rule
       val st = stats.orderBy("d").collect()
         .map(r => (r.get(0).toString.toLong,
@@ -1240,7 +1206,7 @@ class SimilaritySpec extends AnyFunSuite {
         // what we need — read the bit back through the SCORES instead
         // by ranking: with a one-hot query, approx = 1e6 iff bit d is
         // set, else -1e6; neighbors with bit set must outrank unset
-        val got = Similarity.bqTopKAsymmetricAgainstIndex(stats, codes,
+        val got = Similarity.annSearch(Codec.AsymBQ, stats, codes,
           corpus, col("vec_id"), col("embedding"),
           probe, col("vec_id"), col("embedding"), k = 3, shortlist = 1)
           .collect()
@@ -1259,25 +1225,25 @@ class SimilaritySpec extends AnyFunSuite {
   test("BQ append parity: frozen-stats encode is the append path") {
     // the ivfPqResAppend-style law, stated for BQ: (1) re-encoding the
     // index's own rows against its FROZEN stats reproduces its codes
-    // exactly — so appending is just bqEncode(newRows, stats), no
+    // exactly — so appending is just BQ.encode(newRows, stats), no
     // retrain, no re-encode of the existing corpus; (2) a grown index
     // under a full shortlist equals bruteTopK over the union, proving
     // appended codes are first-class citizens of the Hamming scan
     val e = graft.sources.Tables(spark, sf).embeddings
     val old = e.filter(col("vec_id") % 7 =!= 0)
     val add = e.filter(col("vec_id") % 7 === 0)
-    val (stats, oldCodes) = Similarity.bqIndex(old, col("vec_id"), col("embedding"))
+    val (stats, oldCodes) = Similarity.annIndex(Codec.BQ, old, col("vec_id"), col("embedding"))
 
-    val reEnc = Similarity.bqEncode(old, col("vec_id"), col("embedding"), stats)
+    val reEnc = Codec.BQ.encode(old, col("vec_id"), col("embedding"), stats)
     assert(reEnc.collect().map(_.toString).sorted.toSeq ==
       oldCodes.collect().map(_.toString).sorted.toSeq,
       "re-encoding the index's own rows must reproduce its codes byte-for-byte")
 
     val grown = oldCodes.unionByName(
-      Similarity.bqEncode(add, col("vec_id"), col("embedding"), stats))
+      Codec.BQ.encode(add, col("vec_id"), col("embedding"), stats))
     val qset = e.filter(col("vec_id") < 5)
     val n = e.count().toInt
-    val viaIndex = Similarity.bqTopKAgainstIndex(stats, grown,
+    val viaIndex = Similarity.annSearch(Codec.BQ, stats, grown,
       e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"),
       k = 5, shortlist = n).collect().map(_.toString).sorted
     val brute = Similarity.bruteTopK(e, col("vec_id"), col("embedding"),

@@ -5,14 +5,15 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.operators.Similarity.{Codec, Ivf}
 import graft.streaming.StreamIndex
 
 /** C154 streaming: the BQ index-append stream is pinned by the same
-  * twin law as the monitors — codes table after N files ≡ bqEncode
+  * twin law as the monitors — codes table after N files ≡ BQ.encode
   * over those N files' rows under the frozen stats, row for row,
   * including across a checkpoint resume AND a replayed micro-batch —
   * and the streamed table is a first-class citizen of the search path
-  * (bqTopKAgainstIndex parity with the batch-built index).
+  * (annSearch parity with the batch-built index).
   */
 class StreamIndexSpec extends AnyFunSuite {
   import SparkTest._
@@ -53,7 +54,7 @@ class StreamIndexSpec extends AnyFunSuite {
     val codesDir = tmp() + "/codes"
 
     // train ONCE on the full corpus, freeze the thresholds
-    Similarity.bqTrain(e, col("vec_id"), col("embedding"))
+    Codec.BQ.train(e, col("vec_id"), col("embedding"))
       .write.parquet(statsDir)
     val stats = spark.read.parquet(statsDir)
 
@@ -63,7 +64,7 @@ class StreamIndexSpec extends AnyFunSuite {
     StreamIndex.startBqIndexAppend(spark, in, e.schema, "vec_id", "embedding",
       ck, statsDir, codesDir).awaitTermination()
     assert(canonCodes(codesDir) ==
-      Similarity.bqEncode(half1, col("vec_id"), col("embedding"), stats)
+      Codec.BQ.encode(half1, col("vec_id"), col("embedding"), stats)
         .collect().map(_.toString).sorted.toSeq,
       "first batch's codes must equal the frozen-stats batch encode")
 
@@ -72,7 +73,7 @@ class StreamIndexSpec extends AnyFunSuite {
     dropFile(half2, in, "p2.parquet")
     StreamIndex.startBqIndexAppend(spark, in, e.schema, "vec_id", "embedding",
       ck, statsDir, codesDir).awaitTermination()
-    val unionCodes = Similarity.bqEncode(e, col("vec_id"), col("embedding"), stats)
+    val unionCodes = Codec.BQ.encode(e, col("vec_id"), col("embedding"), stats)
       .collect().map(_.toString).sorted.toSeq
     assert(canonCodes(codesDir) == unionCodes,
       "after resume the codes table must equal the batch encode of the union")
@@ -96,11 +97,11 @@ class StreamIndexSpec extends AnyFunSuite {
     spark.catalog.refreshByPath(codesDir)
     val streamed = spark.read.parquet(codesDir).select("vec_id", "codes")
     val qset = e.filter(col("vec_id") < 5)
-    val viaStream = Similarity.bqTopKAgainstIndex(stats, streamed,
+    val viaStream = Similarity.annSearch(Codec.BQ, stats, streamed,
       e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"),
       k = 5, shortlist = 32).collect().map(_.toString).sorted.toSeq
-    val (bs, bc) = Similarity.bqIndex(e, col("vec_id"), col("embedding"))
-    val viaBatch = Similarity.bqTopKAgainstIndex(bs, bc,
+    val (bs, bc) = Similarity.annIndex(Codec.BQ, e, col("vec_id"), col("embedding"))
+    val viaBatch = Similarity.annSearch(Codec.BQ, bs, bc,
       e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"),
       k = 5, shortlist = 32).collect().map(_.toString).sorted.toSeq
     assert(viaStream == viaBatch,
@@ -267,7 +268,7 @@ class StreamIndexSpec extends AnyFunSuite {
     val in = tmp(); val ck = tmp(); val statsDir = tmp() + "/stats"
     val centsDir = tmp() + "/cents"; val codesDir = tmp() + "/codes"
     val cellsDir = tmp() + "/cells"; val tombsDir = tmp() + "/tombstones"
-    Similarity.bqTrain(e, col("vec_id"), col("embedding"))
+    Codec.BQ.train(e, col("vec_id"), col("embedding"))
       .write.parquet(statsDir)
     val (cents, _, _, _) = Similarity.ivfPqResIndex(
       e, col("vec_id"), col("embedding"), nlist = 10, m = 4, ksub = 8)
@@ -292,7 +293,7 @@ class StreamIndexSpec extends AnyFunSuite {
         s"expected ${expected.size}")
     // untombstoned rows encode exactly as the unguarded path would
     val stats = spark.read.parquet(statsDir)
-    val direct = Similarity.bqEncode(
+    val direct = Codec.BQ.encode(
         e.limit(50).filter(col("vec_id") % 5 =!= 0),
         col("vec_id"), col("embedding"), stats)
       .collect().map(_.toString).sorted.toSeq
@@ -311,7 +312,7 @@ class StreamIndexSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     val in = tmp(); val ck = tmp(); val statsDir = tmp() + "/stats"
     val codesDir = tmp() + "/codes"; val compactDir = tmp() + "/compact"
-    Similarity.bqTrain(e, col("vec_id"), col("embedding"))
+    Codec.BQ.train(e, col("vec_id"), col("embedding"))
       .write.parquet(statsDir)
     // three micro-batches = three batch=<id> partitions, many files
     (0 to 2).foreach { i =>
@@ -324,7 +325,7 @@ class StreamIndexSpec extends AnyFunSuite {
     val stats = spark.read.parquet(statsDir)
     val q = e.filter(col("vec_id") < 5)
     def rows(codesPath: String) =
-      Similarity.bqTopKAgainstIndex(stats,
+      Similarity.annSearch(Codec.BQ, stats,
           spark.read.parquet(codesPath).select("vec_id", "codes"),
           e, col("vec_id"), col("embedding"),
           q, col("vec_id"), col("embedding"), k = 5, shortlist = 20)
@@ -350,7 +351,7 @@ class StreamIndexSpec extends AnyFunSuite {
     val centsDir = tmp() + "/cents"; val codesDir = tmp() + "/codes"
     val cellsDir = tmp() + "/cells"; val tombsDir = tmp() + "/tombstones"
     val ixDir = tmp() + "/index"
-    Similarity.bqTrain(e, col("vec_id"), col("embedding"))
+    Codec.BQ.train(e, col("vec_id"), col("embedding"))
       .write.parquet(statsDir)
     val (cents, _, _, _) = Similarity.ivfPqResIndex(
       e, col("vec_id"), col("embedding"), nlist = 10, m = 4, ksub = 8)
@@ -382,7 +383,7 @@ class StreamIndexSpec extends AnyFunSuite {
       df.collect().map(_.toString).sorted.toSeq
     assert(art("codes").columns.toSeq == Seq("vec_id", "codes"))
     assert(art("cells").columns.toSeq.sorted == Seq("cell", "vec_id"))
-    assert(canon(art("codes")) == canon(Similarity.bqEncode(
+    assert(canon(art("codes")) == canon(Codec.BQ.encode(
       survivors, col("vec_id"), col("embedding"), stats)))
     assert(canon(art("cells").select("vec_id", "cell")) ==
       canon(Similarity.ivfAssignAgainstIndex(
@@ -395,10 +396,11 @@ class StreamIndexSpec extends AnyFunSuite {
     def rows(cells: org.apache.spark.sql.DataFrame,
              codes: org.apache.spark.sql.DataFrame,
              ts: Option[org.apache.spark.sql.DataFrame]) =
-      Similarity.ivfBqTopKAgainstIndex(centroids, cells, stats, codes,
+      Similarity.annSearch(Codec.BQ, stats, codes,
           e, col("vec_id"), col("embedding"),
           q, col("vec_id"), col("embedding"),
-          k = 5, nprobe = 3, shortlist = 20, tombstones = ts)
+          k = 5, shortlist = 20, ivf = Some(Ivf(centroids, cells, nprobe = 3)),
+          tombstones = ts)
         .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     val viaPublished = rows(art("cells"), art("codes"), None)
     val viaGuardedStream = rows(
@@ -429,7 +431,7 @@ class StreamIndexSpec extends AnyFunSuite {
     val e = graft.sources.Tables(spark, sf).embeddings
       .select(col("vec_id"), col("embedding"))
     val statsDir = tmp() + "/stats"
-    Similarity.bqTrain(e, col("vec_id"), col("embedding"))
+    Codec.BQ.train(e, col("vec_id"), col("embedding"))
       .write.parquet(statsDir)
     val baseline = spark.sparkContext.getPersistentRDDs.size
     (1 to 3).foreach { i =>
@@ -464,10 +466,10 @@ class StreamIndexSpec extends AnyFunSuite {
       col("embedding"), nlist = 8)
     cents.write.parquet(centsDir)
     cells1.write.parquet(s"$cellsDir/batch=initial")
-    Similarity.bqTrain(half1, col("vec_id"), col("embedding"))
+    Codec.BQ.train(half1, col("vec_id"), col("embedding"))
       .write.parquet(statsDir)
     val stats = spark.read.parquet(statsDir)
-    Similarity.bqEncode(half1, col("vec_id"), col("embedding"), stats)
+    Codec.BQ.encode(half1, col("vec_id"), col("embedding"), stats)
       .write.parquet(s"$codesDir/batch=initial")
 
     // stream the NEW vectors through BOTH append legs (separate
@@ -495,11 +497,11 @@ class StreamIndexSpec extends AnyFunSuite {
     // silently vanish from the candidate join)
     val qset = e.filter(col("vec_id") < 5)
     val n = e.count().toInt
-    val viaStream = Similarity.ivfBqTopKAgainstIndex(
-      spark.read.parquet(centsDir), grownCells,
+    val viaStream = Similarity.annSearch(Codec.BQ,
       stats, spark.read.parquet(codesDir).select("vec_id", "codes"),
       e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"),
-      k = 5, nprobe = 8, shortlist = n)
+      k = 5, shortlist = n,
+      ivf = Some(Ivf(spark.read.parquet(centsDir), grownCells, nprobe = 8)))
       .collect().map(_.toString).sorted.toSeq
     val brute = Similarity.bruteTopK(e, col("vec_id"), col("embedding"),
       qset, col("vec_id"), col("embedding"), k = 5)
@@ -521,10 +523,10 @@ class StreamIndexSpec extends AnyFunSuite {
       col("embedding"), nlist = 8)
     cents.write.parquet(centsDir)
     cells1.write.parquet(s"$cellsDir/batch=initial")
-    Similarity.bqTrain(half1, col("vec_id"), col("embedding"))
+    Codec.BQ.train(half1, col("vec_id"), col("embedding"))
       .write.parquet(statsDir)
     val stats = spark.read.parquet(statsDir)
-    Similarity.bqEncode(half1, col("vec_id"), col("embedding"), stats)
+    Codec.BQ.encode(half1, col("vec_id"), col("embedding"), stats)
       .write.parquet(s"$codesDir/batch=initial")
 
     dropFile(half2, in, "p2.parquet")
@@ -544,7 +546,7 @@ class StreamIndexSpec extends AnyFunSuite {
     // both twins hold: frozen-stats encode and frozen-centroid assign
     assert(spark.read.parquet(codesDir).select("vec_id", "codes")
         .collect().map(_.toString).sorted.toSeq ==
-      Similarity.bqEncode(e, col("vec_id"), col("embedding"), stats)
+      Codec.BQ.encode(e, col("vec_id"), col("embedding"), stats)
         .collect().map(_.toString).sorted.toSeq)
     assert(spark.read.parquet(cellsDir).select("vec_id", "cell")
         .collect().map(_.toString).sorted.toSeq ==
@@ -572,12 +574,12 @@ class StreamIndexSpec extends AnyFunSuite {
     // and the grown four-artifact index searches correctly
     val qset = e.filter(col("vec_id") < 5)
     val n = e.count().toInt
-    val viaStream = Similarity.ivfBqTopKAgainstIndex(
-      spark.read.parquet(centsDir),
-      spark.read.parquet(cellsDir).select("vec_id", "cell"),
+    val viaStream = Similarity.annSearch(Codec.BQ,
       stats, spark.read.parquet(codesDir).select("vec_id", "codes"),
       e, col("vec_id"), col("embedding"), qset, col("vec_id"), col("embedding"),
-      k = 5, nprobe = 8, shortlist = n)
+      k = 5, shortlist = n,
+      ivf = Some(Ivf(spark.read.parquet(centsDir),
+        spark.read.parquet(cellsDir).select("vec_id", "cell"), nprobe = 8)))
       .collect().map(_.toString).sorted.toSeq
     val brute = Similarity.bruteTopK(e, col("vec_id"), col("embedding"),
       qset, col("vec_id"), col("embedding"), k = 5)
@@ -736,7 +738,7 @@ class StreamIndexSpec extends AnyFunSuite {
 
     // train once, freeze; the reference window is the TRAINING corpus's
     // own bit populations under those frozen thresholds
-    Similarity.bqTrain(e, col("vec_id"), col("embedding"))
+    Codec.BQ.train(e, col("vec_id"), col("embedding"))
       .write.parquet(statsDir)
     val stats = spark.read.parquet(statsDir)
     Similarity.bqBitCounts(e, col("embedding"), stats)
@@ -853,7 +855,7 @@ class StreamIndexSpec extends AnyFunSuite {
     val in = tmp(); val ck = tmp(); val statsDir = tmp() + "/stats"
     val countsDir = tmp() + "/counts"; val alarmsDir = tmp() + "/alarms"
     val refCountsDir = tmp() + "/ref"
-    Similarity.bqTrain(e, col("vec_id"), col("embedding"))
+    Codec.BQ.train(e, col("vec_id"), col("embedding"))
       .write.parquet(statsDir)
     Similarity.bqBitCounts(e, col("embedding"),
         spark.read.parquet(statsDir))
