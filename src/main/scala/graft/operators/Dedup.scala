@@ -728,17 +728,24 @@ object Dedup {
     rows.join(over, keys, "left_anti")
   }
 
+  /** The `bands` band hashes of a signature: band b hashes signature
+    * elements b·rows … b·rows + rows − 1. ONE definition for the
+    * banded join ([[bandedCapped]]) and the row-local probe
+    * ([[MinhashProbe]]), so both bucket a document identically. */
+  private def bandHashes(sig: Column, bands: Int, rows: Int): Column =
+    array((0 until bands).map { b =>
+      xxhash64(concat_ws(",", (0 until rows).map(r =>
+        element_at(sig, b * rows + r + 1)): _*))
+    }: _*)
+
   /** (doc_id, band, band_hash) rows of a prepped frame, buckets above
     * `maxBucket` evicted (per side — a bucket that big is a degenerate
     * shingle cluster, not a near-dup group). */
   private def bandedCapped(docs: DataFrame, bands: Int, rows: Int,
                            maxBucket: Int): DataFrame =
     dropOverCapBuckets(
-      docs.select(col("doc_id"), posexplode(
-        array((0 until bands).map { b =>
-          xxhash64(concat_ws(",", (0 until rows).map(r =>
-            element_at(col("sig"), b * rows + r + 1)): _*))
-        }: _*)).as(Seq("band", "band_hash"))),
+      docs.select(col("doc_id"), posexplode(bandHashes(col("sig"), bands, rows))
+        .as(Seq("band", "band_hash"))),
       Seq("band", "band_hash"), maxBucket)
 
   /** Near-duplicate pairs via banded MinHash-LSH, verified by true
@@ -873,12 +880,12 @@ object Dedup {
 
   /** Precomputed banded-capped rows of a [[minhashIndex]] —
     * `(doc_id, band, band_hash)` with over-cap buckets already evicted.
-    * A recurring screener (the forwarder's near-dup screen, a daily
-    * ingest driver) should compute this ONCE per index version and pin
-    * or materialize it next to the index: re-deriving it per increment
-    * re-pays the bands·|index| posexplode AND the grouped-count +
-    * anti-join cap shuffle over the whole historical corpus — per
-    * micro-batch. */
+    * A recurring screener (a daily ingest driver) should compute this
+    * ONCE per index version and pin or materialize it next to the
+    * index: re-deriving it per increment re-pays the bands·|index|
+    * posexplode AND the grouped-count + anti-join cap shuffle over the
+    * whole historical corpus — per increment. [[minhashProbe]] collects
+    * it once to build its broadcast buckets. */
   def minhashIndexBands(index: DataFrame, bands: Int = 16, rows: Int = 4,
                         maxBucket: Int = 1000): DataFrame =
     bandedCapped(requireSigLength(
@@ -891,10 +898,16 @@ object Dedup {
     * candidate join) — the caller pins/materializes both, so a
     * screening call pays only the NEW side's shingle+signature+banding
     * plus the joins. Unlike the other variants the new side is NOT
-    * persisted here: this is the per-micro-batch path, where the
-    * batch is small (two recomputes of a small frame are cheaper than
-    * a cached frame pinned per trigger accumulating for the life of a
-    * streaming query). */
+    * persisted here: two recomputes of a small increment are cheaper
+    * than a cached frame per call accumulating for the life of a
+    * recurring driver.
+    *
+    * This is the batch API: it returns the (new_id, old_id, jaccard)
+    * PAIRS, caps both sides' buckets, and pays a join plan per call.
+    * A screener that only needs the keep/drop decision per row against
+    * a frozen index — the forwarder's per-micro-batch near-dup screen —
+    * uses [[minhashProbe]] instead: the same hit set as this function's
+    * `new_id` column (spec-pinned), as one row-local filter. */
   def minhashLshPairsAgainstBandedIndex(newDf: DataFrame, newId: Column, newText: Column,
                                         index: DataFrame, indexBands: DataFrame,
                                         n: Int = 2, bands: Int = 16, rows: Int = 4,
@@ -906,6 +919,126 @@ object Dedup {
     bipartiteLshPairsFrom(bandedCapped(nw, bands, rows, maxBucket),
       indexBands.select(col("doc_id"), col("band"), col("band_hash")),
       nw, index.select(col("doc_id"), col("sh")), threshold)
+  }
+
+  /** A frozen [[minhashIndex]] as a broadcast near-dup probe: the
+    * index's capped band buckets and its shingle sets, collected once
+    * and broadcast once, so screening a row is a row-local expression
+    * with no join and no shuffle (see [[minhashProbe]]). Call
+    * [[release]] when done: it destroys the broadcast. */
+  final class MinhashProbe private[operators] (
+      table: org.apache.spark.broadcast.Broadcast[MinhashProbe.Table],
+      n: Int, bands: Int, rows: Int, seed: Long) {
+
+    private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+    /** The index shingle sets of every doc sharing a band bucket with
+      * the row — each doc once, with every shingle set stored under
+      * its doc_id (a duplicated doc_id verifies against all of them,
+      * like the verify join). The closure captures the broadcast
+      * handle only. */
+    private val candidates = {
+      val bc = table
+      udf((hashes: Seq[Long]) => bc.value.candidates(hashes))
+    }
+
+    /** True when `text` is a near-dup of an indexed document: it shares
+      * a capped band bucket with the document and their rounded shingle
+      * Jaccard is ≥ `threshold` — the same decision as a non-empty
+      * [[minhashLshPairsAgainstBandedIndex]] result for the row, built
+      * from the same Column expressions (shingle hashes, signature,
+      * band hashes, `jaccardHashed`, `round(·, 4)`). Shingle-less and
+      * null text is never a near-dup. Unlike the batch API there is no
+      * new-side bucket cap: each row probes alone, so a burst of more
+      * than `maxBucket` near-dups in one batch is screened, not evicted.
+      * The shingle set and signature are let-bound: un-bound, the 64
+      * signature lambdas and the band hashes would each re-derive the
+      * shingles. Never null, so `filter(!nearDup(…))` keeps every row
+      * that is not a hit. */
+    def nearDup(text: Column, threshold: Double): Column =
+      when(size(split(text, " ")) >= n,
+        graft.functions.Cols.let(shingleHashSet(text, n)) { sh =>
+          graft.functions.Cols.let(minhashSignatureFromHashes(sh, bands * rows, seed)) { sig =>
+            exists(candidates(bandHashes(sig, bands, rows)),
+              o => round(jaccardHashed(sh, o), 4) >= threshold)
+          }
+        }).otherwise(lit(false))
+
+    /** Destroy the broadcast (idempotent). */
+    def release(): Unit = if (released.compareAndSet(false, true)) {
+      table.destroy()
+      MinhashProbe.live.decrementAndGet(): Unit
+    }
+  }
+
+  object MinhashProbe {
+    /** `buckets(band)`: band_hash → slots of the docs in that capped
+      * bucket; `shingles(slot)`: every shingle set stored under that
+      * slot's doc_id. */
+    private[operators] final class Table(buckets: Array[Map[Long, Array[Int]]],
+                                         shingles: Array[Array[Array[Long]]])
+        extends Serializable {
+      def candidates(hashes: Seq[Long]): Seq[Seq[Long]] = {
+        val slots = scala.collection.mutable.LinkedHashSet.empty[Int]
+        hashes.iterator.zip(buckets.iterator).foreach { case (h, bucket) =>
+          bucket.get(h).foreach(slots ++= _)
+        }
+        slots.toSeq.flatMap(s =>
+          shingles(s).toSeq.map(scala.collection.immutable.ArraySeq.unsafeWrapArray(_)))
+      }
+    }
+
+    /** Probes built and not yet released, for leak checks. */
+    private[graft] val live = new java.util.concurrent.atomic.AtomicInteger(0)
+  }
+
+  /** Build a [[MinhashProbe]] over a [[minhashIndex]] frame. Three
+    * small jobs on the index, all on the driver's side of the query:
+    *  - a size check: the estimated table (8 bytes per shingle hash,
+    *    16 + 12·bands bytes per doc) must fit Spark's own broadcast
+    *    limit `spark.sql.maxBroadcastTableSize`, else this fails with a
+    *    named error before anything is collected;
+    *  - the shingle sets, `doc_id → sh` (null ids and sets dropped, as
+    *    the verify join would never match them);
+    *  - the capped band buckets from [[minhashIndexBands]] (same
+    *    index-side `maxBucket` eviction, same signature-length guard —
+    *    a wrong-k index fails here, loudly).
+    * (n, bands·rows, seed) MUST match the index build. */
+  def minhashProbe(index: DataFrame, n: Int = 2, bands: Int = 16, rows: Int = 4,
+                   seed: Long = 42L, maxBucket: Int = 1000): MinhashProbe = {
+    val spark = index.sparkSession
+    graft.GraftExtensions.ensureRegistered(spark)
+    val limit = spark.sessionState.conf.maxBroadcastTableSizeInBytes
+    val sized = index.agg(count(lit(1)), coalesce(sum(size(col("sh"))), lit(0L))).head()
+    val bytes = 8L * sized.getLong(1) + (16L + 12L * bands) * sized.getLong(0)
+    require(bytes <= limit,
+      s"near-dup probe: the MinHash index (${sized.getLong(0)} docs, ~$bytes bytes) " +
+        s"exceeds ${org.apache.spark.sql.internal.SQLConf.MAX_BROADCAST_TABLE_SIZE.key} " +
+        s"= $limit bytes; shrink the index or raise the limit")
+    // doc_id is any type: binary ids compare by content, as in the join
+    def key(v: Any): Any = v match { case b: Array[Byte] => b.toSeq; case x => x }
+    val slotOf = scala.collection.mutable.HashMap.empty[Any, Int]
+    val sets = scala.collection.mutable.ArrayBuffer.empty[List[Array[Long]]]
+    index.filter(col("doc_id").isNotNull && col("sh").isNotNull)
+      .select(col("doc_id"), col("sh")).collect().foreach { r =>
+        val s = slotOf.getOrElseUpdate(key(r.get(0)), { sets += Nil; sets.size - 1 })
+        sets(s) = r.getSeq[Long](1).toArray :: sets(s)
+      }
+    val buckets = Array.fill(bands)(
+      scala.collection.mutable.HashMap.empty[Long, List[Int]])
+    minhashIndexBands(index, bands, rows, maxBucket)
+      .select(col("doc_id"), col("band"), col("band_hash")).collect().foreach { r =>
+      slotOf.get(key(r.get(0))).foreach { s =>
+        val b = buckets(r.getInt(1))
+        b(r.getLong(2)) = s :: b.getOrElse(r.getLong(2), Nil)
+      }
+    }
+    val table = new MinhashProbe.Table(
+      buckets.map(_.iterator.map { case (h, ss) => h -> ss.distinct.toArray }.toMap),
+      sets.iterator.map(_.toArray).toArray)
+    val probe = new MinhashProbe(spark.sparkContext.broadcast(table), n, bands, rows, seed)
+    MinhashProbe.live.incrementAndGet()
+    probe
   }
 
   // --- C3: SimHash ------------------------------------------------------

@@ -25,11 +25,14 @@ object Forwarder {
     * replay protection BEYOND the exact-hash `dedupWithin` (a replay
     * whose serialized form drifted — regenerated timestamps, reworded
     * wrapper — hashes differently but still near-dups its original).
-    * (n, bands·rows, seed) MUST match the index build. Runs inside
-    * foreachBatch (the LSH screen self-joins and repartitions — batch
-    * operations), so it sees the POST-scrub record when `scrubPii` is
-    * on: build the index from the DELIVERED history and both sides of
-    * the compare are the same text domain. */
+    * (n, bands·rows, seed) MUST match the index build. The index is
+    * read once per query into a broadcast [[graft.operators.Dedup
+    * .minhashProbe]], and each micro-batch is screened by one row-local
+    * filter after the scrub, so it sees the POST-scrub record when
+    * `scrubPii` is on: build the index from the DELIVERED history and
+    * both sides of the compare are the same text domain. The index
+    * must fit Spark's broadcast limit (`spark.sql.maxBroadcastTableSize`);
+    * `start` fails with a named error otherwise. */
   final case class NearDupScreen(
       indexDir: String,
       column: String = "rawlog",
@@ -204,50 +207,33 @@ object Forwarder {
     }
     // scrub LAST: routing and the replay key saw the pre-scrub record
     val delivered = if (conf.scrubPii) scrubDelivery(out) else out
-    // the near-dup screen is a per-batch BATCH transform (the LSH
-    // candidate join repartitions/self-joins — not streamable), applied
-    // inside foreachBatch. BOTH index-side frames are derived and
-    // pinned ONCE per query, not per micro-batch: the raw index (the
-    // verify join's shingle sets) AND its banded-capped rows (the
-    // candidate join's side — re-deriving those per trigger would
-    // re-pay the bands·|index| explode plus the bucket-cap shuffle
-    // over the whole historical corpus every batch). The per-batch
-    // work is then only the small increment's prep plus the joins,
-    // and nothing batch-sized is left pinned across triggers.
-    val (screen, screenPinned): (DataFrame => DataFrame, Seq[DataFrame]) =
-      conf.nearDupScreen match {
-        case Some(s) =>
-          val index = spark.read.parquet(s.indexDir)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val indexBands = graft.operators.Dedup.minhashIndexBands(
-              index, s.bands, s.rows, s.maxBucket)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val f: DataFrame => DataFrame = batch => {
-            val keyed = batch.withColumn("__nd_id", md5(col("json")))
-            val hits = graft.operators.Dedup.minhashLshPairsAgainstBandedIndex(
-                keyed, col("__nd_id"), col(s.column), index, indexBands,
-                s.n, s.bands, s.rows, s.threshold, s.seed, s.maxBucket)
-              .select(col("new_id").as("__nd_id")).distinct()
-            keyed.join(hits, Seq("__nd_id"), "left_anti").drop("__nd_id")
-          }
-          (f, Seq(index, indexBands))
-        case None => (identity[DataFrame] _, Nil)
-      }
+    // the near-dup screen is one broadcast probe per query — the frozen
+    // index's capped band buckets and shingle sets, collected and
+    // broadcast here, once — and one row-local filter per micro-batch
+    // in the sink's own stage: no join, no shuffle, and the
+    // foreachBatch frame is scanned once. It sits after the scrub (the
+    // index holds delivered text) and before the metric rewrite (a
+    // replayed record must screen whether or not its route emits
+    // points). The probe's broadcast is destroyed on termination
+    // (scheduled restarts must not strand one index copy per run).
+    val screen = conf.nearDupScreen.map { s =>
+      (s, graft.operators.Dedup.minhashProbe(spark.read.parquet(s.indexDir),
+        s.n, s.bands, s.rows, s.seed, s.maxBucket))
+    }
+    def screened(df: DataFrame): DataFrame = screen.fold(df) { case (s, probe) =>
+      df.filter(!probe.nearDup(col(s.column), s.threshold))
+    }
+    val release = () => screen.foreach(_._2.release())
     val sink = new NdjsonBatchSink(delivery, conf.sink)
-    // metric rewrite LAST: the near-dup screen keys on the PLAIN
-    // record json (a replayed record must dedup whether or not its
-    // route emits points), then matched records become their points.
-    // The screen's pinned index frames release on termination (the
-    // StreamIndex discipline — scheduled restarts must not strand one
-    // cached corpus-index pair per run).
-    StreamIndex.unpersistOnTermination(spark,
-      delivered.writeStream
+    val query =
+      try delivered.writeStream
         .option("checkpointLocation", conf.checkpointDir)
         .trigger(Trigger.AvailableNow())
         .foreachBatch((df: DataFrame, id: Long) =>
-          sink.process(metricJson(screen(df), routeTable), id))
-        .start(),
-      screenPinned)
+          sink.process(metricJson(screened(df), routeTable), id))
+        .start()
+      catch { case e: Throwable => release(); throw e }
+    StreamIndex.releaseOnTermination(spark, query, release)
   }
 
   /** Convenience: forward to local NDJSON files. */

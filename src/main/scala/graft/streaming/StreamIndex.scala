@@ -14,23 +14,29 @@ import graft.operators.Similarity.Codec
   */
 object StreamIndex {
 
-  /** Release a query's pinned frozen-artifact frames when it
-    * terminates. Every append/monitor start pins its stats/centroid
-    * frame once per query (not per micro-batch) — but AvailableNow
-    * queries are typically restarted on a schedule, and without this
-    * each restart would strand one more small cached relation in the
-    * driver's cache for the app lifetime. A listener keyed on the
-    * RUN id (unique per run — the query id is checkpoint-stable, so a
-    * delayed termination event from the PREVIOUS run on the async
-    * listener bus would match the next restart's listener and
-    * unpersist its pinned frames mid-run) unpersists on termination
-    * and deregisters itself; the isActive re-check closes the race
-    * where a tiny AvailableNow run terminates before the listener
-    * lands (double-unpersist is a no-op). */
-  private[streaming] def unpersistOnTermination(spark: SparkSession,
-                                                query: StreamingQuery,
-                                                pinned: Seq[DataFrame]): StreamingQuery = {
+  /** Run a query's `release` hook once when it terminates — unpersist
+    * its pinned frozen-artifact frames ([[unpersisting]]), destroy a
+    * broadcast probe. Every append/monitor start pins its
+    * stats/centroid frame once per query (not per micro-batch) — but
+    * AvailableNow queries are typically restarted on a schedule, and
+    * without this each restart would strand one more small cached
+    * relation (or broadcast) in the driver for the app lifetime. A
+    * listener keyed on the RUN id (unique per run — the query id is
+    * checkpoint-stable, so a delayed termination event from the
+    * PREVIOUS run on the async listener bus would match the next
+    * restart's listener and release its state mid-run) releases on
+    * termination and deregisters itself; the isActive re-check closes
+    * the race where a tiny AvailableNow run terminates before the
+    * listener lands. Both paths may fire, so the hook must be
+    * idempotent (unpersist is; so is `MinhashProbe.release`). */
+  private[streaming] def releaseOnTermination(spark: SparkSession,
+                                              query: StreamingQuery,
+                                              release: () => Unit): StreamingQuery = {
     import org.apache.spark.sql.streaming.StreamingQueryListener
+    def fire(l: StreamingQueryListener): Unit = {
+      release()
+      spark.streams.removeListener(l)
+    }
     val listener = new StreamingQueryListener {
       override def onQueryStarted(
           e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -38,18 +44,16 @@ object StreamIndex {
           e: StreamingQueryListener.QueryProgressEvent): Unit = ()
       override def onQueryTerminated(
           e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.runId == query.runId) {
-          pinned.foreach(_.unpersist(blocking = false))
-          spark.streams.removeListener(this)
-        }
+        if (e.runId == query.runId) fire(this)
     }
     spark.streams.addListener(listener)
-    if (!query.isActive) {
-      pinned.foreach(_.unpersist(blocking = false))
-      spark.streams.removeListener(listener)
-    }
+    if (!query.isActive) fire(listener)
     query
   }
+
+  /** The release hook of a query's pinned frames. */
+  private[streaming] def unpersisting(pinned: Seq[DataFrame]): () => Unit =
+    () => pinned.foreach(_.unpersist(blocking = false))
 
   /** Tail a directory of embedding parquet files and append each
     * micro-batch's 1-bit codes to a partitioned codes table.
@@ -129,7 +133,7 @@ object StreamIndex {
     val stats = spark.read.parquet(statsDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (guard, guardPinned) = tombstoneGuard(spark, id, tombstonesDir)
-    unpersistOnTermination(spark,
+    releaseOnTermination(spark,
       spark.readStream.schema(schema).parquet(inputDir)
         .writeStream
         .outputMode(OutputMode.Append)
@@ -141,7 +145,7 @@ object StreamIndex {
             .parquet(codesDir.stripSuffix("/") + s"/batch=$batchId")
         }
         .start(),
-      stats +: guardPinned)
+      unpersisting(stats +: guardPinned))
   }
 
   /** Streaming IVF CELL maintenance (C154i — the cells half of the
@@ -176,7 +180,7 @@ object StreamIndex {
     val cents = spark.read.parquet(centroidsDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (guard, guardPinned) = tombstoneGuard(spark, id, tombstonesDir)
-    unpersistOnTermination(spark,
+    releaseOnTermination(spark,
       spark.readStream.schema(schema).parquet(inputDir)
         .writeStream
         .outputMode(OutputMode.Append)
@@ -189,7 +193,7 @@ object StreamIndex {
             .parquet(cellsDir.stripSuffix("/") + s"/batch=$batchId")
         }
         .start(),
-      cents +: guardPinned)
+      unpersisting(cents +: guardPinned))
   }
 
   /** COMPOSED index append (C154i's single-stream form): grow the
@@ -219,7 +223,7 @@ object StreamIndex {
     val cents = spark.read.parquet(centroidsDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (guard, guardPinned) = tombstoneGuard(spark, id, tombstonesDir)
-    unpersistOnTermination(spark,
+    releaseOnTermination(spark,
       spark.readStream.schema(schema).parquet(inputDir)
         .writeStream
         .outputMode(OutputMode.Append)
@@ -241,7 +245,7 @@ object StreamIndex {
           } finally pinned.unpersist(blocking = false): Unit
         }
         .start(),
-      Seq(stats, cents) ++ guardPinned)
+      unpersisting(Seq(stats, cents) ++ guardPinned))
   }
 
   /** Streaming IVFADC maintenance (C161 — [[startComposedIndexAppend]]
@@ -279,7 +283,7 @@ object StreamIndex {
     val books = spark.read.parquet(booksDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (guard, guardPinned) = tombstoneGuard(spark, id, tombstonesDir)
-    unpersistOnTermination(spark,
+    releaseOnTermination(spark,
       spark.readStream.schema(schema).parquet(inputDir)
         .writeStream
         .outputMode(OutputMode.Append)
@@ -297,7 +301,7 @@ object StreamIndex {
           } finally pinned.unpersist(blocking = false): Unit
         }
         .start(),
-      Seq(cents, books) ++ guardPinned)
+      unpersisting(Seq(cents, books) ++ guardPinned))
   }
 
   /** Streaming BM25 TEXT-index maintenance (C160 — the retrieval twin
@@ -361,7 +365,7 @@ object StreamIndex {
     graft.GraftExtensions.ensureRegistered(spark)
     val base = indexDir.stripSuffix("/")
     val (guard, guardPinned) = tombstoneGuard(spark, id, tombstonesDir)
-    unpersistOnTermination(spark,
+    releaseOnTermination(spark,
       spark.readStream.schema(schema).parquet(inputDir)
         .writeStream
         .outputMode(OutputMode.Append)
@@ -385,7 +389,7 @@ object StreamIndex {
           } finally tf.unpersist(blocking = false): Unit
         }
         .start(),
-      guardPinned)
+      unpersisting(guardPinned))
   }
 
   /** Assemble a [[graft.functions.Keywords.TextIndex]] from a
@@ -629,7 +633,7 @@ object StreamIndex {
     graft.GraftExtensions.ensureRegistered(spark)
     val artifact = spark.read.parquet(artifactDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    unpersistOnTermination(spark,
+    releaseOnTermination(spark,
       DropStats.startBucketMonitorOver(spark,
         spark.readStream.schema(schema).parquet(inputDir),
         checkpointDir, countsDir, alarmsDir)(buckets(_, artifact)) {
@@ -640,6 +644,6 @@ object StreamIndex {
               counts.select(col("grp").as("source"), col("bucket"), col("n")))
             .select(col("source").as("grp"), col("n_buckets"), col("psi"))
       },
-      Seq(artifact))
+      unpersisting(Seq(artifact)))
   }
 }

@@ -291,6 +291,114 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.minhashIndexBands(idx, bands = 32, rows = 2).count() > 0)
   }
 
+  /** Ids of the `batch` rows the probe calls near-dups at `threshold`. */
+  private def probeHits(probe: Dedup.MinhashProbe, batch: org.apache.spark.sql.DataFrame,
+                        threshold: Double): Set[Long] =
+    batch.filter(probe.nearDup(col("text"), threshold))
+      .collect().map(_.getLong(0)).toSet
+
+  private def msgChain(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10)
+      .map(x => Option(x.getMessage).getOrElse("")).toSeq
+
+  test("minhash probe screens exactly the banded-index new_id set") {
+    val rnd = new scala.util.Random(7)
+    val vocab = (0 until 60).map(i => s"w$i")
+    def words(k: Int) = Seq.fill(k)(vocab(rnd.nextInt(vocab.size)))
+    def edit(t: String, k: Int) = {
+      val ws = t.split(" ").toBuffer
+      (0 until k).foreach(_ => ws(rnd.nextInt(ws.size)) = vocab(rnd.nextInt(vocab.size)))
+      ws.mkString(" ")
+    }
+    // index: 200 random docs, 20 clusters of 5 identical docs (every
+    // band bucket holds 5 → evicted at maxBucket 3), doc 7 stored twice
+    // under one id, and the 4-word doc whose 3-word prefix has J = 2/3
+    val random = (0L until 200L).map(i => i -> words(12).mkString(" "))
+    val clusters = (0 until 20).map(_ => words(12).mkString(" "))
+    val clustered = for ((t, c) <- clusters.zipWithIndex; j <- 0 until 5)
+      yield (1000L + c * 5 + j) -> t
+    val dupId = 7L -> "dup id second text with its very own words here"
+    val twoThirds = 2000L -> "q1 q2 q3 q4"
+    val idxDir = java.nio.file.Files.createTempDirectory("graft-probe").toString + "/idx"
+    Dedup.minhashIndex(docs(random ++ clustered ++ Seq(dupId, twoThirds): _*),
+      col("doc_id"), col("text")).write.parquet(idxDir)
+    val idx = spark.read.parquet(idxDir)
+    // batch: near-dups (1-3 words edited) of random docs and of each
+    // cluster (one each, so no batch bucket outgrows maxBucket), fresh
+    // docs, the J = 2/3 prefix, a near-dup of doc 7's second text,
+    // shingle-less and null text
+    val batch = docs(
+      (0 until 120).map(i => (10000L + i) -> edit(random(rnd.nextInt(200))._2, 1 + i % 3)) ++
+      clusters.zipWithIndex.map { case (t, c) => (20000L + c) -> edit(t, 1) } ++
+      (0 until 150).map(i => (30000L + i) -> words(12).mkString(" ")) ++
+      Seq(40000L -> "q1 q2 q3", 40001L -> "dup id second text with its very own words there",
+        40002L -> "single", 40003L -> "", 40004L -> null): _*)
+    def uncapped(d: org.apache.spark.sql.DataFrame) =
+      Dedup.minhashIndexBands(d, maxBucket = Int.MaxValue).count()
+    val batchIdx = Dedup.minhashIndex(batch, col("doc_id"), col("text"))
+    // the regime where both paths must agree: the batch side's own
+    // bucket cap evicts nothing, the index side's does
+    assert(Dedup.minhashIndexBands(batchIdx, maxBucket = 3).count() == uncapped(batchIdx))
+    assert(Dedup.minhashIndexBands(idx, maxBucket = 3).count() < uncapped(idx))
+
+    val results = for ((maxBucket, threshold) <- Seq((1000, 0.5), (3, 0.5), (1000, 0.6667))) yield {
+      val pairs = Dedup.minhashLshPairsAgainstBandedIndex(batch, col("doc_id"), col("text"),
+          idx, Dedup.minhashIndexBands(idx, maxBucket = maxBucket),
+          threshold = threshold, maxBucket = maxBucket)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val probe = Dedup.minhashProbe(idx, maxBucket = maxBucket)
+      try {
+        val screened = probeHits(probe, batch, threshold)
+        assert(screened == pairs.map(_._1).toSet,
+          s"maxBucket $maxBucket threshold $threshold: probe-only " +
+            s"${screened -- pairs.map(_._1)}, banded-only ${pairs.map(_._1).toSet -- screened}")
+        (maxBucket, threshold) -> pairs
+      } finally probe.release()
+    }
+    val hits = results.toMap.map { case (k, ps) => k -> ps.map(_._1).toSet }
+    // every planted case was exercised
+    assert(hits((1000, 0.5)).size > 50 && hits((1000, 0.5)).size < 150, s"${hits((1000, 0.5)).size}")
+    val clusterRows = (20000L until 20020L).toSet
+    assert((hits((1000, 0.5)) & clusterRows).size >= 15, "cluster near-dups found uncapped")
+    assert((hits((3, 0.5)) & clusterRows).isEmpty, "cluster near-dups evicted at cap 3")
+    assert(hits((1000, 0.5)).contains(40001L), "near-dup of the duplicated doc_id's second text")
+    assert(!(40002L to 40004L).exists(hits((1000, 0.5))), "shingle-less and null text")
+    // J = 2/3 rounds to exactly the threshold 0.6667 (unrounded it is below)
+    assert(results.toMap.apply((1000, 0.6667)).contains((40000L, 2000L, 0.6667)))
+  }
+
+  test("minhash probe: a wrong-k index fails loudly; release destroys the broadcast") {
+    val idx = Dedup.minhashIndex(docs(101L -> "the quick brown fox jumps over the lazy dog"),
+      col("doc_id"), col("text"), n = 2, k = 64)
+    val before = Dedup.MinhashProbe.live.get
+    val wrong = intercept[Exception](Dedup.minhashProbe(idx, bands = 16, rows = 8))
+    assert(msgChain(wrong).exists(_.contains("signature length")), s"unexpected: $wrong")
+    assert(Dedup.MinhashProbe.live.get == before)
+    val probe = Dedup.minhashProbe(idx, bands = 32, rows = 2)
+    val nw = docs(1L -> "the quick brown fox jumps over the lazy cat")
+    assert(probeHits(probe, nw, 0.5) == Set(1L))
+    assert(Dedup.MinhashProbe.live.get == before + 1)
+    probe.release()
+    probe.release()
+    assert(Dedup.MinhashProbe.live.get == before)
+    val used = intercept[Exception](probeHits(probe, nw, 0.5))
+    assert(msgChain(used).exists(_.contains("destroyed")), s"unexpected: $used")
+  }
+
+  test("minhash probe screens a same-batch burst larger than maxBucket; the banded join lets it through") {
+    // the probe has no batch-side bucket cap: 5 copies of one near-dup
+    // in one batch fill every batch bucket past maxBucket = 3, which
+    // the banded join evicts, while each row still probes alone
+    val anchor = "the quick brown fox jumps over the lazy dog near the river bank"
+    val idx = Dedup.minhashIndex(docs(1L -> anchor), col("doc_id"), col("text"))
+    val burst = docs((10L until 15L).map(_ -> anchor.replace("bank", "bend")): _*)
+    assert(Dedup.minhashLshPairsAgainstBandedIndex(burst, col("doc_id"), col("text"),
+      idx, Dedup.minhashIndexBands(idx, maxBucket = 3), maxBucket = 3).count() == 0)
+    val probe = Dedup.minhashProbe(idx, maxBucket = 3)
+    try assert(probeHits(probe, burst, 0.5) == (10L until 15L).toSet)
+    finally probe.release()
+  }
+
   test("passage removal drops exactly the cross-doc duplicated spans") {
     // same fixture family as the coverage tests: docs 1/2 share the
     // 5-gram "a b c d e" (doc 1 at pos 0, doc 2 at pos 2); doc 3

@@ -185,6 +185,96 @@ class StreamingSpec extends AnyFunSuite {
       s"screen left pinned index frames behind: $before cached before, $cached after")
   }
 
+  /** A MinHash index over `lines` (the forwarder's `rawlog` is the raw line). */
+  private def screenIndex(lines: Seq[String]): String = {
+    import spark.implicits._
+    val idx = tmp() + "/minhash_index"
+    graft.operators.Dedup.minhashIndex(
+        lines.zipWithIndex.map { case (l, i) => (i.toLong, l) }.toDF("doc_id", "text"),
+        col("doc_id"), col("text"))
+      .write.parquet(idx)
+    idx
+  }
+
+  test("near-dup screen: the probe broadcast is released on termination; an over-limit index fails at start") {
+    import graft.operators.Dedup.MinhashProbe
+    val idx = screenIndex(sampleLines(3))
+    val before = MinhashProbe.live.get
+    val in = tmp(); val out = tmp()
+    writeLines(in, "a.log", sampleLines(5))
+    Forwarder.start(spark,
+      Forwarder.Config(in, tmp(), nearDupScreen = Some(Forwarder.NearDupScreen(idx))),
+      new FileDelivery(out)).awaitTermination()
+    // async listener bus, so poll
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (MinhashProbe.live.get > before && System.nanoTime() < deadline) Thread.sleep(200)
+    assert(MinhashProbe.live.get == before, "the screen's probe broadcast was not destroyed")
+
+    // Spark's own broadcast limit bounds the index collect: lowered
+    // below the index size, start fails with a named error, runs no
+    // query and leaves no broadcast behind
+    val key = org.apache.spark.sql.internal.SQLConf.MAX_BROADCAST_TABLE_SIZE.key
+    val prev = spark.conf.getOption(key)
+    val active = spark.streams.active.length
+    spark.conf.set(key, "64")
+    val e = try intercept[IllegalArgumentException] {
+      Forwarder.start(spark,
+        Forwarder.Config(in, tmp(), nearDupScreen = Some(Forwarder.NearDupScreen(idx))),
+        new FileDelivery(tmp()))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(e.getMessage.contains(key) && e.getMessage.contains("near-dup probe"), e.getMessage)
+    assert(spark.streams.active.length == active)
+    assert(MinhashProbe.live.get == before)
+  }
+
+  test("near-dup screen adds no job or stage per micro-batch") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // (query id, batch id) -> (jobs, stages), from the local properties
+    // the stream execution sets on every job of a micro-batch
+    val perBatch = new java.util.concurrent.ConcurrentHashMap[(String, String), (Int, Int)]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("graft.test.marker") != null)) marker.countDown()
+        for (props <- p; run <- Option(props.getProperty("sql.streaming.queryId"));
+             batch <- Option(props.getProperty("streaming.sql.batchId")))
+          perBatch.merge((run, batch), (1, e.stageInfos.size),
+            (a, b) => (a._1 + b._1, a._2 + b._2))
+      }
+    }
+    val lines = sampleLines(30)
+    val idx = screenIndex(lines.take(2))
+    def run(screen: Option[Forwarder.NearDupScreen]): (String, Int) = {
+      val in = tmp(); val out = tmp()
+      lines.grouped(10).zipWithIndex.foreach { case (g, i) => writeLines(in, s"$i.log", g) }
+      val q = Forwarder.start(spark,
+        Forwarder.Config(in, tmp(), maxFilesPerTrigger = 1, nearDupScreen = screen),
+        new FileDelivery(out))
+      q.awaitTermination()
+      val delivered = Files.walk(Paths.get(out)).iterator().asScala
+        .filter(_.toString.endsWith(".ndjson"))
+        .map(f => Files.readAllLines(f).size).sum
+      (q.id.toString, delivered)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (plain, screened) = try {
+      val r = (run(None), run(Some(Forwarder.NearDupScreen(idx))))
+      // a marker job after both runs: once the listener sees it, it has
+      // seen every earlier job
+      spark.sparkContext.setLocalProperty("graft.test.marker", "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty("graft.test.marker", null)
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(plain._2 == 30 && screened._2 == 28, s"delivered: plain $plain, screened $screened")
+    def of(run: String) = perBatch.asScala.collect { case ((`run`, b), c) => b.toLong -> c }.toMap
+    assert(of(plain._1).keySet == Set(0L, 1L, 2L), s"${perBatch.asScala}")
+    assert(of(screened._1) == of(plain._1),
+      s"per-batch (jobs, stages): screen on ${of(screened._1)}, off ${of(plain._1)}")
+  }
+
   test("enhance auto-detects RFC3339 and RFC3164 shapes per record") {
     import spark.implicits._
     val lines = Seq(
