@@ -8,6 +8,17 @@ import org.apache.spark.sql.SparkSession
   * bakes in a cluster assumption: shuffle partitions are a config, AQE
   * re-plans at runtime (partition coalescing + skew-join splitting), and
   * broadcast thresholds let Catalyst pick broadcast joins for dim tables.
+  *
+  * Streaming checkpoints go through
+  * [[org.apache.spark.sql.graft.GraftCheckpointFileManager]]
+  * (`spark.sql.streaming.checkpointFileManagerClass`). Each micro-batch
+  * writes three small metadata files (source log, offset WAL, commit
+  * log), plus state-store deltas under `dedupWithin`. On a host without
+  * `libhadoop`, Spark's default manager starts a `readlink` process per
+  * path its rename resolves and a `chmod` process per file it creates,
+  * which cost about 109 ms of a 275 ms forwarder micro-batch. On
+  * `file:` paths the graft manager writes through java.nio instead;
+  * other schemes keep Spark's default.
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -33,6 +44,9 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      // java.nio checkpoint writes on file: paths (see the scaladoc)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[org.apache.spark.sql.graft.GraftCheckpointFileManager].getName)
 
   def getOrCreate(): SparkSession = {
     val spark = builder().getOrCreate()

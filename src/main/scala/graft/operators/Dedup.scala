@@ -725,7 +725,8 @@ object Dedup {
     val over = rows.groupBy(keys.map(col): _*).count()
       .filter(col("count") > maxBucket)
       .select(keys.map(col): _*)
-    rows.join(over, keys, "left_anti")
+    // a USING join puts the key columns first; keep the input's order
+    rows.join(over, keys, "left_anti").select(rows.columns.map(col): _*)
   }
 
   /** The `bands` band hashes of a signature: band b hashes signature
@@ -748,11 +749,6 @@ object Dedup {
         .as(Seq("band", "band_hash"))),
       Seq("band", "band_hash"), maxBucket)
 
-  /** Near-duplicate pairs via banded MinHash-LSH, verified by true
-    * shingle Jaccard. bands·rows must equal the signature length k.
-    * One shuffle on (band, band-hash); per-bucket self-join generates
-    * candidates; verification joins back the shingle sets.
-    */
   /** The shared exact-Jaccard verify: attach each side's shingle set
     * by id, compute, threshold. ONE definition so the verify recipe
     * (rounding, threshold semantics) can't diverge between the
@@ -771,6 +767,11 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col(aName), col(bName), col("jaccard"))
 
+  /** Near-duplicate pairs via banded MinHash-LSH, verified by true
+    * shingle Jaccard. bands·rows must equal the signature length k.
+    * One shuffle on (band, band-hash); per-bucket self-join generates
+    * candidates; verification joins back the shingle sets.
+    */
   def minhashLshPairs(df: DataFrame, id: Column, text: Column,
                       n: Int = 2, bands: Int = 16, rows: Int = 4,
                       threshold: Double = 0.5, seed: Long = 42L,
@@ -841,17 +842,6 @@ object Dedup {
     bipartiteLshPairsFrom(bandedCapped(nw, bands, rows, maxBucket),
       bandedCapped(old, bands, rows, maxBucket), nw, old, threshold)
 
-  /** [[minhashLshPairsAgainst]] with the corpus side served from a
-    * prebuilt [[minhashIndex]] frame (typically a parquet table): only
-    * the NEW batch is shingled and signed; the index is scanned as-is
-    * (twice — banding and verify — which at scale is two reads of a
-    * columnar table, not two recomputes of the signature stage).
-    * bands·rows must equal the k the index was built with. Each call
-    * persists the new batch's prep for its own lifetime (it feeds both
-    * the banding and the verify); a recurring ingest driver screening
-    * increment after increment should release it between calls —
-    * `spark.catalog.clearCache()` or unpersist — or the per-increment
-    * caches accumulate until storage eviction. */
   /** THE signature-length guard both index consumers share: an index
     * built with a different k would make element_at(sig, ...) read
     * past the array end, yielding nulls that concat_ws silently
@@ -866,6 +856,17 @@ object Dedup {
         lit(s" != bands*rows = $k — the index was built with a different k"))),
       lit(true)))
 
+  /** [[minhashLshPairsAgainst]] with the corpus side served from a
+    * prebuilt [[minhashIndex]] frame (typically a parquet table): only
+    * the NEW batch is shingled and signed; the index is scanned as-is
+    * (twice — banding and verify — which at scale is two reads of a
+    * columnar table, not two recomputes of the signature stage).
+    * bands·rows must equal the k the index was built with. Each call
+    * persists the new batch's prep for its own lifetime (it feeds both
+    * the banding and the verify); a recurring ingest driver screening
+    * increment after increment should release it between calls —
+    * `spark.catalog.clearCache()` or unpersist — or the per-increment
+    * caches accumulate until storage eviction. */
   def minhashLshPairsAgainstIndex(newDf: DataFrame, newId: Column, newText: Column,
                                   index: DataFrame,
                                   n: Int = 2, bands: Int = 16, rows: Int = 4,
@@ -1026,8 +1027,7 @@ object Dedup {
       }
     val buckets = Array.fill(bands)(
       scala.collection.mutable.HashMap.empty[Long, List[Int]])
-    minhashIndexBands(index, bands, rows, maxBucket)
-      .select(col("doc_id"), col("band"), col("band_hash")).collect().foreach { r =>
+    minhashIndexBands(index, bands, rows, maxBucket).collect().foreach { r =>
       slotOf.get(key(r.get(0))).foreach { s =>
         val b = buckets(r.getInt(1))
         b(r.getLong(2)) = s :: b.getOrElse(r.getLong(2), Nil)

@@ -287,8 +287,11 @@ class DedupSpec extends AnyFunSuite {
     }
     assert(msgs(wrongBands).exists(_.contains("signature length")),
       s"unexpected: $wrongBands")
-    // and the CORRECT shape still sails through both guards
-    assert(Dedup.minhashIndexBands(idx, bands = 32, rows = 2).count() > 0)
+    // and the CORRECT shape still sails through both guards, with the
+    // documented column order (positional readers rely on it)
+    val bands = Dedup.minhashIndexBands(idx, bands = 32, rows = 2)
+    assert(bands.columns.toSeq == Seq("doc_id", "band", "band_hash"))
+    assert(bands.count() > 0)
   }
 
   /** Ids of the `batch` rows the probe calls near-dups at `threshold`. */

@@ -945,6 +945,46 @@ class StreamingSpec extends AnyFunSuite {
     assert(total == 8) // 5 + 3, a.log not replayed on resume
   }
 
+  test("a dedupWithin checkpoint resumes under the other file manager: exactly once, replays dropped across the restart") {
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val sparkDefault = classOf[org.apache.spark.sql.execution.streaming.checkpointing
+      .FileContextBasedCheckpointFileManager].getName
+    val graftManager = classOf[org.apache.spark.sql.graft.GraftCheckpointFileManager].getName
+    val records = sampleLines(15)
+    for ((first, second) <- Seq(sparkDefault -> graftManager, graftManager -> sparkDefault)) {
+      val in = tmp(); val out = tmp(); val ck = tmp()
+      def drain(manager: String) = {
+        val prev = spark.conf.getOption(key)
+        spark.conf.set(key, manager)
+        try {
+          val q = Forwarder.start(spark,
+            Forwarder.Config(in, ck, dedupWithin = Some("1 hour")), new FileDelivery(out))
+          q.awaitTermination()
+          q
+        } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      }
+      // malformed lines bypass dedup, so a re-read a.log would deliver
+      // its malformed line twice
+      writeLines(in, "a.log", records.take(10) :+ "malformed a")
+      val before = drain(first)
+      // new records, replays of records delivered before the restart
+      writeLines(in, "b.log", records.drop(10) ++ records.take(5) :+ "malformed b")
+      val after = drain(second)
+      assert(after.recentProgress.head.batchId > before.lastProgress.batchId,
+        s"$first -> $second: the second run did not resume from the checkpoint")
+
+      val delivered = Files.walk(Paths.get(out, "main")).iterator().asScala
+        .filter(_.toString.endsWith(".ndjson"))
+        .flatMap(f => Files.readAllLines(f).asScala.iterator).toSeq
+      val (bad, good) = delivered.partition(_.contains("\"rawlog\":\"malformed"))
+      assert(bad.count(_.contains("malformed a")) == 1 && bad.count(_.contains("malformed b")) == 1,
+        s"$first -> $second: a file was reprocessed: $bad")
+      assert(good.size == 15, s"$first -> $second: ${good.size} records delivered, 15 expected")
+      for (i <- 0 until 15)
+        assert(good.count(_.contains(s"\"host-$i\"")) == 1, s"$first -> $second: host-$i")
+    }
+  }
+
   test("rateSpikes: hand moments, k sensitivity, zero-variance series never flags") {
     val spark = SparkTest.spark
     import spark.implicits._
