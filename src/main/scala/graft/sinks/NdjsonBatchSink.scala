@@ -2,7 +2,9 @@ package graft.sinks
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.UUID
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** Pluggable delivery target (SURVEY.md §2.A6-A8) — the seam where the
   * reference talks to Firehose (PutRecordBatch,
@@ -68,9 +70,15 @@ class NdjsonBatchSink(delivery: Delivery, conf: SinkConfig = SinkConfig())
   /** foreachBatch entry point: expects columns (stream STRING, json
     * STRING); rows are framed as `json`+'\n' per record downstream. */
   def process(df: DataFrame, batchId: Long): Unit =
-    df.select("stream", "json").foreachPartition { (rows: Iterator[Row]) =>
-      processRows(rows.map(r => (r.getString(0), r.getString(1).getBytes("UTF-8"))),
-        () => System.currentTimeMillis())
+    process(df.select("stream", "json").queryExecution.toRdd)
+
+  /** The same over rows already shaped (stream STRING, json STRING),
+    * e.g. the forwarder's [[org.apache.spark.sql.graft.RowPipeline]]
+    * output, which never becomes a Dataset. */
+  private[graft] def process(rows: RDD[InternalRow]): Unit =
+    rows.foreachPartition { (it: Iterator[InternalRow]) =>
+      processRows(it.map(r => (if (r.isNullAt(0)) null else r.getString(0),
+        r.getUTF8String(1).getBytes)), () => System.currentTimeMillis())
     }
 
   /** The per-partition production loop (specs drive this directly with a

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RowPipeline
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.logs.LogColumns
 import graft.sinks.{Delivery, FileDelivery, NdjsonBatchSink, SinkConfig}
@@ -166,6 +167,75 @@ object Forwarder {
     }
   }
 
+  /** The row-local stages after the last stateful step, in delivery
+    * order: the scrub (routing and the replay key saw the pre-scrub
+    * record), the near-dup screen (after the scrub, because the index
+    * holds delivered text; before the metric rewrite, because a
+    * replayed record must screen whether or not its route emits
+    * points), the metric leg, then the sink's (stream, json) columns. */
+  private[graft] def deliveryStages(conf: Config,
+                                    probe: Option[graft.operators.Dedup.MinhashProbe],
+                                    routeTable: Seq[Routing.Route]): DataFrame => DataFrame = {
+    df =>
+      val scrubbed = if (conf.scrubPii) scrubDelivery(df) else df
+      val screened = conf.nearDupScreen.zip(probe).fold(scrubbed) { case (s, p) =>
+        scrubbed.filter(!p.nearDup(col(s.column), s.threshold))
+      }
+      metricJson(screened, routeTable).select("stream", "json")
+  }
+
+  /** What [[start]] plans before the query runs: the streaming frame,
+    * the compiled row pipeline its micro-batches go through, and the
+    * idempotent release of both broadcasts (pipeline and probe). */
+  private[graft] final case class Plan(stream: DataFrame, rows: RowPipeline, release: () => Unit)
+
+  private[graft] def plan(spark: SparkSession, conf: Config,
+                          route: Option[Column] = None,
+                          source: Option[RecordSource] = None,
+                          routeTable: Seq[Routing.Route] = Nil): Plan = {
+    val r = route.getOrElse(
+      if (routeTable.nonEmpty) Routing.column(routeTable, conf.streamName)
+      else lit(conf.streamName))
+    val src = source
+      .getOrElse(FileLinesSource(conf.inputDir, conf.maxFilesPerTrigger))
+    // the near-dup screen is one broadcast probe per query: the frozen
+    // index's capped band buckets and shingle sets, collected and
+    // broadcast here, once, then one row-local filter in the pipeline
+    val probe = conf.nearDupScreen.map { s =>
+      graft.operators.Dedup.minhashProbe(spark.read.parquet(s.indexDir),
+        s.n, s.bands, s.rows, s.seed, s.maxBucket)
+    }
+    val releaseProbe = () => probe.foreach(_.release())
+    try {
+      val lines = src.stream(spark)
+      val delivery = deliveryStages(conf, probe, routeTable)
+      val (stream, rowStages) = conf.dedupWithin match {
+        // dedup AFTER transform on the EXACT serialized record (md5 of
+        // the raw json, not StreamDedup's corpus-text normalization —
+        // case or whitespace differences are distinct records, not
+        // replays); the parsed `timestamp` is the event time. Malformed
+        // lines carry a null timestamp by contract ("drop to null,
+        // never lost") — they would read as epoch 0 inside the
+        // watermark operator and be swallowed as late, so they bypass
+        // the dedup branch entirely. The stateful operator needs the
+        // streaming plan, so everything up to it stays in the stream.
+        case Some(delay) =>
+          val keyed = transform(lines, conf.deployEnv, r)
+            .withColumn("content_hash", md5(col("json")))
+          val deduped = keyed.filter(col("timestamp").isNotNull)
+            .withColumn("event_ts", col("timestamp"))
+            .withWatermark("event_ts", delay)
+            .dropDuplicatesWithinWatermark("content_hash")
+            .drop("event_ts")
+          (deduped.union(keyed.filter(col("timestamp").isNull)), delivery)
+        case None =>
+          (lines, delivery.compose((df: DataFrame) => transform(df, conf.deployEnv, r)))
+      }
+      val rows = RowPipeline.plan(spark, stream.schema, rowStages)
+      Plan(stream, rows, () => { rows.release(); releaseProbe() })
+    } catch { case e: Throwable => releaseProbe(); throw e }
+  }
+
   /** Start the streaming forwarder. The record source defaults to
     * [[FileLinesSource]] over `conf.inputDir`; pass any other
     * [[RecordSource]] to swap the consumer without touching the
@@ -176,64 +246,38 @@ object Forwarder {
     * `SetGlobalRouting` surface). When non-empty it compiles to the
     * routing column (unless an explicit `route` overrides it) AND
     * enables the [[metricJson]] alert leg for routes carrying an
-    * `output:` block. */
+    * `output:` block.
+    *
+    * The row-local stages are planned once per query, here, not on
+    * every micro-batch: parse/enhance, routing and serialization (unless
+    * `dedupWithin` keeps them in the stream, ahead of its stateful
+    * operator), the scrub, the near-dup screen and the metric leg are
+    * analyzed and optimized once into a [[RowPipeline]] that each
+    * executor thread compiles once; the streaming query plans only the
+    * source (and the dedup) per epoch, and the sink feeds each
+    * micro-batch's rows through the pipeline. Two consequences:
+    *  - the session settings those stages read at analysis (time zone,
+    *    ANSI mode) are read at `start`; changing them later does not
+    *    reach a running forwarder;
+    *  - a `route` that is not row-local (a subquery, an aggregate or
+    *    window) is refused here with an IllegalArgumentException that
+    *    names the offending node.
+    * Both broadcasts (pipeline and probe) are destroyed on termination,
+    * and when `start` itself fails. */
   def start(spark: SparkSession, conf: Config, delivery: Delivery,
             route: Option[Column] = None,
             source: Option[RecordSource] = None,
             routeTable: Seq[Routing.Route] = Nil): StreamingQuery = {
-    val r = route.getOrElse(
-      if (routeTable.nonEmpty) Routing.column(routeTable, conf.streamName)
-      else lit(conf.streamName))
-    val src = source
-      .getOrElse(FileLinesSource(conf.inputDir, conf.maxFilesPerTrigger))
-    val transformed = transform(src.stream(spark), conf.deployEnv, r)
-    // dedup AFTER transform on the EXACT serialized record (md5 of the
-    // raw json, not StreamDedup's corpus-text normalization — case or
-    // whitespace differences are distinct records, not replays); the
-    // parsed `timestamp` is the event time. Malformed lines carry a
-    // null timestamp by contract ("drop to null, never lost") — they
-    // would read as epoch 0 inside the watermark operator and be
-    // swallowed as late, so they bypass the dedup branch entirely.
-    val out = conf.dedupWithin match {
-      case Some(delay) =>
-        val keyed = transformed.withColumn("content_hash", md5(col("json")))
-        val deduped = keyed.filter(col("timestamp").isNotNull)
-          .withColumn("event_ts", col("timestamp"))
-          .withWatermark("event_ts", delay)
-          .dropDuplicatesWithinWatermark("content_hash")
-          .drop("event_ts")
-        deduped.union(keyed.filter(col("timestamp").isNull))
-      case None => transformed
-    }
-    // scrub LAST: routing and the replay key saw the pre-scrub record
-    val delivered = if (conf.scrubPii) scrubDelivery(out) else out
-    // the near-dup screen is one broadcast probe per query — the frozen
-    // index's capped band buckets and shingle sets, collected and
-    // broadcast here, once — and one row-local filter per micro-batch
-    // in the sink's own stage: no join, no shuffle, and the
-    // foreachBatch frame is scanned once. It sits after the scrub (the
-    // index holds delivered text) and before the metric rewrite (a
-    // replayed record must screen whether or not its route emits
-    // points). The probe's broadcast is destroyed on termination
-    // (scheduled restarts must not strand one index copy per run).
-    val screen = conf.nearDupScreen.map { s =>
-      (s, graft.operators.Dedup.minhashProbe(spark.read.parquet(s.indexDir),
-        s.n, s.bands, s.rows, s.seed, s.maxBucket))
-    }
-    def screened(df: DataFrame): DataFrame = screen.fold(df) { case (s, probe) =>
-      df.filter(!probe.nearDup(col(s.column), s.threshold))
-    }
-    val release = () => screen.foreach(_._2.release())
+    val p = plan(spark, conf, route, source, routeTable)
     val sink = new NdjsonBatchSink(delivery, conf.sink)
     val query =
-      try delivered.writeStream
+      try p.stream.writeStream
         .option("checkpointLocation", conf.checkpointDir)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch((df: DataFrame, id: Long) =>
-          sink.process(metricJson(screened(df), routeTable), id))
+        .foreachBatch((df: DataFrame, _: Long) => sink.process(p.rows.run(df)))
         .start()
-      catch { case e: Throwable => release(); throw e }
-    StreamIndex.releaseOnTermination(spark, query, release)
+      catch { case e: Throwable => p.release(); throw e }
+    StreamIndex.releaseOnTermination(spark, query, p.release)
   }
 
   /** Convenience: forward to local NDJSON files. */

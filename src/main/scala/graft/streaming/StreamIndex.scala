@@ -28,7 +28,8 @@ object StreamIndex {
     * termination and deregisters itself; the isActive re-check closes
     * the race where a tiny AvailableNow run terminates before the
     * listener lands. Both paths may fire, so the hook must be
-    * idempotent (unpersist is; so is `MinhashProbe.release`). */
+    * idempotent (unpersist is; so are `MinhashProbe.release` and
+    * `RowPipeline.release`). */
   private[streaming] def releaseOnTermination(spark: SparkSession,
                                               query: StreamingQuery,
                                               release: () => Unit): StreamingQuery = {

@@ -245,21 +245,38 @@ class StreamingSpec extends AnyFunSuite {
     }
     val lines = sampleLines(30)
     val idx = screenIndex(lines.take(2))
-    def run(screen: Option[Forwarder.NearDupScreen]): (String, Int) = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.streaming.operators.stateful.{StatefulOperator, StreamingDeduplicateWithinWatermarkExec}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    def run(screen: Option[Forwarder.NearDupScreen],
+            dedupWithin: Option[String] = None): (String, Int, SparkPlan) = {
       val in = tmp(); val out = tmp()
       lines.grouped(10).zipWithIndex.foreach { case (g, i) => writeLines(in, s"$i.log", g) }
       val q = Forwarder.start(spark,
-        Forwarder.Config(in, tmp(), maxFilesPerTrigger = 1, nearDupScreen = screen),
+        Forwarder.Config(in, tmp(), maxFilesPerTrigger = 1, nearDupScreen = screen,
+          dedupWithin = dedupWithin),
         new FileDelivery(out))
       q.awaitTermination()
       val delivered = Files.walk(Paths.get(out)).iterator().asScala
         .filter(_.toString.endsWith(".ndjson"))
         .map(f => Files.readAllLines(f).size).sum
-      (q.id.toString, delivered)
+      (q.id.toString, delivered,
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan)
     }
+    // the row-local stages are planned once, outside the micro-batch
+    // plan; with dedupWithin, the plan ends at the dedup operator
+    def rowStagesIn(plan: SparkPlan): Seq[String] =
+      Seq("graft_syslog_parse", "to_json").filter(plan.toString.contains)
     spark.sparkContext.addSparkListener(listener)
     val (plain, screened) = try {
       val r = (run(None), run(Some(Forwarder.NearDupScreen(idx))))
+      for ((_, _, plan) <- Seq(r._1, r._2))
+        assert(rowStagesIn(plan).isEmpty, s"row-local stages in the micro-batch plan:\n$plan")
+      val (_, dedupDelivered, dedupPlan) = run(None, Some("1 hour"))
+      assert(dedupDelivered == 30)
+      val stateful = dedupPlan.collect { case s: StatefulOperator => s }
+      assert(stateful.headOption.exists(_.isInstanceOf[StreamingDeduplicateWithinWatermarkExec]),
+        s"the last stateful node is not the dedup:\n$dedupPlan")
       // a marker job after both runs: once the listener sees it, it has
       // seen every earlier job
       spark.sparkContext.setLocalProperty("graft.test.marker", "1")
@@ -268,7 +285,8 @@ class StreamingSpec extends AnyFunSuite {
       assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
       r
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(plain._2 == 30 && screened._2 == 28, s"delivered: plain $plain, screened $screened")
+    assert(plain._2 == 30 && screened._2 == 28,
+      s"delivered: plain ${plain._2}, screened ${screened._2}")
     def of(run: String) = perBatch.asScala.collect { case ((`run`, b), c) => b.toLong -> c }.toMap
     assert(of(plain._1).keySet == Set(0L, 1L, 2L), s"${perBatch.asScala}")
     assert(of(screened._1) == of(plain._1),
