@@ -241,10 +241,10 @@ object Layout {
     * interleave a single byte into a directory the winner will commit.
     * (`_COMMITTED` stays the READ barrier; `_CLAIM` is the WRITE
     * barrier.) A failed claimer simply retries: its next listing
-    * numbers past the claimed directory. Object-store note: file
-    * create is atomic on HDFS/posix; on eventual-consistency stores
-    * front with a consistent metadata layer. Returns the published
-    * generation. */
+    * numbers past the claimed directory. Both markers go through
+    * [[createMarker]], an exclusive create on `file:` and HDFS; on
+    * eventual-consistency object stores front with a consistent
+    * metadata layer. Returns the published generation. */
   def publishIndexVersion(spark: org.apache.spark.sql.SparkSession,
                           indexDir: String,
                           artifacts: Map[String, DataFrame]): Long = {
@@ -275,10 +275,7 @@ object Layout {
     val root = new org.apache.hadoop.fs.Path(indexDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val genDir = new org.apache.hadoop.fs.Path(root, s"$GenPrefix$gen")
-    val claimed =
-      try fs.createNewFile(new org.apache.hadoop.fs.Path(genDir, ClaimMarker))
-      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
-    if (!claimed)
+    if (!createMarker(fs, new org.apache.hadoop.fs.Path(genDir, ClaimMarker)))
       throw new java.io.IOException(
         s"publishIndexVersion: gen=$gen already claimed under $indexDir — " +
           "racing publisher lost at claim time (nothing was written); " +
@@ -287,11 +284,31 @@ object Layout {
       df.write.mode("overwrite")
         .parquet(new org.apache.hadoop.fs.Path(genDir, name).toString)
     }
-    if (!fs.createNewFile(new org.apache.hadoop.fs.Path(genDir, CommitMarker)))
+    if (!createMarker(fs, new org.apache.hadoop.fs.Path(genDir, CommitMarker)))
       throw new java.io.IOException(
         s"publishIndexVersion: commit marker already exists under $genDir — " +
           "claimed directory was committed by someone else (corrupted claim?)")
     gen
+  }
+
+  /** Create the empty marker file `p` (and its parent dirs) only if no
+    * file is there yet; true iff this call created it, so of racing
+    * callers exactly one wins. On `file:` that takes an O_EXCL create
+    * (`Files.createFile`): Hadoop's local `createNewFile` checks
+    * `exists` and then opens with truncation, so racing callers can
+    * all see "absent" and all report a win. Other schemes keep
+    * `createNewFile`, which is atomic on HDFS. */
+  private[graft] def createMarker(fs: org.apache.hadoop.fs.FileSystem,
+                                  p: org.apache.hadoop.fs.Path): Boolean = {
+    val q = fs.makeQualified(p)
+    if (q.toUri.getScheme == "file") {
+      val local = java.nio.file.Paths.get(q.toUri)
+      java.nio.file.Files.createDirectories(local.getParent)
+      try { java.nio.file.Files.createFile(local); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    } else
+      try fs.createNewFile(p)
+      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
   }
 
   /** Highest committed generation under `indexDir`, if any. */

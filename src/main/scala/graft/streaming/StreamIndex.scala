@@ -6,11 +6,16 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.operators.Similarity.Codec
 
-/** Streaming index maintenance — the INGEST path of the pay-once ANN
-  * index (SURVEY.md §2.C154, streaming side): embeddings arrive
-  * continuously (a crawler's encoder output, an ingestion pipeline's
-  * embedding stage), and the binary-quantized codes table must grow
-  * with them WITHOUT retraining or re-encoding the existing corpus.
+/** Streaming index maintenance — the INGEST path of the pay-once
+  * indexes (SURVEY.md §2.C154/C160/C161, streaming side): embeddings
+  * and documents arrive continuously (a crawler's encoder output, an
+  * ingestion pipeline's embedding stage), and the index tables must
+  * grow with them WITHOUT retraining or re-encoding the existing
+  * corpus. One appender, [[startIndexAppend]], grows any set of
+  * [[AppendLeg]]s (BQ codes, IVF cells, IVFADC cells+codes, BM25 text
+  * partials) under one checkpoint; beside it sit the drift monitors
+  * that say when the frozen artifacts need a retrain, and the
+  * compactors that fold a streamed tree into one published generation.
   */
 object StreamIndex {
 
@@ -56,45 +61,13 @@ object StreamIndex {
   private[streaming] def unpersisting(pinned: Seq[DataFrame]): () => Unit =
     () => pinned.foreach(_.unpersist(blocking = false))
 
-  /** Tail a directory of embedding parquet files and append each
-    * micro-batch's 1-bit codes to a partitioned codes table.
-    *
-    * Contract stack (each leg proven elsewhere, composed here):
-    *  - Encoding runs against the FROZEN stats table at `statsDir` —
-    *    `Codec.BQ.encode` under frozen stats IS the append path (the BQ
-    *    append-parity law: re-encoding existing rows reproduces their
-    *    codes byte-for-byte, and a grown table under a full shortlist
-    *    equals bruteTopK over the union).
-    *  - Each micro-batch OVERWRITES its own `batch=<id>` partition of
-    *    `codesDir` (the monitor plumbing's replay-idempotence
-    *    pattern): a replayed batch — rename-failure retry, or a crash
-    *    between the write and the commit log — replaces its own
-    *    output instead of duplicating codes.
-    *  - Readers take `spark.read.parquet(codesDir)` as the
-    *    `(vec_id, codes)` table of `annSearch(Codec.BQ, …)`; the
-    *    discovered `batch` partition column is dropped by selection.
-    *
-    * Scale shape: per batch, one codegen map pass over the new rows
-    * against a bounded 1-row stats broadcast; only ⌈d/32⌉ packed
-    * longs per vector land on disk — the stream writes 32× fewer
-    * bytes than the raw float32 vectors it consumes, and nothing
-    * corpus-sized is ever read back. Drift discipline: frozen
-    * thresholds slowly stale as the embedding distribution moves —
-    * run [[startBqDriftMonitor]] beside this append and
-    * retrain+re-encode as a batch job when it alarms (the
-    * standard production split: cheap streaming appends, rare
-    * deliberate rebuilds). The retrain's four rewritten artifacts
-    * publish atomically via
-    * [[graft.sources.Layout.publishIndexVersion]] — readers flip
-    * generations whole, never mixed — and append legs restart
-    * against the new generation's tables. */
   /** Tombstone guard for the append legs: a takedown
     * ([[graft.operators.Similarity.indexRemove]]) cleans the BATCH
     * tables, but a late-arriving or replayed stream file can
     * re-encode the removed id — deleted content resurrected by the
     * ingest path. Each micro-batch anti-joins the tombstone id table
-    * before encoding (the same keyed-anti-join primitive as the
-    * remove itself); readers of the still-growing streamed dir apply
+    * before any leg sees it (the same keyed-anti-join primitive as the
+    * remove itself); readers of the still-growing streamed dirs apply
     * the SAME guard by passing `tombstones = Some(read(tombstonesDir))`
     * to the `AgainstIndex` search they run (one argument, not caller
     * folklore — search-with-tombstones ≡ search-over-removed-index is
@@ -123,106 +96,212 @@ object StreamIndex {
       case None => (identity[DataFrame] _, Nil)
     }
 
-  def startBqIndexAppend(spark: SparkSession, inputDir: String,
-                         schema: StructType, id: String, vec: String,
-                         checkpointDir: String, statsDir: String,
-                         codesDir: String,
-                         tombstonesDir: Option[String] = None): StreamingQuery = {
-    graft.GraftExtensions.ensureRegistered(spark)
-    // the frozen stats are d rows, read ONCE per query start and
-    // pinned (the neardup_screen pattern) — not re-read per micro-batch
-    val stats = spark.read.parquet(statsDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (guard, guardPinned) = tombstoneGuard(spark, id, tombstonesDir)
-    releaseOnTermination(spark,
-      spark.readStream.schema(schema).parquet(inputDir)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Codec.BQ.encode(guard(batch), col(id), col(vec), stats)
-            .write.mode("overwrite")
-            .parquet(codesDir.stripSuffix("/") + s"/batch=$batchId")
-        }
-        .start(),
-      unpersisting(stats +: guardPinned))
+  /** One artifact family that [[startIndexAppend]] grows; the leg list
+    * passed there IS the streamed artifact set. A leg owns three
+    * things: the frozen artifact dirs it reads and pins once per query
+    * start (`frozenDirs`), its value column (`vec` or `text`), and the
+    * frames it derives from each guarded micro-batch against those
+    * pins (`frames`). Frame i is written with `mode("overwrite")` to
+    * `<dirs(i)>/batch=<id>`, in `dirs` order, and the leg's per-batch
+    * pin (if it makes one) is released in a `finally` — not stranded
+    * per batch for the app lifetime. */
+  sealed abstract class AppendLeg(val dirs: Seq[String],
+                                  private[streaming] val frozenDirs: Seq[String]) {
+    /** This micro-batch's frames (aligned with `dirs`) and the
+      * per-batch pin to release once they are written. */
+    protected[streaming] def frames(rows: DataFrame, id: String, pins: Pins)
+        : (Seq[DataFrame], Option[DataFrame])
+
+    private[streaming] final def append(rows: DataFrame, id: String, pins: Pins,
+                                        batchId: Long): Unit = {
+      val (out, pin) = frames(rows, id, pins)
+      try dirs.zip(out).foreach { case (dir, df) =>
+        df.write.mode("overwrite").parquet(dir.stripSuffix("/") + s"/batch=$batchId")
+      } finally pin.foreach(_.unpersist(blocking = false))
+    }
   }
 
-  /** Streaming IVF CELL maintenance (C154i — the cells half of the
-    * composed index's append story): [[startBqIndexAppend]] grows the
-    * codes table, but the cell-bounded compositions (IVF+BQ, IVF+PQ)
-    * candidate-join on the CELLS table too — a streamed vector with
-    * codes but no cell is silently invisible to every composed search.
-    * This leg assigns each micro-batch's vectors to their nearest
-    * FROZEN centroid
-    * ([[graft.operators.Similarity.ivfAssignAgainstIndex]] — the
-    * build's own argmax definition, so a streamed vector lands in
-    * exactly the cell the batch build would have chosen) and appends
-    * `(vec_id, cell)` rows to `cellsDir/batch=<id>` with the same
-    * overwrite-mode replay idempotence as the codes leg. Run BOTH legs
-    * over the same input stream (separate checkpoints) and the full
-    * four-artifact composed search keeps seeing every appended vector
-    * (spec-pinned: full probe + full shortlist over the grown tables ≡
-    * bruteTopK over the union). Per batch: one codegen scoring pass
-    * against the bounded nlist-row centroid broadcast; only (long,
-    * long) rows land on disk. Centroid drift is the same retrain
-    * discipline as the stats table — [[startBqDriftMonitor]] alarms
-    * cover both frozen artifacts (they stale together: both are
-    * corpus-distribution summaries). */
-  def startIvfCellAppend(spark: SparkSession, inputDir: String,
-                         schema: StructType, id: String, vec: String,
-                         checkpointDir: String, centroidsDir: String,
-                         cellsDir: String,
-                         tombstonesDir: Option[String] = None): StreamingQuery = {
-    graft.GraftExtensions.ensureRegistered(spark)
-    // the frozen centroids are nlist rows, read ONCE per query start
-    // and pinned (the startBqIndexAppend discipline)
-    val cents = spark.read.parquet(centroidsDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (guard, guardPinned) = tombstoneGuard(spark, id, tombstonesDir)
-    releaseOnTermination(spark,
-      spark.readStream.schema(schema).parquet(inputDir)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Similarity
-            .ivfAssignAgainstIndex(guard(batch), col(id), col(vec), cents)
-            .write.mode("overwrite")
-            .parquet(cellsDir.stripSuffix("/") + s"/batch=$batchId")
-        }
-        .start(),
-      unpersisting(cents +: guardPinned))
+  /** A query's pinned frozen frames, by artifact dir. */
+  private[streaming] type Pins = String => DataFrame
+
+  object AppendLeg {
+    /** Streamed BQ codes (C154f): each micro-batch's 1-bit codes,
+      * encoded against the FROZEN stats table at `statsDir` —
+      * `Codec.BQ.encode` under frozen stats IS the append path (the BQ
+      * append-parity law: re-encoding existing rows reproduces their
+      * codes byte-for-byte, and a grown table under a full shortlist
+      * equals bruteTopK over the union). Readers take
+      * `spark.read.parquet(codesDir)` as the `(vec_id, codes)` table of
+      * `annSearch(Codec.BQ, …)`; the discovered `batch` partition
+      * column is dropped by selection.
+      *
+      * Scale shape: per batch, one codegen map pass over the new rows
+      * against a bounded 1-row stats broadcast; only ⌈d/32⌉ packed
+      * longs per vector land on disk — the stream writes 32× fewer
+      * bytes than the raw float32 vectors it consumes, and nothing
+      * corpus-sized is ever read back. Drift discipline: frozen
+      * thresholds slowly stale as the embedding distribution moves —
+      * run [[startBqDriftMonitor]] beside this append and
+      * retrain+re-encode as a batch job when it alarms (the
+      * standard production split: cheap streaming appends, rare
+      * deliberate rebuilds). The retrain's four rewritten artifacts
+      * publish atomically via
+      * [[graft.sources.Layout.publishIndexVersion]] — readers flip
+      * generations whole, never mixed — and appends restart against
+      * the new generation's tables. */
+    final case class BqCodes(statsDir: String, codesDir: String, vec: String)
+        extends AppendLeg(Seq(codesDir), Seq(statsDir)) {
+      protected[streaming] def frames(rows: DataFrame, id: String, pins: Pins) =
+        (Seq(Codec.BQ.encode(rows, col(id), col(vec), pins(statsDir))), None)
+    }
+
+    /** Streamed IVF cells (C154i — the cells half of the composed
+      * index's append story): [[BqCodes]] grows the codes table, but
+      * the cell-bounded compositions (IVF+BQ, IVF+PQ) candidate-join on
+      * the CELLS table too — a streamed vector with codes but no cell
+      * is silently invisible to every composed search. This leg assigns
+      * each micro-batch's vectors to their nearest FROZEN centroid
+      * ([[graft.operators.Similarity.ivfAssignAgainstIndex]] — the
+      * build's own argmax definition, so a streamed vector lands in
+      * exactly the cell the batch build would have chosen) and writes
+      * `(vec_id, cell)` rows. Paired with [[BqCodes]] in ONE
+      * [[startIndexAppend]] (the composed append) the full
+      * four-artifact composed search keeps seeing every appended vector
+      * (spec-pinned: full probe + full shortlist over the grown tables
+      * ≡ bruteTopK over the union). Per batch: one codegen scoring pass
+      * against the bounded nlist-row centroid broadcast; only (long,
+      * long) rows land on disk. Centroid drift is the same retrain
+      * discipline as the stats table — [[startIvfDriftMonitor]] alarms
+      * on it (both frozen artifacts are corpus-distribution summaries
+      * and stale together). */
+    final case class IvfCells(centroidsDir: String, cellsDir: String, vec: String)
+        extends AppendLeg(Seq(cellsDir), Seq(centroidsDir)) {
+      protected[streaming] def frames(rows: DataFrame, id: String, pins: Pins) =
+        (Seq(graft.operators.Similarity.ivfAssignAgainstIndex(
+          rows, col(id), col(vec), pins(centroidsDir))), None)
+    }
+
+    /** Streamed IVFADC (C161 — the RESIDUAL-PQ family, the index the
+      * retrain loop actually publishes): each micro-batch is assigned
+      * and residual-encoded against the FROZEN centroids + codebook via
+      * [[graft.operators.Similarity.ivfPqResAppend]]'s own per-row
+      * functions (the C156 append-parity law: appending the index's
+      * rows reproduces its tables exactly), writing `(vec_id, cell)`
+      * then `(vec_id, codes)` — both in the same micro-batch, so at
+      * every committed offset the two tables cover exactly the same
+      * vectors. The internal assignment pin
+      * ([[graft.operators.Similarity.ivfPqResAppendPinned]]) is this
+      * leg's per-batch pin. Readers of the still-growing dirs pass
+      * `tombstones` to `ivfPqResTopKAgainstIndex` (the shared
+      * reader-guard argument); compaction + atomic re-publish is
+      * [[compactStreamedIndex]] with the frozen centroids/books riding
+      * along. Per batch: |batch|·nlist map-side centroid scores against
+      * the bounded nlist-row broadcast plus one m·ksub-bounded encode;
+      * only (long, long) and (long, array<int>) rows land on disk. */
+    final case class IvfPqRes(centroidsDir: String, booksDir: String,
+                              cellsDir: String, codesDir: String,
+                              vec: String, m: Int, ksub: Int)
+        extends AppendLeg(Seq(cellsDir, codesDir), Seq(centroidsDir, booksDir)) {
+      protected[streaming] def frames(rows: DataFrame, id: String, pins: Pins) = {
+        val (cells, codes, pin) = graft.operators.Similarity.ivfPqResAppendPinned(
+          pins(centroidsDir), pins(booksDir), rows, col(id), col(vec), m, ksub)
+        (Seq(cells, codes), Some(pin))
+      }
+    }
+
+    /** Streamed BM25 TEXT-index partials (C160 — the retrieval twin of
+      * the ANN legs): each micro-batch's index contribution lands as
+      * PER-BATCH PARTIAL frames under `indexDir` — `postings/`,
+      * `terms/` (the batch's own per-term df/ctf), `docs/` and `stats/`
+      * (the batch's 1-row count/token mass).
+      *
+      * Why partials instead of merged frames: df/ctf/avgdl are not
+      * frozen artifacts — every append changes them, and a streamed
+      * read-merge-rewrite of a vocabulary table per micro-batch is the
+      * read-modify-write cycle streaming ingest exists to avoid. But
+      * df/ctf/stats merge by PURE ADDITION ([[graft.functions.Keywords
+      * .textIndexAppend]]'s outer-merge is associative+commutative), so
+      * the partials ARE the index: [[readStreamedTextIndex]] folds them
+      * with one vocab-bounded `groupBy(term).sum` and a #batches-row
+      * stats sum — work proportional to the vocabulary, never the
+      * corpus — and postings/docs union by partition discovery, exactly
+      * the shape the batch append produces under term-bucketed storage.
+      *
+      * Contract stack (each leg proven elsewhere, composed here):
+      *  - Per batch, ONE tokenize pass ([[graft.functions.Keywords
+      *    .docTermCounts]], cached for the four derived writes and
+      *    released as this leg's per-batch pin); the frame definitions
+      *    are [[graft.functions.Keywords.textIndexFromPostings]]'s own,
+      *    so the streamed partials cannot drift from the batch build's.
+      *  - Replay idempotence means a replayed batch replaces its own
+      *    partials instead of double-counting df/ctf mass.
+      *  - Readers of the still-growing dir pass `tombstones` to
+      *    [[readStreamedTextIndex]], which routes the guard through
+      *    [[graft.functions.Keywords.textIndexRemove]] — for text a
+      *    takedown must also subtract df/ctf/stats mass, so the guard
+      *    IS the remove primitive, not a bare filter (the same reason
+      *    the text `AgainstIndex` searches take no tombstone argument).
+      *  - New-ids-only caller contract, inherited from
+      *    [[graft.functions.Keywords.textIndexAppend]]: a re-crawled
+      *    id must be tombstoned (or compacted out) first — streamed
+      *    partials are additive, so a re-sent id would double-count.
+      *
+      * Scale shape: per batch, one explode+aggregate over the new docs
+      * only; nothing corpus-sized is read back, the vocabulary merge is
+      * deferred to read time where it costs one bounded aggregation.
+      * Compaction endgame: [[compactStreamedTextIndex]]. */
+    final case class TextPartials(indexDir: String, text: String)
+        extends AppendLeg(Seq("postings", "terms", "docs", "stats")
+          .map(indexDir.stripSuffix("/") + "/" + _), Nil) {
+      protected[streaming] def frames(rows: DataFrame, id: String, pins: Pins) = {
+        val tf = graft.functions.Keywords.docTermCounts(rows, col(id), col(text))
+        val ix = graft.functions.Keywords.textIndexFromPostings(tf)
+        (Seq(ix.postings, ix.terms, ix.docs, ix.stats), Some(tf))
+      }
+    }
   }
 
-  /** COMPOSED index append (C154i's single-stream form): grow the
-    * codes AND cells tables from ONE stream under ONE checkpoint. Two
-    * separate legs ([[startBqIndexAppend]] + [[startIvfCellAppend]])
-    * are each correct, but their checkpoints advance independently —
-    * one leg can commit batches the other hasn't processed, and during
-    * that lag a vector sits in codes without a cell (or vice versa)
-    * and is invisible to the composed search's candidate⋈codes join.
-    * Here both artifacts are written inside the SAME micro-batch
-    * before its commit, so at every committed offset the two tables
-    * cover exactly the same vectors; a crash between the two writes
-    * leaves an uncommitted batch whose replay overwrites BOTH
-    * `batch=<id>` partitions (the idempotence pattern heals the
-    * half-written window). The batch is pinned across its two
-    * consumers — without the persist each write would re-read the
-    * input file separately. */
-  def startComposedIndexAppend(spark: SparkSession, inputDir: String,
-                               schema: StructType, id: String, vec: String,
-                               checkpointDir: String, statsDir: String,
-                               centroidsDir: String, codesDir: String,
-                               cellsDir: String,
-                               tombstonesDir: Option[String] = None): StreamingQuery = {
+  /** Tail a directory of parquet files (embeddings or documents keyed by
+    * `id`) and grow every artifact of `legs` from each micro-batch,
+    * under ONE checkpoint. Contract stack, shared by every leg:
+    *  - Frozen artifacts (stats, centroids, codebooks) are small and
+    *    read ONCE per query start and pinned (the neardup_screen
+    *    pattern) — not re-read per micro-batch; the pins and the
+    *    tombstone frame are released on termination.
+    *  - The [[tombstoneGuard]] runs first, so every leg sees the same
+    *    tombstone-filtered rows.
+    *  - Each micro-batch OVERWRITES its own `batch=<id>` partition of
+    *    every output dir (the monitor plumbing's replay-idempotence
+    *    pattern): a replayed batch — rename-failure retry, or a crash
+    *    between a write and the commit log — replaces its own output
+    *    instead of duplicating rows. With a replayable source, that
+    *    idempotent sink is exactly-once output.
+    *  - Lockstep: all legs write inside the SAME micro-batch before its
+    *    commit, so at every committed offset the artifacts cover
+    *    exactly the same input rows. Legs under separate checkpoints
+    *    advance independently — one can commit batches the other hasn't
+    *    processed, and during that lag a vector sits in codes without a
+    *    cell (or vice versa), invisible to the composed search's
+    *    candidate⋈codes join. A crash between two legs' writes leaves
+    *    an uncommitted batch whose replay overwrites every `batch=<id>`
+    *    partition (the idempotence pattern heals the half-written
+    *    window). With more than one leg the guarded batch is pinned
+    *    across them — without the persist each leg would re-read the
+    *    input file separately. */
+  def startIndexAppend(spark: SparkSession, inputDir: String,
+                       schema: StructType, id: String, checkpointDir: String,
+                       legs: Seq[AppendLeg],
+                       tombstonesDir: Option[String] = None): StreamingQuery = {
+    require(legs.nonEmpty, "startIndexAppend needs >= 1 append leg")
+    // a dir nested in another counts too: reading the outer one would
+    // discover the inner leg's files
+    val clash = legs.flatMap(_.dirs).map(_.stripSuffix("/") + "/").combinations(2)
+      .filter(p => p(0).startsWith(p(1)) || p(1).startsWith(p(0))).toSeq
+    require(clash.isEmpty, "two append legs write the same directory: " +
+      clash.map(_.mkString(" and ")).mkString("; "))
     graft.GraftExtensions.ensureRegistered(spark)
-    val stats = spark.read.parquet(statsDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = spark.read.parquet(centroidsDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pins = legs.flatMap(_.frozenDirs).distinct.map(d => d -> spark.read
+      .parquet(d).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)).toMap
     val (guard, guardPinned) = tombstoneGuard(spark, id, tombstonesDir)
     releaseOnTermination(spark,
       spark.readStream.schema(schema).parquet(inputDir)
@@ -231,170 +310,18 @@ object StreamIndex {
         .option("checkpointLocation", checkpointDir)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // the guard runs BEFORE the pin so both artifact writes see
-          // the same tombstone-filtered rows
-          val pinned = guard(batch).persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            Codec.BQ.encode(pinned, col(id), col(vec), stats)
-              .write.mode("overwrite")
-              .parquet(codesDir.stripSuffix("/") + s"/batch=$batchId")
-            graft.operators.Similarity
-              .ivfAssignAgainstIndex(pinned, col(id), col(vec), cents)
-              .write.mode("overwrite")
-              .parquet(cellsDir.stripSuffix("/") + s"/batch=$batchId")
-          } finally pinned.unpersist(blocking = false): Unit
+          val guarded = guard(batch)
+          val rows = if (legs.size > 1) guarded.persist(
+            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else guarded
+          try legs.foreach(_.append(rows, id, pins, batchId))
+          finally if (legs.size > 1) rows.unpersist(blocking = false): Unit
         }
         .start(),
-      unpersisting(Seq(stats, cents) ++ guardPinned))
-  }
-
-  /** Streaming IVFADC maintenance (C161 — [[startComposedIndexAppend]]
-    * for the RESIDUAL-PQ family, the index the retrain loop actually
-    * publishes): each micro-batch is assigned and residual-encoded
-    * against the FROZEN centroids + codebook via [[graft.operators
-    * .Similarity.ivfPqResAppend]]'s own per-row functions (the C156
-    * append-parity law: appending the index's rows reproduces its
-    * tables exactly), and `(vec_id, cell)` + `(vec_id, codes)` land
-    * in lockstep `batch=<id>` overwrite partitions under ONE
-    * checkpoint — at every committed offset the two tables cover
-    * exactly the same vectors, so a streamed vector is never visible
-    * to the candidate join without its code (or vice versa). The
-    * internal assignment pin is released per micro-batch
-    * ([[graft.operators.Similarity.ivfPqResAppendPinned]]), not
-    * stranded per batch for the app lifetime. Readers of the
-    * still-growing dirs pass `tombstones` to
-    * `ivfPqResTopKAgainstIndex` (the shared reader-guard argument);
-    * compaction + atomic re-publish is [[compactStreamedIndex]] with
-    * the frozen centroids/books riding along — the full retrain-loop
-    * lifecycle (C158's publish leg) now has a streaming ingest edge
-    * for its own index family, not just the BQ one. Per batch:
-    * |batch|·nlist map-side centroid scores against the bounded
-    * nlist-row broadcast plus one m·ksub-bounded encode; only (long,
-    * long) and (long, array<int>) rows land on disk. */
-  def startIvfPqResIndexAppend(spark: SparkSession, inputDir: String,
-                               schema: StructType, id: String, vec: String,
-                               checkpointDir: String, centroidsDir: String,
-                               booksDir: String, cellsDir: String,
-                               codesDir: String, m: Int, ksub: Int,
-                               tombstonesDir: Option[String] = None): StreamingQuery = {
-    graft.GraftExtensions.ensureRegistered(spark)
-    val cents = spark.read.parquet(centroidsDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val books = spark.read.parquet(booksDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (guard, guardPinned) = tombstoneGuard(spark, id, tombstonesDir)
-    releaseOnTermination(spark,
-      spark.readStream.schema(schema).parquet(inputDir)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val (cells, codes, pinned) =
-            graft.operators.Similarity.ivfPqResAppendPinned(
-              cents, books, guard(batch), col(id), col(vec), m, ksub)
-          try {
-            cells.write.mode("overwrite")
-              .parquet(cellsDir.stripSuffix("/") + s"/batch=$batchId")
-            codes.write.mode("overwrite")
-              .parquet(codesDir.stripSuffix("/") + s"/batch=$batchId")
-          } finally pinned.unpersist(blocking = false): Unit
-        }
-        .start(),
-      unpersisting(Seq(cents, books) ++ guardPinned))
-  }
-
-  /** Streaming BM25 TEXT-index maintenance (C160 — the retrieval twin
-    * of the ANN append legs, closing the one streaming-maintenance
-    * asymmetry left: embeddings had three streamed ingest paths while
-    * the text index could only grow by batch [[graft.functions
-    * .Keywords.textIndexAppend]] calls): tail a documents parquet
-    * stream and land each micro-batch's index contribution as
-    * PER-BATCH PARTIAL frames — `postings/batch=<id>`,
-    * `docs/batch=<id>`, `terms/batch=<id>` (the batch's own per-term
-    * df/ctf), `stats/batch=<id>` (the batch's 1-row count/token mass).
-    *
-    * Why partials instead of merged frames: df/ctf/avgdl are not
-    * frozen artifacts — every append changes them, and a streamed
-    * read-merge-rewrite of a vocabulary table per micro-batch is the
-    * read-modify-write cycle streaming ingest exists to avoid. But
-    * df/ctf/stats merge by PURE ADDITION ([[graft.functions.Keywords
-    * .textIndexAppend]]'s outer-merge is associative+commutative), so
-    * the partials ARE the index: [[readStreamedTextIndex]] folds them
-    * with one vocab-bounded `groupBy(term).sum` and a #batches-row
-    * stats sum — work proportional to the vocabulary, never the
-    * corpus — and postings/docs union by partition discovery, exactly
-    * the shape the batch append produces under term-bucketed storage.
-    *
-    * Contract stack (each leg proven elsewhere, composed here):
-    *  - Per batch, ONE tokenize pass ([[graft.functions.Keywords
-    *    .docTermCounts]] cached for the four derived writes, and
-    *    unpersisted per batch — not stranded for the app lifetime);
-    *    the frame definitions are [[graft.functions.Keywords
-    *    .textIndexFromPostings]]'s own, so the streamed partials
-    *    cannot drift from the batch build's.
-    *  - Each micro-batch OVERWRITES its own `batch=<id>` partitions
-    *    (replay idempotence — a replayed batch replaces its own
-    *    output instead of double-counting df/ctf mass).
-    *  - Tombstone guard at ingest: a late or replayed file must not
-    *    resurrect a taken-down doc's postings (same keyed anti-join
-    *    as the ANN legs). Readers of the still-growing dir pass
-    *    `tombstones` to [[readStreamedTextIndex]], which routes the
-    *    guard through [[graft.functions.Keywords.textIndexRemove]] —
-    *    for text a takedown must also subtract df/ctf/stats mass, so
-    *    the guard IS the remove primitive, not a bare filter (the
-    *    same reason the text `AgainstIndex` searches take no
-    *    tombstone argument).
-    *  - New-ids-only caller contract, inherited from
-    *    [[graft.functions.Keywords.textIndexAppend]]: a re-crawled
-    *    id must be tombstoned (or compacted out) first — streamed
-    *    partials are additive, so a re-sent id would double-count.
-    *
-    * Scale shape: per batch, one explode+aggregate over the new docs
-    * only; nothing corpus-sized is read back, the vocabulary merge is
-    * deferred to read time where it costs one bounded aggregation.
-    * Compaction endgame: [[compactStreamedIndex]]'s discipline
-    * applies frame-by-frame (anti-join tombstones via
-    * [[graft.functions.Keywords.textIndexRemove]], drop the `batch`
-    * column, rewrite to target-size files, publish as one
-    * generation). */
-  def startTextIndexAppend(spark: SparkSession, inputDir: String,
-                           schema: StructType, id: String, text: String,
-                           checkpointDir: String, indexDir: String,
-                           tombstonesDir: Option[String] = None): StreamingQuery = {
-    graft.GraftExtensions.ensureRegistered(spark)
-    val base = indexDir.stripSuffix("/")
-    val (guard, guardPinned) = tombstoneGuard(spark, id, tombstonesDir)
-    releaseOnTermination(spark,
-      spark.readStream.schema(schema).parquet(inputDir)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // one tokenize pass per batch; the cached tf frame feeds all
-          // four derived writes and is released before the next batch
-          val tf = graft.functions.Keywords.docTermCounts(
-            guard(batch), col(id), col(text))
-          try {
-            val ix = graft.functions.Keywords.textIndexFromPostings(tf)
-            ix.postings.write.mode("overwrite")
-              .parquet(s"$base/postings/batch=$batchId")
-            ix.terms.write.mode("overwrite")
-              .parquet(s"$base/terms/batch=$batchId")
-            ix.docs.write.mode("overwrite")
-              .parquet(s"$base/docs/batch=$batchId")
-            ix.stats.write.mode("overwrite")
-              .parquet(s"$base/stats/batch=$batchId")
-          } finally tf.unpersist(blocking = false): Unit
-        }
-        .start(),
-      unpersisting(guardPinned))
+      unpersisting(pins.values.toSeq ++ guardPinned))
   }
 
   /** Assemble a [[graft.functions.Keywords.TextIndex]] from a
-    * [[startTextIndexAppend]] output tree: postings/docs by partition
+    * [[AppendLeg.TextPartials]] output tree: postings/docs by partition
     * discovery (the `batch` bookkeeping column dropped by selection),
     * per-term df/ctf partials folded with one vocab-bounded sum,
     * per-batch stats rows folded to the 1-row corpus stats (coalesced
@@ -423,7 +350,7 @@ object StreamIndex {
       .getOrElse(ix)
   }
 
-  /** Streaming IVF drift monitor (C154j — [[startIvfCellAppend]]'s
+  /** Streaming IVF drift monitor (C154j — [[AppendLeg.IvfCells]]'s
     * retrain trigger, the coarse-quantizer twin of
     * [[startBqDriftMonitor]]): accumulate per-CELL occupancy partial
     * counts of the incoming vectors under the frozen centroids
@@ -519,7 +446,7 @@ object StreamIndex {
     else df.coalesce(parts)
   }
 
-  /** [[compactStreamedIndex]]'s TEXT twin — the [[startTextIndexAppend]]
+  /** [[compactStreamedIndex]]'s TEXT twin — the [[AppendLeg.TextPartials]]
     * tree's endgame in one call: assemble the streamed partials
     * ([[readStreamedTextIndex]], whose tombstone path routes through
     * [[graft.functions.Keywords.textIndexRemove]] so df/ctf/stats mass
@@ -592,7 +519,7 @@ object StreamIndex {
     }
 
   /** Streaming BQ drift monitor (C154h — the retrain trigger
-    * [[startBqIndexAppend]]'s scaladoc prescribes): tail the SAME
+    * [[AppendLeg.BqCodes]]' scaladoc prescribes): tail the SAME
     * embedding stream, maintain per-dimension bit-population partial
     * counts under the frozen stats (bucket = 2·d + bit, the
     * [[graft.operators.Similarity.bqBitBuckets]] shape — exactly the

@@ -416,4 +416,31 @@ class LayoutSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$dir/gen=2").exists())
     assert(Layout.readIndexVersion(spark, dir, ArtNames)._1 == 3L)
   }
+
+  test("publish markers: of 8 racing claimers exactly one wins each generation") {
+    // the claim is the write barrier only if the create is exclusive:
+    // Hadoop's local createNewFile (exists, then a truncating open)
+    // lets several racers win the same generation
+    val root = java.nio.file.Files.createTempDirectory("graft-claimrace").toString
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val racers = 8; val gens = 60
+    val start = new java.util.concurrent.CyclicBarrier(racers)
+    val wins = new java.util.concurrent.atomic.AtomicIntegerArray(gens)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(racers)
+    try {
+      val runs = (1 to racers).map(_ => pool.submit(new Runnable {
+        def run(): Unit = (0 until gens).foreach { g =>
+          start.await()
+          if (Layout.createMarker(fs,
+              new org.apache.hadoop.fs.Path(s"$root/gen=$g/_CLAIM")))
+            wins.incrementAndGet(g)
+        }
+      }))
+      runs.foreach(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdownNow(): Unit
+    val multi = (0 until gens).filter(wins.get(_) != 1)
+    assert(multi.isEmpty, s"${multi.size} of $gens generations had " +
+      s"winner counts ${multi.map(wins.get).distinct.sorted.mkString("/")}, not exactly 1")
+  }
 }

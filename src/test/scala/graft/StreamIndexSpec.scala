@@ -3,10 +3,13 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 import graft.operators.Similarity.{Codec, Ivf}
 import graft.streaming.StreamIndex
+import graft.streaming.StreamIndex.AppendLeg
+import graft.streaming.StreamIndex.AppendLeg.{BqCodes, IvfCells, IvfPqRes, TextPartials}
 
 /** C154 streaming: the BQ index-append stream is pinned by the same
   * twin law as the monitors — codes table after N files ≡ BQ.encode
@@ -41,10 +44,172 @@ class StreamIndexSpec extends AnyFunSuite {
     ix.stats.select("n_docs", "total_tokens")
       .collect().map(_.toString).toSeq)
 
+  private def canon(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Drop the newest commit record so a restart replays that batch. */
+  private def deleteLastCommit(ck: String): Unit = {
+    val last = Files.list(Paths.get(ck, "commits")).toArray.map(_.asInstanceOf[Path])
+      .filter(_.getFileName.toString.matches("\\d+"))
+      .maxBy(_.getFileName.toString.toLong)
+    Files.delete(last)
+    Files.deleteIfExists(Paths.get(ck, "commits", "." + last.getFileName + ".crc")): Unit
+  }
+
   private def canonCodes(path: String) = {
     spark.catalog.refreshByPath(path)
     spark.read.parquet(path).select("vec_id", "codes")
       .collect().map(_.toString).sorted.toSeq
+  }
+
+  /** One row of the append leg table: the legs under an output root,
+    * the input table they read, and the batch twin of their frames
+    * (aligned with the legs' `dirs`). */
+  private case class LegRow(name: String, input: () => DataFrame, id: String,
+                            legs: String => Seq[AppendLeg],
+                            twin: DataFrame => Seq[DataFrame])
+
+  private def embeddings = graft.sources.Tables(spark, sf).embeddings
+    .select(col("vec_id"), col("embedding"))
+
+  /** Frozen stats, centroids and codebooks, trained once on the whole
+    * embeddings table and shared by the table's ANN rows. */
+  private lazy val frozenDirs: (String, String, String) = {
+    val e = embeddings
+    val statsDir = tmp() + "/stats"; val centsDir = tmp() + "/cents"
+    val booksDir = tmp() + "/books"
+    Codec.BQ.train(e, col("vec_id"), col("embedding")).write.parquet(statsDir)
+    val (cents, _, books, _) = Similarity.ivfPqResIndex(
+      e, col("vec_id"), col("embedding"), nlist = 8, m = 4, ksub = 16)
+    cents.write.parquet(centsDir); books.write.parquet(booksDir)
+    (statsDir, centsDir, booksDir)
+  }
+
+  private val legRows: Seq[LegRow] = {
+    def stats = spark.read.parquet(frozenDirs._1)
+    def cents = spark.read.parquet(frozenDirs._2)
+    def books = spark.read.parquet(frozenDirs._3)
+    def bq(out: String) = BqCodes(frozenDirs._1, s"$out/codes", "embedding")
+    def cells(out: String) = IvfCells(frozenDirs._2, s"$out/cells", "embedding")
+    def bqTwin(f: DataFrame) = Codec.BQ.encode(f, col("vec_id"), col("embedding"), stats)
+    def cellsTwin(f: DataFrame) =
+      Similarity.ivfAssignAgainstIndex(f, col("vec_id"), col("embedding"), cents)
+    Seq(
+      LegRow("BqCodes", () => embeddings, "vec_id", out => Seq(bq(out)),
+        f => Seq(bqTwin(f))),
+      LegRow("IvfCells", () => embeddings, "vec_id", out => Seq(cells(out)),
+        f => Seq(cellsTwin(f))),
+      LegRow("BqCodes+IvfCells", () => embeddings, "vec_id",
+        out => Seq(bq(out), cells(out)), f => Seq(bqTwin(f), cellsTwin(f))),
+      LegRow("IvfPqRes", () => embeddings, "vec_id",
+        out => Seq(IvfPqRes(frozenDirs._2, frozenDirs._3, s"$out/cells",
+          s"$out/codes", "embedding", m = 4, ksub = 16)),
+        f => {
+          val (c, k) = Similarity.ivfPqResAppend(cents, books, f,
+            col("vec_id"), col("embedding"), m = 4, ksub = 16)
+          Seq(c, k)
+        }),
+      LegRow("TextPartials", () => graft.sources.Tables(spark, sf).documents
+          .select(col("doc_id"), col("text")), "doc_id",
+        out => Seq(TextPartials(s"$out/tix", "text")),
+        f => {
+          val ix = graft.functions.Keywords.textIndex(f, col("doc_id"), col("text"))
+          Seq(ix.postings, ix.terms, ix.docs, ix.stats)
+        }))
+  }
+
+  // The properties every leg list shares, one row per leg (and the
+  // composed pair): a resumed query appends only the new file as its
+  // own batch; a replayed batch (commit record deleted) replaces its
+  // own batch=<id> partitions and never duplicates them; tombstoned
+  // ids never land in any output of a guarded batch; and the query's
+  // pinned frames are released on termination. Each batch=<id>
+  // partition must equal the leg's batch twin over that file's rows.
+  for (row <- legRows)
+    test(s"append leg ${row.name}: resume, replay, tombstones, release") {
+      val d = row.input(); val id = row.id
+      val value = d.columns.filter(_ != id).head
+      val file1 = d.filter(col(id) < 120 && col(id) % 2 === 0)
+      val file2 = d.filter(col(id) < 120 && col(id) % 2 === 1)
+      val tombstoned = file1.filter(col(id) % 4 === 0)
+      val fresh = d.filter(col(id) >= 120 && col(id) < 150)
+        .select((col(id) + 1000000L).as(id), col(value))
+      val in = tmp(); val ck = tmp(); val out = tmp(); val tsDir = tmp() + "/ts"
+      // mis-typed on purpose: the guard casts like the batch remove
+      tombstoned.select(col(id).cast("int")).write.parquet(tsDir)
+      val legs = row.legs(out)
+      val dirs = legs.flatMap(_.dirs)
+      // twins are computed before the baseline: the text twin pins
+      def expect(f: DataFrame) = row.twin(f).map(t => (t.columns.toSeq, canon(t)))
+      val (x1, x2, x3) = (expect(file1), expect(file2), expect(fresh))
+      val gone = tombstoned.select(col(id)).collect().map(_.getLong(0)).toSet
+      val baseline = spark.sparkContext.getPersistentRDDs.size
+
+      def run(ts: Option[String] = None): Unit = StreamIndex.startIndexAppend(
+        spark, in, d.schema, id, ck, legs, tombstonesDir = ts).awaitTermination()
+      def names(dir: String) = Files.list(Paths.get(dir)).toArray
+        .map(_.asInstanceOf[Path].getFileName.toString).toSeq
+      def batches(dir: String) = names(dir).filter(_.startsWith("batch=")).sorted
+      def batch1Files() = dirs.map(d => names(s"$d/batch=1").filter(_.endsWith(".parquet")).toSet)
+      def part(dir: String, b: Int, cols: Seq[String]) =
+        canon(spark.read.parquet(s"$dir/batch=$b").select(cols.map(col): _*))
+      def check(what: String, want: Seq[Seq[(Seq[String], Seq[String])]]): Unit =
+        dirs.zipWithIndex.foreach { case (dir, i) =>
+          assert(batches(dir) == want.indices.map(b => s"batch=$b"),
+            s"$what: $dir holds ${batches(dir)}")
+          want.zipWithIndex.foreach { case (x, b) =>
+            assert(part(dir, b, x(i)._1) == x(i)._2,
+              s"$what: $dir/batch=$b differs from the batch twin")
+          }
+        }
+
+      dropFile(file1, in, "p1.parquet"); run()
+      check("first run", Seq(x1))
+      dropFile(file2, in, "p2.parquet"); run()
+      check("resume", Seq(x1, x2))
+      // replay batch 1 while a late file of tombstoned and fresh rows
+      // arrives: batch 1 is rewritten in place (new part files, same
+      // rows), batch 2 holds the fresh rows only
+      val before = batch1Files()
+      deleteLastCommit(ck)
+      dropFile(tombstoned.unionByName(fresh), in, "p3.parquet")
+      run(Some(tsDir))
+      check("replay + guarded late file", Seq(x1, x2, x3))
+      batch1Files().lazyZip(before).lazyZip(dirs).foreach { (now, was, dir) =>
+        assert(now.nonEmpty && now.intersect(was).isEmpty,
+          s"the replay did not rewrite $dir/batch=1")
+      }
+      dirs.foreach { dir =>
+        val df = spark.read.parquet(s"$dir/batch=2")
+        if (df.columns.contains(id)) {
+          val leaked = df.select(col(id)).collect().map(_.getLong(0)).toSet & gone
+          assert(leaked.isEmpty, s"tombstoned ids landed in $dir: $leaked")
+        }
+      }
+
+      // the terminated-event delivery is async on the listener bus
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      var now = spark.sparkContext.getPersistentRDDs.size
+      while (now > baseline && System.nanoTime() < deadline) {
+        Thread.sleep(200)
+        now = spark.sparkContext.getPersistentRDDs.size
+      }
+      assert(now <= baseline,
+        s"restarted appends strand pinned frames: $baseline cached before, $now after")
+    }
+
+  test("startIndexAppend refuses an empty leg list and legs sharing a dir") {
+    val schema = embeddings.schema
+    def start(legs: Seq[AppendLeg]) =
+      StreamIndex.startIndexAppend(spark, tmp(), schema, "vec_id", tmp(), legs)
+    val empty = intercept[IllegalArgumentException](start(Nil))
+    assert(empty.getMessage.contains("needs >= 1 append leg"), empty.getMessage)
+    val same = intercept[IllegalArgumentException](start(Seq(
+      BqCodes("/s", "/ix/out", "embedding"), IvfCells("/c", "/ix/out/", "embedding"))))
+    assert(same.getMessage.contains("same directory"), same.getMessage)
+    val nested = intercept[IllegalArgumentException](start(Seq(
+      TextPartials("/ix/out", "text"), BqCodes("/s", "/ix/out/terms", "embedding"))))
+    assert(nested.getMessage.contains("same directory"), nested.getMessage)
   }
 
   test("streamed codes == frozen-stats batch encode, across resume and a replayed batch") {
@@ -61,8 +226,8 @@ class StreamIndexSpec extends AnyFunSuite {
     val half1 = e.filter(col("vec_id") % 2 === 0)
     val half2 = e.filter(col("vec_id") % 2 === 1)
     dropFile(half1, in, "p1.parquet")
-    StreamIndex.startBqIndexAppend(spark, in, e.schema, "vec_id", "embedding",
-      ck, statsDir, codesDir).awaitTermination()
+    StreamIndex.startIndexAppend(spark, in, e.schema, "vec_id", ck,
+      Seq(BqCodes(statsDir, codesDir, "embedding"))).awaitTermination()
     assert(canonCodes(codesDir) ==
       Codec.BQ.encode(half1, col("vec_id"), col("embedding"), stats)
         .collect().map(_.toString).sorted.toSeq,
@@ -71,8 +236,8 @@ class StreamIndexSpec extends AnyFunSuite {
     // resume from the checkpoint: only the new file is encoded, and
     // the summed table equals the batch encode over BOTH files
     dropFile(half2, in, "p2.parquet")
-    StreamIndex.startBqIndexAppend(spark, in, e.schema, "vec_id", "embedding",
-      ck, statsDir, codesDir).awaitTermination()
+    StreamIndex.startIndexAppend(spark, in, e.schema, "vec_id", ck,
+      Seq(BqCodes(statsDir, codesDir, "embedding"))).awaitTermination()
     val unionCodes = Codec.BQ.encode(e, col("vec_id"), col("embedding"), stats)
       .collect().map(_.toString).sorted.toSeq
     assert(canonCodes(codesDir) == unionCodes,
@@ -81,14 +246,9 @@ class StreamIndexSpec extends AnyFunSuite {
     // replay: drop the last commit record so the restarted stream
     // re-runs the final batch — its partition must be REPLACED, never
     // duplicated (the monitor plumbing's idempotence pattern)
-    val commits = Paths.get(ck, "commits")
-    val last = Files.list(commits).toArray.map(_.asInstanceOf[Path])
-      .filter(_.getFileName.toString.matches("\\d+"))
-      .maxBy(_.getFileName.toString.toLong)
-    Files.delete(last)
-    Files.deleteIfExists(Paths.get(ck, "commits", "." + last.getFileName + ".crc"))
-    StreamIndex.startBqIndexAppend(spark, in, e.schema, "vec_id", "embedding",
-      ck, statsDir, codesDir).awaitTermination()
+    deleteLastCommit(ck)
+    StreamIndex.startIndexAppend(spark, in, e.schema, "vec_id", ck,
+      Seq(BqCodes(statsDir, codesDir, "embedding"))).awaitTermination()
     assert(canonCodes(codesDir) == unionCodes,
       "a replayed batch must not duplicate or lose codes")
 
@@ -125,8 +285,8 @@ class StreamIndexSpec extends AnyFunSuite {
 
     // first file: streamed partials assemble to exactly the batch build
     dropFile(half1, in, "p1.parquet")
-    StreamIndex.startTextIndexAppend(spark, in, d.schema, "doc_id", "text",
-      ck, ixDir).awaitTermination()
+    StreamIndex.startIndexAppend(spark, in, d.schema, "doc_id", ck,
+      Seq(TextPartials(ixDir, "text"))).awaitTermination()
     assert(canon(readIx()) ==
       canon(Keywords.textIndex(half1, col("doc_id"), col("text"))),
       "streamed partials must assemble to the batch build of file 1")
@@ -134,22 +294,17 @@ class StreamIndexSpec extends AnyFunSuite {
     // checkpoint resume: only the new file is tokenized; the assembled
     // index equals the batch build over the union
     dropFile(half2, in, "p2.parquet")
-    StreamIndex.startTextIndexAppend(spark, in, d.schema, "doc_id", "text",
-      ck, ixDir).awaitTermination()
+    StreamIndex.startIndexAppend(spark, in, d.schema, "doc_id", ck,
+      Seq(TextPartials(ixDir, "text"))).awaitTermination()
     val full = canon(Keywords.textIndex(d, col("doc_id"), col("text")))
     assert(canon(readIx()) == full,
       "after resume the assembled index must equal the batch build of the union")
 
     // replay: re-running the final batch must REPLACE its partials
     // (overwrite idempotence), never double-count df/ctf/stats mass
-    val commits = Paths.get(ck, "commits")
-    val last = Files.list(commits).toArray.map(_.asInstanceOf[Path])
-      .filter(_.getFileName.toString.matches("\\d+"))
-      .maxBy(_.getFileName.toString.toLong)
-    Files.delete(last)
-    Files.deleteIfExists(Paths.get(ck, "commits", "." + last.getFileName + ".crc"))
-    StreamIndex.startTextIndexAppend(spark, in, d.schema, "doc_id", "text",
-      ck, ixDir).awaitTermination()
+    deleteLastCommit(ck)
+    StreamIndex.startIndexAppend(spark, in, d.schema, "doc_id", ck,
+      Seq(TextPartials(ixDir, "text"))).awaitTermination()
     assert(canon(readIx()) == full,
       "a replayed batch must not duplicate or lose index mass")
 
@@ -189,8 +344,8 @@ class StreamIndexSpec extends AnyFunSuite {
       .unionByName(d.filter(col("doc_id") === 4)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
     dropFile(late, in, "p3.parquet")
-    StreamIndex.startTextIndexAppend(spark, in, d.schema, "doc_id", "text",
-      ck, ixDir, tombstonesDir = Some(tsDir)).awaitTermination()
+    StreamIndex.startIndexAppend(spark, in, d.schema, "doc_id", ck,
+      Seq(TextPartials(ixDir, "text")), tombstonesDir = Some(tsDir)).awaitTermination()
     val fresh = d.filter(col("doc_id") === 4)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
     assert(canon(readIx()) ==
@@ -206,11 +361,11 @@ class StreamIndexSpec extends AnyFunSuite {
     val in = tmp(); val ck = tmp(); val ixDir = tmp() + "/tix"
     // two streamed files, takedowns landing AFTER ingest
     dropFile(d.filter(col("doc_id") % 2 === 0), in, "p1.parquet")
-    StreamIndex.startTextIndexAppend(spark, in, d.schema, "doc_id", "text",
-      ck, ixDir).awaitTermination()
+    StreamIndex.startIndexAppend(spark, in, d.schema, "doc_id", ck,
+      Seq(TextPartials(ixDir, "text"))).awaitTermination()
     dropFile(d.filter(col("doc_id") % 2 === 1), in, "p2.parquet")
-    StreamIndex.startTextIndexAppend(spark, in, d.schema, "doc_id", "text",
-      ck, ixDir).awaitTermination()
+    StreamIndex.startIndexAppend(spark, in, d.schema, "doc_id", ck,
+      Seq(TextPartials(ixDir, "text"))).awaitTermination()
     val gone = d.filter(col("doc_id") % 5 === 1).select(col("doc_id"))
     val tsDir = tmp() + "/tombstones"
     gone.select(col("doc_id").cast("int")).write.parquet(tsDir)
@@ -258,49 +413,6 @@ class StreamIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("tombstoned ids never land in streamed codes/cells; untombstoned rows unaffected") {
-    // the takedown half of the STREAMING path: indexRemove cleans the
-    // batch tables, but a late-arriving stream file re-encodes the
-    // removed id unless the append legs guard on the tombstone list —
-    // deleted content must not be resurrected by ingest
-    val e = graft.sources.Tables(spark, sf).embeddings
-      .select(col("vec_id"), col("embedding"))
-    val in = tmp(); val ck = tmp(); val statsDir = tmp() + "/stats"
-    val centsDir = tmp() + "/cents"; val codesDir = tmp() + "/codes"
-    val cellsDir = tmp() + "/cells"; val tombsDir = tmp() + "/tombstones"
-    Codec.BQ.train(e, col("vec_id"), col("embedding"))
-      .write.parquet(statsDir)
-    val (cents, _, _, _) = Similarity.ivfPqResIndex(
-      e, col("vec_id"), col("embedding"), nlist = 10, m = 4, ksub = 8)
-    cents.write.parquet(centsDir)
-    import spark.implicits._
-    val tombstoned = e.filter(col("vec_id") % 5 === 0)
-    tombstoned.select(col("vec_id")).write.parquet(tombsDir)
-    // the "late file" carries tombstoned AND live rows
-    dropFile(e.limit(50), in, "late.parquet")
-    StreamIndex.startComposedIndexAppend(spark, in, e.schema, "vec_id",
-        "embedding", ck, statsDir, centsDir, codesDir, cellsDir,
-        tombstonesDir = Some(tombsDir))
-      .awaitTermination()
-    val codeIds = spark.read.parquet(codesDir)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val cellIds = spark.read.parquet(cellsDir)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val expected = e.limit(50).filter(col("vec_id") % 5 =!= 0)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(codeIds == expected && cellIds == expected,
-      s"tombstoned ids leaked: codes ${codeIds.size} cells ${cellIds.size} " +
-        s"expected ${expected.size}")
-    // untombstoned rows encode exactly as the unguarded path would
-    val stats = spark.read.parquet(statsDir)
-    val direct = Codec.BQ.encode(
-        e.limit(50).filter(col("vec_id") % 5 =!= 0),
-        col("vec_id"), col("embedding"), stats)
-      .collect().map(_.toString).sorted.toSeq
-    assert(spark.read.parquet(codesDir).select("vec_id", "codes")
-      .collect().map(_.toString).sorted.toSeq == direct)
-  }
-
   test("compacting the streamed codes table preserves search results exactly") {
     // the small-files remedy composed with the streaming appends: an
     // AvailableNow leg writes one file set per batch partition, and at
@@ -317,8 +429,8 @@ class StreamIndexSpec extends AnyFunSuite {
     // three micro-batches = three batch=<id> partitions, many files
     (0 to 2).foreach { i =>
       dropFile(e.filter(col("vec_id") % 3 === i), in, s"p$i.parquet")
-      StreamIndex.startBqIndexAppend(spark, in, e.schema, "vec_id",
-        "embedding", ck, statsDir, codesDir).awaitTermination()
+      StreamIndex.startIndexAppend(spark, in, e.schema, "vec_id", ck,
+        Seq(BqCodes(statsDir, codesDir, "embedding"))).awaitTermination()
     }
     graft.sources.Layout.compact(spark, codesDir, compactDir,
       targetBytes = 64L * 1024 * 1024)
@@ -359,8 +471,9 @@ class StreamIndexSpec extends AnyFunSuite {
     // three UNGUARDED micro-batches — the takedown hasn't happened yet
     (0 to 2).foreach { i =>
       dropFile(e.filter(col("vec_id") % 3 === i), in, s"p$i.parquet")
-      StreamIndex.startComposedIndexAppend(spark, in, e.schema, "vec_id",
-        "embedding", ck, statsDir, centsDir, codesDir, cellsDir)
+      StreamIndex.startIndexAppend(spark, in, e.schema, "vec_id", ck,
+        Seq(BqCodes(statsDir, codesDir, "embedding"),
+          IvfCells(centsDir, cellsDir, "embedding")))
         .awaitTermination()
     }
     // now the takedown lands
@@ -379,8 +492,6 @@ class StreamIndexSpec extends AnyFunSuite {
     // (frozen-stats encode / frozen-centroid assign of the survivors);
     // the batch ingest-bookkeeping column is gone
     val survivors = e.filter(col("vec_id") % 5 =!= 0)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
     assert(art("codes").columns.toSeq == Seq("vec_id", "codes"))
     assert(art("cells").columns.toSeq.sorted == Seq("cell", "vec_id"))
     assert(canon(art("codes")) == canon(Codec.BQ.encode(
@@ -424,33 +535,6 @@ class StreamIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("append queries release their pinned frozen frames on termination") {
-    // scheduled AvailableNow restarts must not strand one cached
-    // stats/centroid relation per run for the app lifetime — the
-    // termination listener unpersists the pinned frames
-    val e = graft.sources.Tables(spark, sf).embeddings
-      .select(col("vec_id"), col("embedding"))
-    val statsDir = tmp() + "/stats"
-    Codec.BQ.train(e, col("vec_id"), col("embedding"))
-      .write.parquet(statsDir)
-    val baseline = spark.sparkContext.getPersistentRDDs.size
-    (1 to 3).foreach { i =>
-      val in = tmp(); val ck = tmp(); val codesDir = tmp() + s"/codes$i"
-      dropFile(e.limit(5), in, "p.parquet")
-      StreamIndex.startBqIndexAppend(spark, in, e.schema, "vec_id",
-        "embedding", ck, statsDir, codesDir).awaitTermination()
-    }
-    // the terminated-event delivery is async on the listener bus
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    var now = spark.sparkContext.getPersistentRDDs.size
-    while (now > baseline && System.nanoTime() < deadline) {
-      Thread.sleep(200)
-      now = spark.sparkContext.getPersistentRDDs.size
-    }
-    assert(now <= baseline,
-      s"restarted appends strand pinned frames: $baseline cached before, $now after")
-  }
-
   test("streamed IVF cells == frozen-centroid assign; composed search sees appended vectors") {
     val e = graft.sources.Tables(spark, sf).embeddings
       .select(col("vec_id"), col("embedding"))
@@ -475,10 +559,10 @@ class StreamIndexSpec extends AnyFunSuite {
     // stream the NEW vectors through BOTH append legs (separate
     // checkpoints over the same input)
     dropFile(half2, in, "p2.parquet")
-    StreamIndex.startIvfCellAppend(spark, in, e.schema, "vec_id", "embedding",
-      ckCells, centsDir, cellsDir).awaitTermination()
-    StreamIndex.startBqIndexAppend(spark, in, e.schema, "vec_id", "embedding",
-      ckCodes, statsDir, codesDir).awaitTermination()
+    StreamIndex.startIndexAppend(spark, in, e.schema, "vec_id", ckCells,
+      Seq(IvfCells(centsDir, cellsDir, "embedding"))).awaitTermination()
+    StreamIndex.startIndexAppend(spark, in, e.schema, "vec_id", ckCodes,
+      Seq(BqCodes(statsDir, codesDir, "embedding"))).awaitTermination()
     spark.catalog.refreshByPath(cellsDir); spark.catalog.refreshByPath(codesDir)
 
     // law 1: the grown cells table == the frozen-centroid batch assign
@@ -530,8 +614,9 @@ class StreamIndexSpec extends AnyFunSuite {
       .write.parquet(s"$codesDir/batch=initial")
 
     dropFile(half2, in, "p2.parquet")
-    StreamIndex.startComposedIndexAppend(spark, in, e.schema, "vec_id",
-      "embedding", ck, statsDir, centsDir, codesDir, cellsDir)
+    StreamIndex.startIndexAppend(spark, in, e.schema, "vec_id", ck,
+      Seq(BqCodes(statsDir, codesDir, "embedding"),
+        IvfCells(centsDir, cellsDir, "embedding")))
       .awaitTermination()
     spark.catalog.refreshByPath(cellsDir); spark.catalog.refreshByPath(codesDir)
 
@@ -557,14 +642,10 @@ class StreamIndexSpec extends AnyFunSuite {
     // replay: drop the last commit so the batch re-runs — BOTH
     // partitions overwrite, neither table duplicates (the heal path
     // for a crash between the two writes)
-    val commits = Paths.get(ck, "commits")
-    val last = Files.list(commits).toArray.map(_.asInstanceOf[Path])
-      .filter(_.getFileName.toString.matches("\\d+"))
-      .maxBy(_.getFileName.toString.toLong)
-    Files.delete(last)
-    Files.deleteIfExists(Paths.get(ck, "commits", "." + last.getFileName + ".crc"))
-    StreamIndex.startComposedIndexAppend(spark, in, e.schema, "vec_id",
-      "embedding", ck, statsDir, centsDir, codesDir, cellsDir)
+    deleteLastCommit(ck)
+    StreamIndex.startIndexAppend(spark, in, e.schema, "vec_id", ck,
+      Seq(BqCodes(statsDir, codesDir, "embedding"),
+        IvfCells(centsDir, cellsDir, "embedding")))
       .awaitTermination()
     spark.catalog.refreshByPath(cellsDir); spark.catalog.refreshByPath(codesDir)
     assert(ids(codesDir) == ids(cellsDir))
@@ -604,9 +685,9 @@ class StreamIndexSpec extends AnyFunSuite {
     codes1.write.parquet(s"$codesDir/batch=initial")
 
     dropFile(half2, in, "p2.parquet")
-    StreamIndex.startIvfPqResIndexAppend(spark, in, e.schema, "vec_id",
-      "embedding", ck, centsDir, booksDir, cellsDir, codesDir,
-      m = 4, ksub = 16).awaitTermination()
+    StreamIndex.startIndexAppend(spark, in, e.schema, "vec_id", ck,
+      Seq(IvfPqRes(centsDir, booksDir, cellsDir, codesDir, "embedding",
+        m = 4, ksub = 16))).awaitTermination()
     spark.catalog.refreshByPath(cellsDir); spark.catalog.refreshByPath(codesDir)
 
     // lockstep law: one checkpoint grows both keyed artifacts together
@@ -632,15 +713,10 @@ class StreamIndexSpec extends AnyFunSuite {
       "streamed codes must equal the frozen-codebook batch encode")
 
     // replay: both partitions overwrite, neither table duplicates
-    val commits = Paths.get(ck, "commits")
-    val last = Files.list(commits).toArray.map(_.asInstanceOf[Path])
-      .filter(_.getFileName.toString.matches("\\d+"))
-      .maxBy(_.getFileName.toString.toLong)
-    Files.delete(last)
-    Files.deleteIfExists(Paths.get(ck, "commits", "." + last.getFileName + ".crc"))
-    StreamIndex.startIvfPqResIndexAppend(spark, in, e.schema, "vec_id",
-      "embedding", ck, centsDir, booksDir, cellsDir, codesDir,
-      m = 4, ksub = 16).awaitTermination()
+    deleteLastCommit(ck)
+    StreamIndex.startIndexAppend(spark, in, e.schema, "vec_id", ck,
+      Seq(IvfPqRes(centsDir, booksDir, cellsDir, codesDir, "embedding",
+        m = 4, ksub = 16))).awaitTermination()
     spark.catalog.refreshByPath(cellsDir); spark.catalog.refreshByPath(codesDir)
     assert(ids(codesDir) == ids(cellsDir))
     assert(ids(codesDir).size == ids(codesDir).distinct.size,
