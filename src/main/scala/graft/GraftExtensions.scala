@@ -10,7 +10,7 @@ import graft.functions.{BloomMightContain, BpeSegment, CdcChunks, Fnv1a64, Hammi
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.descriptors.foreach(e.injectFunction)
-    e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    GraftExtensions.strategies.foreach(s => e.injectPlannerStrategy(_ => s))
   }
 }
 
@@ -20,6 +20,9 @@ object GraftExtensions {
     SyslogParse.descriptor, NfcNormalize.descriptor, BloomMightContain.descriptor,
     BpeSegment.descriptor, WinnowSelect.descriptor, CdcChunks.descriptor,
     Mix64.descriptor, HammingDistance.descriptor)
+
+  private val strategies =
+    Seq(graft.plans.AsOfJoinStrategy, org.apache.spark.sql.graft.RowPipelineStrategy)
 
   /** Idempotent runtime registration for sessions that already existed
     * before graft was on the classpath (`withExtensions` only applies at
@@ -34,8 +37,8 @@ object GraftExtensions {
     descriptors.foreach { case (ident, info, builder) =>
       if (!reg.functionExists(ident)) reg.registerFunction(ident, info, builder)
     }
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
+    val missing = strategies.filterNot(spark.experimental.extraStrategies.contains)
+    if (missing.nonEmpty)
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies ++ missing
   }
 }

@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.UUID
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
@@ -50,7 +51,7 @@ final case class SinkConfig(
   * delivers with subset-retry + exponential backoff, dead-letters
   * exhausted records (SURVEY.md §2.A6-A8).
   *
-  * All work happens inside `foreachPartition` on executors — the driver
+  * All work happens inside per-partition tasks on executors — the driver
   * never sees a record, so the sink scales with the number of
   * partitions, not the number of rows.
   */
@@ -73,13 +74,15 @@ class NdjsonBatchSink(delivery: Delivery, conf: SinkConfig = SinkConfig())
     process(df.select("stream", "json").queryExecution.toRdd)
 
   /** The same over rows already shaped (stream STRING, json STRING),
-    * e.g. the forwarder's [[org.apache.spark.sql.graft.RowPipeline]]
-    * output, which never becomes a Dataset. */
+    * e.g. a micro-batch's `toRdd` behind the forwarder's
+    * [[org.apache.spark.sql.graft.RowPipeline]] node. One `runJob` over
+    * every partition: its function is closure-cleaned once per batch
+    * (`foreachPartition` cleans it again in each nested `runJob`). */
   private[graft] def process(rows: RDD[InternalRow]): Unit =
-    rows.foreachPartition { (it: Iterator[InternalRow]) =>
+    rows.sparkContext.runJob(rows, (_: TaskContext, it: Iterator[InternalRow]) =>
       processRows(it.map(r => (if (r.isNullAt(0)) null else r.getString(0),
-        r.getUTF8String(1).getBytes)), () => System.currentTimeMillis())
-    }
+        r.getUTF8String(1).getBytes)), () => System.currentTimeMillis()),
+      rows.partitions.indices, (_: Int, _: Unit) => ())
 
   /** The per-partition production loop (specs drive this directly with a
     * fake clock): the iterator is consumed incrementally into per-stream

@@ -57,7 +57,10 @@ object Forwarder {
         * normalization — distinct records differing only in case or
         * whitespace are NOT replays). Malformed lines (null parsed
         * timestamp) bypass the dedup and are always delivered. State
-        * is md5 keys only, evicted by watermark. */
+        * is md5 keys only, evicted by watermark. The stages before the
+        * dedup (parse, route, serialize, md5) and after it (delivery)
+        * run as two [[org.apache.spark.sql.graft.RowPipeline]]s planned
+        * once at `start`; only the dedup is planned per micro-batch. */
       dedupWithin: Option[String] = None,
       /** Redact emails/phones/URLs from the free-text fields (title,
         * rawlog) before delivery — the standard compliance step when
@@ -185,14 +188,15 @@ object Forwarder {
   }
 
   /** What [[start]] plans before the query runs: the streaming frame,
-    * the compiled row pipeline its micro-batches go through, and the
-    * idempotent release of both broadcasts (pipeline and probe). */
-  private[graft] final case class Plan(stream: DataFrame, rows: RowPipeline, release: () => Unit)
+    * its row-local stages already inside as [[RowPipeline]] nodes, and
+    * the idempotent release of every broadcast (pipelines and probe). */
+  private[graft] final case class Plan(stream: DataFrame, release: () => Unit)
 
   private[graft] def plan(spark: SparkSession, conf: Config,
                           route: Option[Column] = None,
                           source: Option[RecordSource] = None,
                           routeTable: Seq[Routing.Route] = Nil): Plan = {
+    graft.GraftExtensions.ensureRegistered(spark)
     val r = route.getOrElse(
       if (routeTable.nonEmpty) Routing.column(routeTable, conf.streamName)
       else lit(conf.streamName))
@@ -205,7 +209,13 @@ object Forwarder {
       graft.operators.Dedup.minhashProbe(spark.read.parquet(s.indexDir),
         s.n, s.bands, s.rows, s.seed, s.maxBucket)
     }
-    val releaseProbe = () => probe.foreach(_.release())
+    var pipelines = List.empty[RowPipeline]
+    def over(df: DataFrame, stages: DataFrame => DataFrame): DataFrame = {
+      val p = RowPipeline.plan(spark, df.schema, stages)
+      pipelines ::= p
+      p.over(df)
+    }
+    val release = () => { pipelines.foreach(_.release()); probe.foreach(_.release()) }
     try {
       val lines = src.stream(spark)
       val delivery = deliveryStages(conf, probe, routeTable)
@@ -217,11 +227,12 @@ object Forwarder {
         // lines carry a null timestamp by contract ("drop to null,
         // never lost") — they would read as epoch 0 inside the
         // watermark operator and be swallowed as late, so they bypass
-        // the dedup branch entirely. The stateful operator needs the
-        // streaming plan, so everything up to it stays in the stream.
+        // the dedup branch entirely. The stateful operator sits between
+        // two pipeline nodes: the one before it yields the key, the one
+        // after it delivers.
         case Some(delay) =>
-          val keyed = transform(lines, conf.deployEnv, r)
-            .withColumn("content_hash", md5(col("json")))
+          val keyed = over(lines, (df: DataFrame) => transform(df, conf.deployEnv, r)
+            .withColumn("content_hash", md5(col("json"))))
           val deduped = keyed.filter(col("timestamp").isNotNull)
             .withColumn("event_ts", col("timestamp"))
             .withWatermark("event_ts", delay)
@@ -231,9 +242,8 @@ object Forwarder {
         case None =>
           (lines, delivery.compose((df: DataFrame) => transform(df, conf.deployEnv, r)))
       }
-      val rows = RowPipeline.plan(spark, stream.schema, rowStages)
-      Plan(stream, rows, () => { rows.release(); releaseProbe() })
-    } catch { case e: Throwable => releaseProbe(); throw e }
+      Plan(over(stream, rowStages), release)
+    } catch { case e: Throwable => release(); throw e }
   }
 
   /** Start the streaming forwarder. The record source defaults to
@@ -249,20 +259,22 @@ object Forwarder {
     * `output:` block.
     *
     * The row-local stages are planned once per query, here, not on
-    * every micro-batch: parse/enhance, routing and serialization (unless
-    * `dedupWithin` keeps them in the stream, ahead of its stateful
-    * operator), the scrub, the near-dup screen and the metric leg are
-    * analyzed and optimized once into a [[RowPipeline]] that each
-    * executor thread compiles once; the streaming query plans only the
-    * source (and the dedup) per epoch, and the sink feeds each
-    * micro-batch's rows through the pipeline. Two consequences:
+    * every micro-batch: parse/enhance, routing and serialization, the
+    * scrub, the near-dup screen and the metric leg are analyzed and
+    * optimized once into a [[RowPipeline]] that each executor thread
+    * compiles once. The streaming plan holds each pipeline as one opaque
+    * node, so per epoch it plans only the source, the nodes and (with
+    * `dedupWithin`) the dedup. With `dedupWithin` there are two
+    * pipelines: parse/enhance, routing, serialization and the md5 replay
+    * key before the stateful dedup, delivery after it. Two consequences,
+    * in both modes:
     *  - the session settings those stages read at analysis (time zone,
     *    ANSI mode) are read at `start`; changing them later does not
     *    reach a running forwarder;
     *  - a `route` that is not row-local (a subquery, an aggregate or
     *    window) is refused here with an IllegalArgumentException that
     *    names the offending node.
-    * Both broadcasts (pipeline and probe) are destroyed on termination,
+    * Every broadcast (pipelines and probe) is destroyed on termination,
     * and when `start` itself fails. */
   def start(spark: SparkSession, conf: Config, delivery: Delivery,
             route: Option[Column] = None,
@@ -274,7 +286,7 @@ object Forwarder {
       try p.stream.writeStream
         .option("checkpointLocation", conf.checkpointDir)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch((df: DataFrame, _: Long) => sink.process(p.rows.run(df)))
+        .foreachBatch((df: DataFrame, _: Long) => sink.process(df.queryExecution.toRdd))
         .start()
       catch { case e: Throwable => p.release(); throw e }
     StreamIndex.releaseOnTermination(spark, query, p.release)

@@ -11,9 +11,9 @@ import graft.operators.Dedup
 import graft.sinks.FileDelivery
 import graft.streaming.{Forwarder, Routing}
 
-/** The forwarder's compiled row pipeline: byte parity with the Dataset
-  * path under concurrent tasks, and refusal of stages that are not
-  * row-local. */
+/** The forwarder's compiled row pipeline: byte parity of its plan node
+  * with the Dataset path under concurrent tasks, the node's opacity to
+  * the optimizer, and refusal of stages that are not row-local. */
 class RowPipelineSpec extends AnyFunSuite {
   import SparkTest._
 
@@ -91,7 +91,7 @@ class RowPipelineSpec extends AnyFunSuite {
       for ((df, b) <- Seq(first, frame(lines(4000, 7))).zipWithIndex) {
         val want = stages(df).collect().toSeq
           .map(r => (r.getString(0), r.getString(1).getBytes(UTF_8).toSeq))
-        val got = pipeline.run(df)
+        val got = pipeline.over(df).queryExecution.toRdd
           .map(r => (r.getString(0), r.getUTF8String(1).getBytes.toSeq)).collect().toSeq
         assert(want.size < 4000 && want.size > 3800, s"batch $b: the screen kept ${want.size}")
         assert(want.exists(_._1 == "latency-alerts") && want.exists(_._1 == "errors"))
@@ -113,28 +113,59 @@ class RowPipelineSpec extends AnyFunSuite {
       .when(rand(7) < 0.5, lit("errors")).otherwise(lit("main")))
   }
 
+  test("the pipeline node is opaque: no filter pushed below it, no column pruned under it") {
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import org.apache.spark.sql.graft.{RowPipelineExec, RowPipelineNode}
+    val in = frame(lines(200, 0)).withColumn("extra", lit(1))
+    val pipeline = RowPipeline.plan(spark, in.schema,
+      df => Forwarder.transform(df, "production", lit("main")).drop("extra"))
+    try {
+      val q = pipeline.over(in).filter(col("level") === "error").select("json")
+      val plan = q.queryExecution.optimizedPlan
+      val node = plan.collectFirst { case n: RowPipelineNode => n }
+      assert(node.exists(n => n.child.output.map(_.name) == Seq("value", "extra") &&
+        n.child.find(_.isInstanceOf[Filter]).isEmpty), plan.treeString)
+      assert(plan.find(_.isInstanceOf[Filter]).nonEmpty, plan.treeString)
+      assert(q.queryExecution.executedPlan.collect { case e: RowPipelineExec => e }.size == 1)
+      val want = Forwarder.transform(in, "production", lit("main"))
+        .filter(col("level") === "error").select("json").collect().map(_.getString(0)).toSeq
+      assert(want.nonEmpty && q.collect().map(_.getString(0)).toSeq == want)
+    } finally pipeline.release()
+  }
+
   test("a stage that is not row-local is refused at start, naming the node, and leaks nothing") {
     import Dedup.MinhashProbe
     val before = MinhashProbe.live.get
+    val pipelines = RowPipeline.live
     val active = spark.streams.active.length
     val in = tmp()
     Files.write(java.nio.file.Paths.get(in, "a.log"), lines(5, 1).mkString("\n").getBytes(UTF_8))
     val conf = Forwarder.Config(in, tmp(), nearDupScreen = Some(Forwarder.NearDupScreen(index)))
+    val guarded = conf.copy(dedupWithin = Some("1 hour"))
     val aggregate = spark.range(3).select(max(col("id")).cast("string")).scalar()
     val window = count(lit(1)).over(Window.partitionBy(col("hostname"))).cast("string")
-    for ((route, node) <- Seq(aggregate -> "ScalarSubquery", window -> "Window")) {
+    for ((c, route, node) <- Seq((conf, aggregate, "ScalarSubquery"), (conf, window, "Window"),
+                                 (guarded, window, "Window"))) {
       val e = intercept[IllegalArgumentException] {
-        Forwarder.start(spark, conf, new FileDelivery(tmp()), route = Some(route))
+        Forwarder.start(spark, c, new FileDelivery(tmp()), route = Some(route))
       }
       assert(e.getMessage.contains(node) && e.getMessage.contains("not row-local"), e.getMessage)
       assert(MinhashProbe.live.get == before, s"$node: the probe broadcast was not destroyed")
+      assert(RowPipeline.live == pipelines, s"$node: a pipeline broadcast was not destroyed")
       assert(spark.streams.active.length == active)
     }
+    // a start that fails after planning releases both pipelines and the probe
+    val notADir = Files.createTempFile("graft-rowpipe", ".ck").toString
+    intercept[Exception] {
+      Forwarder.start(spark, guarded.copy(checkpointDir = notADir), new FileDelivery(tmp()))
+    }
+    assert(MinhashProbe.live.get == before && RowPipeline.live == pipelines)
+    assert(spark.streams.active.length == active)
     // the release hook of a planned forwarder is idempotent
-    val p = Forwarder.plan(spark, conf)
-    assert(MinhashProbe.live.get == before + 1)
+    val p = Forwarder.plan(spark, guarded)
+    assert(MinhashProbe.live.get == before + 1 && RowPipeline.live == pipelines + 2)
     p.release()
     p.release()
-    assert(MinhashProbe.live.get == before)
+    assert(MinhashProbe.live.get == before && RowPipeline.live == pipelines)
   }
 }

@@ -264,7 +264,8 @@ class StreamingSpec extends AnyFunSuite {
         q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan)
     }
     // the row-local stages are planned once, outside the micro-batch
-    // plan; with dedupWithin, the plan ends at the dedup operator
+    // plan; with dedupWithin, two pipeline nodes sit on either side of
+    // the dedup operator
     def rowStagesIn(plan: SparkPlan): Seq[String] =
       Seq("graft_syslog_parse", "to_json").filter(plan.toString.contains)
     spark.sparkContext.addSparkListener(listener)
@@ -274,6 +275,9 @@ class StreamingSpec extends AnyFunSuite {
         assert(rowStagesIn(plan).isEmpty, s"row-local stages in the micro-batch plan:\n$plan")
       val (_, dedupDelivered, dedupPlan) = run(None, Some("1 hour"))
       assert(dedupDelivered == 30)
+      assert(rowStagesIn(dedupPlan).isEmpty, s"row-local stages in the dedup micro-batch plan:\n$dedupPlan")
+      val pipelines = dedupPlan.collect { case e: org.apache.spark.sql.graft.RowPipelineExec => e.pipeline }
+      assert(pipelines.distinct.size == 2, s"expected two pipelines around the dedup:\n$dedupPlan")
       val stateful = dedupPlan.collect { case s: StatefulOperator => s }
       assert(stateful.headOption.exists(_.isInstanceOf[StreamingDeduplicateWithinWatermarkExec]),
         s"the last stateful node is not the dedup:\n$dedupPlan")
@@ -1001,6 +1005,61 @@ class StreamingSpec extends AnyFunSuite {
       for (i <- 0 until 15)
         assert(good.count(_.contains(s"\"host-$i\"")) == 1, s"$first -> $second: host-$i")
     }
+  }
+
+  test("a dedupWithin checkpoint written by the in-stream transform resumes under the pipeline nodes") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.graft.RowPipeline
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.FileLinesSource
+    val in = tmp(); val out = tmp(); val ck = tmp()
+    val conf = Forwarder.Config(in, ck, maxFilesPerTrigger = 1, dedupWithin = Some("1 hour"))
+    val records = sampleLines(25)
+    // the earlier plan shape: parse, serialize and the md5 key inside the
+    // streaming plan, ahead of the dedup; delivery through a pipeline
+    def drainInStream() = {
+      val lines = FileLinesSource(in, conf.maxFilesPerTrigger).stream(spark)
+      val keyed = Forwarder.transform(lines, conf.deployEnv, lit(conf.streamName))
+        .withColumn("content_hash", md5(col("json")))
+      val stream = keyed.filter(col("timestamp").isNotNull)
+        .withColumn("event_ts", col("timestamp"))
+        .withWatermark("event_ts", "1 hour")
+        .dropDuplicatesWithinWatermark("content_hash")
+        .drop("event_ts")
+        .union(keyed.filter(col("timestamp").isNull))
+      val post = RowPipeline.plan(spark, stream.schema, Forwarder.deliveryStages(conf, None, Nil))
+      val sink = new NdjsonBatchSink(new FileDelivery(out), conf.sink)
+      try {
+        val q = post.over(stream).writeStream
+          .option("checkpointLocation", ck)
+          .trigger(Trigger.AvailableNow())
+          .foreachBatch((df: DataFrame, _: Long) => sink.process(df.queryExecution.toRdd))
+          .start()
+        q.awaitTermination()
+        q
+      } finally post.release()
+    }
+    writeLines(in, "a.log", records.take(10) :+ "malformed a")
+    writeLines(in, "b.log", records.slice(10, 20))
+    val before = drainInStream()
+    // replays of records delivered before the restart, a new malformed
+    // line and fresh records
+    writeLines(in, "c.log", Seq(records(1), records(15), "malformed c") ++ records.drop(20))
+    val after = Forwarder.start(spark, conf, new FileDelivery(out))
+    after.awaitTermination()
+    assert(after.recentProgress.head.batchId == before.lastProgress.batchId + 1,
+      s"batch ids: ${before.recentProgress.map(_.batchId).toSeq} then " +
+        s"${after.recentProgress.map(_.batchId).toSeq}")
+
+    val delivered = Files.walk(Paths.get(out, "main")).iterator().asScala
+      .filter(_.toString.endsWith(".ndjson"))
+      .flatMap(f => Files.readAllLines(f).asScala.iterator).toSeq
+    val (bad, good) = delivered.partition(_.contains("\"rawlog\":\"malformed"))
+    assert(bad.count(_.contains("malformed a")) == 1 && bad.count(_.contains("malformed c")) == 1 &&
+      bad.size == 2, s"malformed lines: $bad")
+    assert(good.size == 25, s"${good.size} records delivered, 25 expected")
+    for (i <- 0 until 25)
+      assert(good.count(_.contains(s"\"host-$i\"")) == 1, s"host-$i")
   }
 
   test("rateSpikes: hand moments, k sensitivity, zero-variance series never flags") {
